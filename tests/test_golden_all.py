@@ -14,6 +14,7 @@ Each topology stresses a different operator set:
 
 
 from webcrawl_spark.fixtures import gen
+from webcrawl_spark.plans import round as round_plan
 
 from .golden import run_and_check
 
@@ -220,3 +221,20 @@ def test_max_queued_links_golden(spark, tmp_path):
         "chain_cap", fx.pages, fx.seeds, fx.config.with_(max_queued_links=2)
     )
     run_and_check(spark, fx, tmp_path)
+
+
+def test_two_phase_seq_golden(spark, tmp_path, monkeypatch):
+    """Every round above the small-round threshold: fetch_seq and seq come
+    from the range-partitioned two-phase numbering (operators/seq.py), not
+    the lazy single-partition window — the same golden trace."""
+    numbered = []
+    real = round_plan.assign_global_seq
+
+    def spy(*args, **kwargs):
+        numbered.append(kwargs["out_col"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(round_plan, "SMALL_ROUND_THRESHOLD", 0)
+    monkeypatch.setattr(round_plan, "assign_global_seq", spy)
+    run_and_check(spark, gen.tree(branching=2, depth=3), tmp_path)
+    assert {"fetch_seq", "seq"} <= set(numbered)

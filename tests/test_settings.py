@@ -55,7 +55,6 @@ def test_roundtrip_every_knob(tmp_path):
         bloom_enabled=False,
         bloom_min_seen=5,
         bloom_bits=1 << 10,
-        small_round_threshold=10,
         robots_enabled=False,
         reliable_checkpoints=True,
     )
@@ -80,10 +79,11 @@ def test_newer_version_refused(tmp_path):
 
 
 def test_older_file_gets_defaults_and_ignores_unknown(tmp_path):
-    # a file from an older build: missing newer fields, carrying a removed one
+    # a file from an older build: missing newer fields, carrying removed ones
     p = str(tmp_path / "settings.json")
     with open(p, "w") as f:
-        json.dump({"version": 0, "depth_limit": 2, "retired_knob": 99}, f)
+        json.dump({"version": 0, "depth_limit": 2, "retired_knob": 99,
+                   "small_round_threshold": 10, "bloom_fpp": 0.01}, f)
     cfg = load_settings(p)
     assert cfg.depth_limit == 2
     assert cfg.max_retries == CrawlConfig().max_retries

@@ -17,9 +17,12 @@ Results are recorded in BENCH/BASELINE.md.
 
 import json
 import os
+import shutil
 import signal
 import subprocess
 import sys
+import tempfile
+import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -30,7 +33,7 @@ _CHILD = r"""
 import hashlib, json, os, sys, tempfile, shutil
 from pyspark.sql import SparkSession
 
-sf_dir, mult, tag = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+sf_dir, mult, tag, state = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
 spark = (SparkSession.builder.master("spark://127.0.0.1:7077")
          .appName("fault-" + tag)
          .config("spark.executor.cores", "2")
@@ -69,7 +72,6 @@ cfg = SW.crawl_config(
     bloom_bits=1 << 22,
     reliable_checkpoints=True,
 )
-state = tempfile.mkdtemp(prefix="fault_state_")
 try:
     c = SparkCrawler(spark, pages, SW.seed_urls(64, n_hosts), state, cfg)
     m = c.run()
@@ -82,7 +84,6 @@ try:
         {"urls": m.next_fetch_seq, "rounds": m.next_round, "trace_sha": h}
     ), flush=True)
 finally:
-    shutil.rmtree(state, ignore_errors=True)
     shutil.rmtree(pdir, ignore_errors=True)
 """
 
@@ -111,29 +112,39 @@ def _kill_tree(pid):
 
 
 def _run_crawl(tag, kill_worker=None, kill_after_round=2):
-    """Run the crawl child; optionally kill a worker once round k is seen."""
+    """Run the crawl child; optionally kill a worker once the crawl's state
+    dir holds the manifest of round k (round k-1 committed, k underway)."""
     script = "/tmp/fault_child.py"
     with open(script, "w") as f:
         f.write(_CHILD)
-    env = dict(os.environ, FAULT_REPO=REPO, WC_ROUND_TIMING="1")
+    state = tempfile.mkdtemp(prefix="fault_state_")
     p = subprocess.Popen(
-        [sys.executable, "-u", script, SF_DIR, str(MULT), tag],
-        cwd=REPO, env=env, stdout=subprocess.PIPE,
-        stderr=subprocess.STDOUT, text=True,
+        [sys.executable, "-u", script, SF_DIR, str(MULT), tag, state],
+        cwd=REPO, env=dict(os.environ, FAULT_REPO=REPO),
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
     )
-    result, killed = None, False
-    marker = f"[r{kill_after_round}]"
+    killed = threading.Event()
+    manifest = os.path.join(state, "_manifests", f"round-{kill_after_round}.json")
+
+    def watch():
+        while p.poll() is None:
+            if os.path.exists(manifest):
+                print(f"  >> round {kill_after_round} reached — SIGKILLing "
+                      f"worker {kill_worker.pid} and its executors", flush=True)
+                _kill_tree(kill_worker.pid)
+                killed.set()
+                return
+            time.sleep(0.2)
+
+    if kill_worker is not None:
+        threading.Thread(target=watch, daemon=True).start()
+    result = None
     for line in p.stdout:
-        line = line.rstrip()
         if line.startswith("RESULT "):
             result = json.loads(line[7:])
-        if kill_worker is not None and not killed and marker in line:
-            print(f"  >> round {kill_after_round} reached — SIGKILLing "
-                  f"worker {kill_worker.pid} and its executors", flush=True)
-            _kill_tree(kill_worker.pid)
-            killed = True
     rc = p.wait(timeout=3600)
-    return result, rc, killed
+    shutil.rmtree(state, ignore_errors=True)
+    return result, rc, killed.is_set()
 
 
 def main():

@@ -77,12 +77,6 @@ class CrawlConfig:
     bloom_bits: int = 1 << 17        # bits per host-hash partition; size so
                                      # total bits ≈ 10-15× expected seen keys
                                      # (cluster: 1<<30+ per partition sidecar)
-    small_round_threshold: int = 200_000  # below this frontier size, global
-                                     # sequence numbering uses a lazy single-
-                                     # partition window (zero extra jobs);
-                                     # above it, the range-partitioned
-                                     # two-phase numbering in operators/seq.py
-    bloom_fpp: float = 0.01
     robots_enabled: bool = True
     rank_priority: bool = False      # weight discovered links by a ranks
                                      # table (url -> rank, e.g. link_pagerank):

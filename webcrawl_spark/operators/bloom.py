@@ -44,7 +44,6 @@ import numpy as np
 import pandas as pd
 
 K_PROBES = 4
-DEFAULT_BITS = 1 << 17
 
 _HK1 = "wcspark-bloom-k1"  # 16 bytes each — fixed => deterministic
 _HK2 = "wcspark-bloom-k2"
@@ -122,6 +121,16 @@ def _load_part(d: str | None, p: int) -> np.ndarray | None:
     return np.load(path)
 
 
+def _or_into_part(src_dir: str | None, out_dir: str, p: int,
+                  hosts: pd.Series, url_keys: pd.Series, bits: int) -> None:
+    """Partition ``p``'s bitset from ``src_dir`` (zeros if absent) with the
+    keys' bits ORed in, saved atomically to ``out_dir``."""
+    prev = _load_part(src_dir, p)
+    arr = prev.copy() if prev is not None else np.zeros(bits // 8, dtype=np.uint8)
+    set_bits(arr, hosts, url_keys, bits)
+    _atomic_save(_part_path(out_dir, p), arr)
+
+
 # ---------------------------------------------------------------------------
 # executor-side stages
 # ---------------------------------------------------------------------------
@@ -133,10 +142,7 @@ def make_update_fn(prev_dir: str | None, out_dir: str, bits: int):
 
     def update(pdf: pd.DataFrame) -> pd.DataFrame:
         p = int(pdf["host_hash"].iloc[0])
-        prev = _load_part(prev_dir, p)
-        arr = prev.copy() if prev is not None else np.zeros(bits // 8, dtype=np.uint8)
-        set_bits(arr, pdf["host"], pdf["url_key"], bits)
-        _atomic_save(_part_path(out_dir, p), arr)
+        _or_into_part(prev_dir, out_dir, p, pdf["host"], pdf["url_key"], bits)
         return pd.DataFrame({"host_hash": [p], "n_added": [len(pdf)]})
 
     return update
@@ -234,11 +240,8 @@ def add_key_inplace(d: str, host: str, url_key: str, host_hash: int,
     atomic replace: hard-linked copies of the old file in other round dirs
     keep their inode and stay untouched. The _COMPLETE marker's mtime is
     then bumped — the generation stamp that invalidates worker caches."""
-    p = int(host_hash)
-    prev = _load_part(d, p)
-    arr = prev.copy() if prev is not None else np.zeros(bits // 8, dtype=np.uint8)
-    set_bits(arr, pd.Series([host]), pd.Series([url_key]), bits)
-    _atomic_save(_part_path(d, p), arr)
+    _or_into_part(d, d, int(host_hash), pd.Series([host]), pd.Series([url_key]),
+                  bits)
     os.utime(_marker(d))
 
 
@@ -257,66 +260,3 @@ def gc_sidecars(state_root: str, keep_from_round: int) -> None:
                 continue
             if k < keep_from_round:
                 shutil.rmtree(os.path.join(broot, name), ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# small in-memory form (unit tests / ad-hoc use)
-# ---------------------------------------------------------------------------
-
-class SeenBloom:
-    """In-memory partitioned bitset (partition = h1 % n_partitions). The
-    production path is the file sidecar above; this compact form backs the
-    hashing/bit-math unit tests and small ad-hoc filters."""
-
-    def __init__(self, n_partitions: int, bits: int = DEFAULT_BITS):
-        self.n = n_partitions
-        self.m = bits
-        self.parts = {
-            p: np.zeros(bits // 8, dtype=np.uint8) for p in range(n_partitions)
-        }
-
-    def add_frame(self, pdf: pd.DataFrame) -> None:
-        if len(pdf) == 0:
-            return
-        h1, _ = _hashes(pdf["host"], pdf["url_key"])
-        pids = (h1 % np.uint64(self.n)).astype(np.int64)
-        for p in np.unique(pids):
-            mask = pids == p
-            set_bits(self.parts[int(p)], pdf["host"][mask], pdf["url_key"][mask], self.m)
-
-    def snapshot(self) -> dict:
-        return {"m": self.m, "n": self.n,
-                "parts": {p: a.tobytes() for p, a in self.parts.items()}}
-
-    @staticmethod
-    def contains_batch(snapshot: dict, hosts: pd.Series,
-                       url_keys: pd.Series) -> pd.Series:
-        if len(hosts) == 0:
-            return pd.Series([], dtype=bool, index=hosts.index)
-        m = int(snapshot["m"])
-        n = np.uint64(snapshot["n"])
-        views = {
-            p: np.frombuffer(b, dtype=np.uint8)
-            for p, b in snapshot["parts"].items()
-        }
-        h1, _ = _hashes(hosts, url_keys)
-        pids = (h1 % n).astype(np.int64)
-        out = np.ones(len(hosts), dtype=bool)
-        for p in np.unique(pids):
-            mask = pids == p
-            out[mask] = test_bits(views[int(p)], hosts[mask], url_keys[mask], m)
-        return pd.Series(out, index=hosts.index)
-
-    def save(self, path: str) -> None:
-        np.savez_compressed(
-            path, m=self.m, n=self.n,
-            **{f"p{p}": a for p, a in self.parts.items()},
-        )
-
-    @classmethod
-    def load(cls, path: str) -> "SeenBloom":
-        z = np.load(path)
-        bl = cls(int(z["n"]), int(z["m"]))
-        for p in range(bl.n):
-            bl.parts[p] = z[f"p{p}"].copy()
-        return bl

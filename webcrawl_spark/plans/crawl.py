@@ -16,6 +16,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 from ..config import CrawlConfig
@@ -29,6 +30,14 @@ from .round import FRONTIER_COLS, RoundContext, host_hash_col, run_round
 from .state import CrawlState, Manifest
 
 _EMPTY_ROBOTS = pd.DataFrame(columns=["host", "path_prefix", "allow", "crawl_delay"])
+
+
+def _join_quietly(jobs: list) -> None:
+    """Settle background commits on an error path without raising their
+    own errors (``join``, not ``wait``) — the error in flight is the one
+    to propagate."""
+    for j in jobs:
+        j.join()
 
 
 class SparkCrawler:
@@ -98,10 +107,10 @@ class SparkCrawler:
         )
 
     # ------------------------------------------------------------------
-    def _canon_seeds(self) -> pd.DataFrame:
+    def _canonicalize(self, urls: list) -> pd.DataFrame:
         cfg = self.cfg
         return canonicalize(
-            pd.Series(self.seeds, dtype="object"),
+            pd.Series(urls, dtype="object"),
             strip_www=cfg.strip_www,
             normalize_query=cfg.normalize_query,
             case_sensitive_paths=cfg.case_sensitive_paths,
@@ -112,7 +121,7 @@ class SparkCrawler:
         pure function of (seeds, config) so resume recomputes it exactly."""
         if not self.seeds:
             return []
-        c = self._canon_seeds()
+        c = self._canonicalize(self.seeds)
         return [
             {"scheme": r.scheme, "host": r.host, "path": r.path}
             for r in c.itertuples()
@@ -141,21 +150,15 @@ class SparkCrawler:
         return (r.url, r.url_key, r.host, r.path, r.query, 0, None, "link",
                 False, prio, seq, 0, 0, post_data)
 
-    _FRONTIER_DDL = {
-        "url": "url string", "url_key": "url_key string",
-        "host": "host string", "path": "path string",
-        "query": "query string", "depth": "depth int",
-        "referrer": "referrer string", "link_type": "link_type string",
-        "is_external": "is_external boolean", "priority": "priority int",
-        "seq": "seq long", "failures": "failures int",
-        "round": "round int", "post_data": "post_data string",
-    }
-
     def _frontier_df(self, rows: list):
-        cols = [f for f in FRONTIER_COLS if f != "host_hash"]
+        fields = [
+            T.StructField(f.name, f.dataType)
+            for f in schemas.FRONTIER.fields if f.name != "host_hash"
+        ]
+        cols = [f.name for f in fields]
         return self.spark.createDataFrame(
             pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols),
-            schema=", ".join(self._FRONTIER_DDL[f] for f in cols),
+            schema=T.StructType(fields),
         ).withColumn(
             "host_hash", host_hash_col(self.cfg.num_partitions)
         ).select(*FRONTIER_COLS)
@@ -165,7 +168,7 @@ class SparkCrawler:
         (driver-side: seeds are tiny by definition; all per-row logic still
         runs the shared kernels)."""
         cfg = self.cfg
-        c = self._canon_seeds()
+        c = self._canonicalize(self.seeds)
         seen_keys: set = set()
         rows = []
         seq = 0
@@ -182,12 +185,7 @@ class SparkCrawler:
         # BYPASSED, so a url both seeded and POSTed is fetched twice;
         # post_data is not part of the identity key (MakeKey, 2618-2625).
         for url, post_data in cfg.post_seeds:
-            r = canonicalize(
-                pd.Series([url], dtype="object"),
-                strip_www=cfg.strip_www,
-                normalize_query=cfg.normalize_query,
-                case_sensitive_paths=cfg.case_sensitive_paths,
-            ).iloc[0]
+            r = self._canonicalize([url]).iloc[0]
             if not self._seed_allowed(r):
                 continue
             seen_keys.add((r.host, r.url_key))
@@ -250,7 +248,8 @@ class SparkCrawler:
         m = self.state.latest_manifest()
         if m is None:
             m = self._init_seeds()
-        self._bloom_dir = self._ensure_sidecar(m) if self.cfg.bloom_enabled else None
+        if self.cfg.bloom_enabled:
+            self._ensure_sidecar(m)
         rounds_done = 0
         # carry = the previous round's in-flight state: its background
         # commits (still running — they overlap the next round's compute),
@@ -282,67 +281,31 @@ class SparkCrawler:
             # success-only, in _drain): the uncommitted round replays
             # identically on resume, which the fault probes verify.
             if carry is not None:
-                for j in carry["stats"].jobs:
-                    try:
-                        j.join()
-                    except Exception:
-                        pass
+                _join_quietly(carry["stats"].jobs)
 
     def _drain(self, carry) -> None:
         """Wait for a round's background commits, then make it visible."""
         for j in carry["stats"].jobs:
             j.wait()
         self.state.commit(carry["manifest"])
-        if self._bloom_dir is not None:
+        if self.cfg.bloom_enabled:
             B.gc_sidecars(self.state.root, carry["manifest"].next_round)
 
-    def _ensure_sidecar(self, m: Manifest) -> str:
-        """Path to the resume round's complete sidecar dir; if missing or
-        incomplete (sidecar loss), rebuild it from the committed seen table
-        — a DISTRIBUTED job over the seen partitions, never a driver-side
-        materialization of the seen set."""
+    def _ensure_sidecar(self, m: Manifest) -> None:
+        """Make sure the resume round's sidecar dir is complete; if missing
+        or incomplete (sidecar loss), rebuild it from the committed seen
+        table — a DISTRIBUTED job over the seen partitions, never a
+        driver-side materialization of the seen set. Later rounds' sidecars
+        are built inside run_round."""
         d = B.sidecar_dir(self.state.root, m.next_round)
         if not B.is_complete(d):
             B.build_sidecar(
                 self.state.read_seen(m.next_round), None, d, self.cfg.bloom_bits
             )
-        return d
 
     def _run_one(self, m: Manifest, carry):
-        import os as _os
-        import time as _time
-
-        _dbg = _os.environ.get("WC_ROUND_TIMING")
-        _t = [_time.time()]
-
-        def _mk(label):
-            if _dbg:
-                now = _time.time()
-                print(f"    [r{m.next_round}] {label}: {now - _t[0]:.2f}s", flush=True)
-                _t[0] = now
-
         k = m.next_round
         st = self.state
-        self.ctx.bloom_dir = self._bloom_dir
-        bloom_cb = None
-        bloom_wait = None
-        if self._bloom_dir is not None:
-            # executor-side delta update: the round's seen delta (served from
-            # the round's acc checkpoint, host_hash attached) ORs into
-            # per-partition bitset files; untouched partitions carry forward
-            # as hard links. The driver moves file metadata only — never keys.
-            # Passed as a callback so run_round overlaps it with the next
-            # round's compute (the next round waits on it only right before
-            # its check stage fires).
-            prev_dir = self._bloom_dir
-            nd = B.sidecar_dir(st.root, k + 1)
-
-            def bloom_cb(keys_df):
-                B.build_sidecar(keys_df, prev_dir, nd, self.cfg.bloom_bits)
-
-            if carry is not None and carry["stats"].bloom_job is not None:
-                bloom_wait = carry["stats"].bloom_job.wait
-
         if carry is None:
             # first round of this run(): state comes from the committed tables
             frontier = st.read_frontier(k)
@@ -374,19 +337,14 @@ class SparkCrawler:
             # post-requeue-removal state) fall back to next_seq, which can
             # only overstate (force-enqueues reuse seen keys)
             seen_rows=m.seen_rows if m.seen_rows is not None else m.next_seq,
-            bloom_update=bloom_cb,
-            bloom_wait=bloom_wait,
+            bloom_job=None if carry is None else carry["stats"].bloom_job,
         )
         try:
-            if bloom_cb is not None:
-                self._bloom_dir = nd
-            _mk("run_round_total")
             # the PREVIOUS round's background commits have now fully
             # overlapped this round's compute — settle them and make that
             # round visible
             if carry is not None:
                 self._drain(carry)
-                _mk("prev_round_commit")
             nm = Manifest(
                 next_round=k + 1,
                 next_seq=stats.next_seq,
@@ -408,11 +366,7 @@ class SparkCrawler:
             # are not yet in any carry the caller could settle — join them
             # here so a failed drain of the previous round can't orphan them
             # (their manifest is never committed, so the round replays).
-            for j in stats.jobs:
-                try:
-                    j.join()
-                except Exception:
-                    pass
+            _join_quietly(stats.jobs)
             raise
 
     # ---------------- result accessors ----------------
@@ -455,6 +409,19 @@ class SparkCrawler:
         rows = [tuple(c) for m in self.state.manifests() for c in m.counters]
         return self.spark.createDataFrame(rows, schemas.COUNTERS)
 
+    # ---------------- frontier surgery between runs ----------------
+    def enqueue_uri(self, url: str, post_data=None, force: bool = True) -> bool:
+        return _enqueue_uri(self, url, post_data, force)
+
+    def remove_uris(self, pattern: str, allow_requeue: bool = True) -> int:
+        return _frontier_removal(self, pattern, allow_requeue)
+
+    def clear_uris(self) -> int:
+        """ClearUris (Crawler.cs:845-851, Service.Clear 2255-2271): drop the
+        whole frontier; the cleared keys remain marked seen
+        (``queued[key] = null`` at Crawler.cs:2268) and never re-enqueue."""
+        return _frontier_removal(self, ".*", allow_requeue=False)
+
 
 def _enqueue_uri(crawler: "SparkCrawler", url: str, post_data=None,
                  force: bool = True) -> bool:
@@ -467,12 +434,7 @@ def _enqueue_uri(crawler: "SparkCrawler", url: str, post_data=None,
     m = crawler._m()
     k = m.next_round
     cfg = crawler.cfg
-    r = canonicalize(
-        pd.Series([url], dtype="object"),
-        strip_www=cfg.strip_www,
-        normalize_query=cfg.normalize_query,
-        case_sensitive_paths=cfg.case_sensitive_paths,
-    ).iloc[0]
+    r = crawler._canonicalize([url]).iloc[0]
     if not crawler._seed_allowed(r):
         return False
     seen_new = (
@@ -580,19 +542,3 @@ def _frontier_removal(crawler: "SparkCrawler", pattern: str, allow_requeue: bool
         seen_rows=None if allow_requeue else m.seen_rows,
     ))
     return n_removed
-
-
-def _clear_uris(crawler: "SparkCrawler") -> int:
-    """ClearUris (Crawler.cs:845-851, Service.Clear 2255-2271): drop the
-    whole frontier; the cleared keys remain marked seen
-    (``queued[key] = null`` at Crawler.cs:2268) and never re-enqueue."""
-    return _frontier_removal(crawler, ".*", allow_requeue=False)
-
-
-SparkCrawler.remove_uris = lambda self, pattern, allow_requeue=True: _frontier_removal(
-    self, pattern, allow_requeue
-)
-SparkCrawler.clear_uris = lambda self: _clear_uris(self)
-SparkCrawler.enqueue_uri = lambda self, url, post_data=None, force=True: _enqueue_uri(
-    self, url, post_data, force
-)

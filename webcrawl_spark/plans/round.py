@@ -37,7 +37,7 @@ Physical-plan choices (the 100-TB story):
 - per-round stats ride a single aggregate over the checkpointed join plus
   write-side Observations — no standalone count jobs over big inputs.
 - sequence assignment is adaptive: below
-  ``cfg.small_round_threshold`` rows a lazy single-partition window embeds
+  ``SMALL_ROUND_THRESHOLD`` rows a lazy single-partition window embeds
   in downstream plans (zero extra jobs); above it, a range-partitioned
   two-phase numbering keeps every task bounded (``operators/seq.py``).
 - the seen anti-join keys on (host, url_key) — uniform hash keys, so a
@@ -47,8 +47,6 @@ Physical-plan choices (the 100-TB story):
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark import InheritableThread
@@ -63,6 +61,8 @@ from ..functions.crawl_udfs import (
     make_parse_candidate_stage,
 )
 from ..kernels import robots as R
+from ..kernels.errors import FATAL_CODES
+from ..operators import bloom as B
 from ..operators.ckpt import cut
 from ..operators.seq import assign_global_seq
 
@@ -71,6 +71,12 @@ FRONTIER_COLS = [
     "referrer", "link_type", "is_external", "priority", "seq", "failures",
     "round", "post_data",
 ]
+
+# below this many rows, global sequence numbering uses a lazy single-
+# partition window (zero extra jobs); above it, the range-partitioned
+# two-phase numbering in operators/seq.py
+SMALL_ROUND_THRESHOLD = 200_000
+
 
 def host_hash_col(P: int):
     """Deterministic host-hash partition id (shared by all state tables)."""
@@ -84,7 +90,6 @@ class RoundContext:
     uri_filters: tuple
     rule_index_bc: object = None     # spark broadcast of robots rule index
     delays: dict = field(default_factory=dict)  # host -> crawl_delay seconds
-    bloom_dir: str = None            # complete sidecar dir for this round
     ranks: DataFrame = None          # (url, rank) priority weights — consumed
                                      # only when cfg.rank_priority is set
 
@@ -96,10 +101,6 @@ class RoundStats:
     frontier_rows: int
     counters: list
     n_new: int = 0                # seen keys added this round
-    seen_keys: DataFrame = None   # (host, host_hash, url_key) of this round's
-                                  # seen delta, backed by the acc checkpoint —
-                                  # the Bloom sidecar update reads this instead
-                                  # of re-scanning the written delta
     jobs: list = field(default_factory=list)  # in-flight background commits
                                   # (seen delta, frontier, Bloom sidecar);
                                   # the caller waits for them BEFORE
@@ -114,9 +115,9 @@ class RoundStats:
                                      # persists) — the next round's anti-join
                                      # unions this instead of re-reading
                                      # parquet
-    bloom_job: object = None         # the Bloom-sidecar member of ``jobs``:
-                                     # the next round waits on it before any
-                                     # action triggers its check stage
+    bloom_job: object = None         # the Bloom-sidecar member of ``jobs``
+                                     # (builds the next round's sidecar) —
+                                     # handed to the next run_round
 
 
 def _budget_col(ctx: RoundContext):
@@ -219,26 +220,20 @@ def run_round(
     next_seq: int,
     next_fetch_seq: int,
     frontier_rows: int,
-    seen_rows: int = None,
-    bloom_update=None,
-    bloom_wait=None,
+    seen_rows: int,
+    bloom_job=None,
 ) -> RoundStats:
+    """Run round ``rnd``. ``bloom_job`` is the previous round's sidecar
+    build (its ``RoundStats.bloom_job``; None on a run's first round, whose
+    sidecar is already complete). It writes this round's sidecar, so the
+    round waits on it before reading that sidecar in any way."""
     cfg = ctx.cfg
     P = cfg.num_partitions
-    small = frontier_rows <= cfg.small_round_threshold
+    small = frontier_rows <= SMALL_ROUND_THRESHOLD
     counters: list = []
     # seen feeds both the dedup anti-join and the derived query-string
     # counts — persist so the (large, growing) union scan happens once
     seen = seen.persist()
-    _debug = os.environ.get("WC_ROUND_TIMING")
-    _t0 = time.time()
-
-    def _mark(label):
-        nonlocal _t0
-        if _debug:
-            now = time.time()
-            print(f"    [r{rnd}] {label}: {now - _t0:.2f}s", flush=True)
-            _t0 = now
 
     # ---------------- 1. SELECT (politeness + budgets) ----------------
     sel = select_polite(
@@ -264,8 +259,6 @@ def run_round(
     # error routing all share a SINGLE checkpoint — and since html is
     # dropped inside the stage, the materialized cut is lighter than the
     # raw join it replaces.
-    from ..kernels.errors import FATAL_CODES
-
     pg = pages.withColumn("__present", F.lit(True))
     present0 = F.col("__present").isNotNull()
     status0 = F.coalesce(F.col("http_status"), F.lit(200))
@@ -310,7 +303,6 @@ def run_round(
         .mapInPandas(make_decode_stage(cfg, ctx.base_uris_bc), DECODE_SCHEMA)
     )
     dec = cut(dec, cfg.reliable_checkpoints)
-    _mark("fetch_decode_ckpt")
 
     # routing (fatal taxonomy; IsFatalError Crawler.cs:2121-2164 + redirect
     # outcomes Crawler.cs:635-647, 1585-1597):
@@ -326,86 +318,46 @@ def run_round(
     # ``ok`` false + reachable + non-fatal status ⟺ the old
     # "status 200 with NULL html, or retryable status" condition — html
     # itself is gone from the checkpoint, the flag stands in for it.
+    # ONE projection over the decode cut classifies every selected row:
+    # fetch_log is its fetch-log columns, the retry rows re-enter the
+    # frontier from it, and the failure count is +1 for every fetch error.
     present = F.col("present")
     status_c = F.col("http_status")
+    ok = F.col("ok")
+    good = ok & F.col("reject").isNull()
     c_exceeded = present & F.col("exceeded")
     c_dead = present & ~F.col("exceeded") & ~F.col("final_present")
     reachable = present & ~F.col("exceeded") & F.col("final_present")
-    c_fatal_status = (
-        reachable & (status_c != 200) & status_c.isin(list(FATAL_CODES))
-    )
-    retry = (
-        dec.filter(
-            ~F.col("ok") & reachable & ~status_c.isin(list(FATAL_CODES))
-        )
-        .withColumn("__nf", (F.col("failures") + 1).cast("int"))
-        .filter(F.col("__nf") <= cfg.max_retries)
-    )
-
-    ok_rows = dec.filter(F.col("ok") & F.col("reject").isNull()).select(
+    fatal_code = status_c.isin(list(FATAL_CODES))
+    c_fatal_status = reachable & (status_c != 200) & fatal_code
+    nf = F.col("failures") + 1
+    retryable = ~ok & reachable & ~fatal_code & (nf <= cfg.max_retries)
+    routed = dec.withColumns({
+        "status": F.when(good, F.lit("ok"))
+        .when(ok, F.col("reject"))
+        .when(~present | c_dead, F.lit("http_404"))
+        .when(c_exceeded, F.lit("too_many_redirects"))
+        .when(c_fatal_status, F.concat(F.lit("http_"), status_c.cast("string")))
+        .when(retryable, F.lit("retryable"))
+        .otherwise(F.lit("retries_exhausted")),
+        "fatal": ~good & ~retryable,
+        "failures": F.when(ok, F.col("failures")).otherwise(nf).cast("int"),
+        "http_status": F.when(~present | c_dead, 404)
+        .when(good, 200)
+        .when(c_fatal_status, status_c)
+        .otherwise(0).cast("int"),
+    })
+    # per-round fetch stats ride the write as Observations — no standalone
+    # aggregate job (every selected row lands in fetch_log exactly once).
+    # The decode stage already NULLs mime/charset/bytes/text off the good rows.
+    obs_f = Observation(f"fetch_r{rnd}")
+    fetch_log = routed.select(
         "url", "url_key", "host",
         F.lit(rnd).cast("int").alias("round"),
-        "fetch_seq", "depth", "link_type",
-        F.lit(200).alias("http_status"),
+        "fetch_seq", "depth", "link_type", "http_status",
         "mime", "charset", "bytes",
         F.col("text").alias("extracted_text"),
-        "final_url",
-        F.lit("ok").alias("status"),
-        F.col("failures").cast("int").alias("failures"),
-        F.lit(False).alias("fatal"),
-    )
-
-    # ALL error classes fed by the fetch join collapse into ONE branch with
-    # CASE routing (a single scan of the shared checkpoint — a 6-way union
-    # here re-read it per branch). failures is failures+1 for every
-    # joined-side error.
-    nf = (F.col("failures") + 1).cast("int")
-    retryable_cond = (
-        reachable
-        & ~status_c.isin(list(FATAL_CODES))
-        & (nf <= cfg.max_retries)
-    )
-    err_j = dec.filter(~F.col("ok")).select(
-        "url", "url_key", "host",
-        F.lit(rnd).cast("int").alias("round"),
-        "fetch_seq", "depth", "link_type",
-        F.when(~present | c_dead, 404)
-         .when(c_fatal_status, status_c)
-         .otherwise(0).cast("int").alias("http_status"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("string").alias("charset"),
-        F.lit(None).cast("long").alias("bytes"),
-        F.lit(None).cast("string").alias("extracted_text"),
-        "final_url",
-        F.when(~present | c_dead, F.lit("http_404"))
-         .when(c_exceeded, F.lit("too_many_redirects"))
-         .when(c_fatal_status, F.concat(F.lit("http_"), status_c.cast("string")))
-         .when(retryable_cond, F.lit("retryable"))
-         .otherwise(F.lit("retries_exhausted")).alias("status"),
-        nf.alias("failures"),
-        (~retryable_cond).alias("fatal"),
-    )
-    scope_reject_rows = dec.filter(
-        F.col("ok") & F.col("reject").isNotNull()
-    ).select(
-        "url", "url_key", "host",
-        F.lit(rnd).cast("int").alias("round"),
-        "fetch_seq", "depth", "link_type",
-        F.lit(0).alias("http_status"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("string").alias("charset"),
-        F.lit(None).cast("long").alias("bytes"),
-        F.lit(None).cast("string").alias("extracted_text"),
-        "final_url",
-        F.col("reject").alias("status"),
-        F.col("failures").cast("int").alias("failures"),
-        F.lit(True).alias("fatal"),
-    )
-    # per-round fetch stats ride the write as Observations — no standalone
-    # aggregate job (every selected row lands in fetch_log exactly once)
-    obs_f = Observation(f"fetch_r{rnd}")
-    fetch_log = (
-        ok_rows.unionByName(err_j).unionByName(scope_reject_rows)
+        "final_url", "status", "failures", "fatal",
     ).observe(
         obs_f,
         F.count(F.lit(1)).alias("n_sel"),
@@ -417,7 +369,7 @@ def run_round(
     # (which reads the same decode checkpoint) overlaps it
     fl_job = _Job(lambda: state.write_table("fetch_log", rnd, fetch_log))
 
-    retry_rows = retry.withColumn("failures", F.col("__nf")).select(*FRONTIER_COLS)
+    retry_rows = routed.filter(F.col("status") == "retryable").select(*FRONTIER_COLS)
 
     # ---------------- 4. PARSE → candidates --------------------------
     cand = (
@@ -446,8 +398,7 @@ def run_round(
     cand = cand.observe(obs_c, F.count(F.lit(1)).alias("n"))
     cand = cut(cand, cfg.reliable_checkpoints)
     cand_count = cand.count() if cfg.reliable_checkpoints else obs_c.get["n"]
-    small_acc = cand_count <= cfg.small_round_threshold
-    _mark("parse_ckpt")
+    small_acc = cand_count <= SMALL_ROUND_THRESHOLD
 
     # the fetch_log write has been overlapping the parse stage; its
     # Observation (needed for the carried anti-join's broadcast gate and the
@@ -468,7 +419,6 @@ def run_round(
         (rnd, "fetch", "errors", n_selected - n_good - n_retry),
     ]
     n_carried = frontier_rows - n_selected + n_retry
-    _mark("fetch_log_join")
 
     # 5a. min-depth merge into carried entries (still-queued rediscoveries,
     #     Crawler.cs:2303-2307). Carried keys ⊆ seen, so joining all
@@ -511,22 +461,18 @@ def run_round(
     #     shuffle. The two consumers of the flagged frame share the
     #     repartition exchange (ReusedExchange).
     bloom_flagged = None
-    use_bloom = ctx.bloom_dir is not None and (
-        seen_rows is None or seen_rows >= cfg.bloom_min_seen
-    )
+    sidecar = B.sidecar_dir(state.root, rnd)
+    use_bloom = cfg.bloom_enabled and seen_rows >= cfg.bloom_min_seen
     if use_bloom:
-        from ..operators import bloom as B
-
-        if bloom_wait is not None:
-            # the sidecar for THIS round was built as a background job at
-            # the end of the previous round — it must be on disk before any
-            # action triggers the check stage below
-            bloom_wait()
+        if bloom_job is not None:
+            # the previous round's build writes THIS round's sidecar — it
+            # must be on disk before any action triggers the check stage
+            bloom_job.wait()
         flagged = (
             cand.withColumn("__hh", host_hash_col(P))
             .repartition(P, "__hh")
             .mapInPandas(
-                B.make_check_stage(ctx.bloom_dir, cfg.bloom_bits),
+                B.make_check_stage(sidecar, cfg.bloom_bits),
                 CANDIDATE_SCHEMA + ", __hh int, maybe_seen boolean",
             )
             .persist()  # two consumers below — run the check stage once
@@ -639,7 +585,6 @@ def run_round(
     if bloom_flagged is not None:
         bloom_flagged.unpersist()
     seen.unpersist()
-    _mark("acc_ckpt")
 
     seen_delta = acc.select(
         "host",
@@ -665,37 +610,36 @@ def run_round(
         # (Crawler.cs:1475-1484) is honored structurally.
         F.lit(None).cast("string").alias("post_data"),
     )
-    seen_keys = acc.select("host", host_hash_col(P).alias("host_hash"), "url_key")
-
     # the NEXT round's frontier: union of the two cuts above — (a) the next
     # round consumes in-memory materializations instead of reading the
     # written parquet back, and (b) the anti-join/union lineage never chains
     # across rounds (every input is itself a checkpoint from this round)
     carried_job.wait()
     next_frontier = carried_slot["df"].unionByName(new_entries)
-    _mark("carried_join")
 
     # the remaining commits (seen delta, frontier snapshot, Bloom sidecar)
     # all read only checkpointed inputs and write independent directories —
     # they launch here and OVERLAP the next round's compute; the caller
     # waits for them before committing this round's manifest (the per-round
     # serial-action floor is what caps scaling efficiency at small rounds).
+    # The sidecar update is executor-side: the seen delta ORs into
+    # per-partition bitset files and untouched partitions carry forward as
+    # hard links from THIS round's sidecar — so that sidecar's build must
+    # have settled (it has had the whole round to; the check stage above
+    # already waited on it when it ran).
+    if bloom_job is not None:
+        bloom_job.wait()
     jobs = [
         _Job(lambda: state.write_table("seen", rnd + 1, seen_delta)),
         _Job(lambda: state.write_table("frontier", rnd + 1, next_frontier)),
     ]
-    bloom_job = None
-    if bloom_update is not None:
-        # the previous round's sidecar build (this build's hard-link source)
-        # may still be in flight when the check stage never fired this round
-        # (below bloom_min_seen) — chain on it inside the background job
-        def _bloom_run():
-            if bloom_wait is not None:
-                bloom_wait()
-            bloom_update(seen_keys)
-
-        bloom_job = _Job(_bloom_run)
-        jobs.append(bloom_job)
+    next_bloom_job = None
+    if cfg.bloom_enabled:
+        next_sidecar = B.sidecar_dir(state.root, rnd + 1)
+        next_bloom_job = _Job(lambda: B.build_sidecar(
+            seen_delta, sidecar, next_sidecar, cfg.bloom_bits
+        ))
+        jobs.append(next_bloom_job)
     next_seq += n_new
     counters.append((rnd, "enqueue", "new_links", n_new))
     frontier_rows_next = n_carried + n_new
@@ -707,9 +651,8 @@ def run_round(
         frontier_rows=frontier_rows_next,
         counters=counters,
         n_new=n_new,
-        seen_keys=seen_keys,
         jobs=jobs,
         next_frontier=next_frontier,
         seen_delta=seen_delta,
-        bloom_job=bloom_job,
+        bloom_job=next_bloom_job,
     )

@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 
-PQ_SCHEMA = "host string, path string, n long"
-
 
 @dataclass
 class Manifest:
@@ -82,6 +80,13 @@ class CrawlState:
         os.replace(tmp, path)
 
     # ---------------- resume ----------------
+    def _load_manifest(self, rnd: int) -> Manifest:
+        with open(self._manifest_path(rnd)) as f:
+            d = json.load(f)
+        d.setdefault("counters", [])
+        d.setdefault("seen_rows", None)
+        return Manifest(**d)
+
     def latest_manifest(self) -> Manifest | None:
         rx = re.compile(r"round-(\d+)\.json$")
         best = None
@@ -94,21 +99,13 @@ class CrawlState:
                     best = k
         if best is None:
             return None
-        with open(self._manifest_path(best)) as f:
-            d = json.load(f)
-        d.setdefault("counters", [])
-        d.setdefault("seen_rows", None)
-        return Manifest(**d)
+        return self._load_manifest(best)
 
     def manifests(self) -> list:
         out = []
         k = 0
         while os.path.exists(self._manifest_path(k)):
-            with open(self._manifest_path(k)) as f:
-                d = json.load(f)
-            d.setdefault("counters", [])
-            d.setdefault("seen_rows", None)
-            out.append(Manifest(**d))
+            out.append(self._load_manifest(k))
             k += 1
         return out
 
@@ -124,14 +121,6 @@ class CrawlState:
     def read_seen(self, upto_round: int) -> DataFrame:
         return self._read_delta(
             "seen", upto_round, schemas.SEEN, "first_round"
-        )
-
-    def read_pq(self, upto_round: int) -> DataFrame:
-        """(host, path) → distinct-query counts, derived from seen."""
-        return (
-            self.read_seen(upto_round)
-            .groupBy("host", "path")
-            .agg(F.count(F.lit(1)).alias("n"))
         )
 
     def read_fetch_log(self, upto_round: int) -> DataFrame:
@@ -205,25 +194,8 @@ class CrawlState:
         next compaction."""
         round_col = {"seen": "first_round", "fetch_log": "round"}[table]
         schema = {"seen": schemas.SEEN, "fetch_log": schemas.FETCH_LOG}[table]
-        info = self._compact_info(table)
-        gen = 0 if info is None else info[1] + 1
         merged = self._read_delta(table, upto_round, schema, round_col)
-        merged.write.mode("overwrite").parquet(self._compact_dir(table, gen))
-        tmp = self._compact_marker_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"upto": upto_round, "gen": gen}, f)
-        os.replace(tmp, self._compact_marker_path(table))
-        # best-effort cleanup of superseded storage
-        import shutil
-
-        if info is not None:
-            shutil.rmtree(
-                self._compact_dir(table, info[1]), ignore_errors=True
-            )
-        for k in range(upto_round + 1):
-            d = self._dir(table, k)
-            if os.path.exists(d):
-                shutil.rmtree(d, ignore_errors=True)
+        self.replace_table(table, upto_round, merged)
 
     def vacuum_frontier(self, live_round: int) -> int:
         """Delete frontier snapshots BEFORE ``live_round`` (each round's
