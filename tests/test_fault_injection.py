@@ -39,8 +39,6 @@ c = SparkCrawler(spark, pages, fx.seeds, state_dir,
 m = c.state.latest_manifest()
 if m is None:
     m = c._init_seeds()
-if c.cfg.bloom_enabled:
-    c._ensure_sidecar(m)
 carry = None
 for _ in range(n_rounds):
     m, carry = c._run_one(m, carry)

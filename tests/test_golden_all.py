@@ -12,15 +12,20 @@ Each topology stresses a different operator set:
 - robots   disallow rules + crawl_delay budgets
 """
 
+import os
 
 from webcrawl_spark.fixtures import gen
+from webcrawl_spark.operators import bloom as B
 from webcrawl_spark.plans import round as round_plan
 
 from .golden import run_and_check
 
 
 def test_tree_golden(spark, tmp_path):
-    run_and_check(spark, gen.tree(branching=2, depth=3), tmp_path)
+    crawler = run_and_check(spark, gen.tree(branching=2, depth=3), tmp_path)
+    # default config: seen never reaches bloom_min_seen, so no round checks
+    # and none keeps a Bloom sidecar
+    assert not os.path.exists(os.path.join(crawler.state.root, "bloom"))
 
 
 def test_star_golden(spark, tmp_path):
@@ -196,10 +201,13 @@ def test_rank_priority_golden(spark, tmp_path):
     ]
 
 
-def test_bloom_forced_golden(spark, tmp_path):
+def test_bloom_forced_golden(spark, tmp_path, monkeypatch):
     """Force the Bloom check stage on from round 0 (bloom_min_seen=0) —
-    byte-identical to the oracle; and again with a saturated 8-bit filter
-    (every candidate maybe_seen → pure anti-join verification)."""
+    byte-identical to the oracle; again with a saturated 8-bit filter
+    (every candidate maybe_seen → pure anti-join verification); and once
+    more with the check turning on mid-crawl. Seen holds 1, 5, 13 keys
+    entering rounds 0, 1, 2, so bloom_min_seen=5 crosses at round 1 —
+    before round 2's level-2 pages re-discover /n0.html."""
     fx = gen.tree(branching=2, depth=3)
     run_and_check(
         spark,
@@ -213,6 +221,28 @@ def test_bloom_forced_golden(spark, tmp_path):
                     fx.config.with_(bloom_min_seen=0, bloom_bits=8)),
         tmp_path,
     )
+
+    builds = []
+    real = B.build_sidecar
+
+    def spy(keys_df, prev_dir, out_dir, bits):
+        builds.append((prev_dir, os.path.basename(out_dir)))
+        return real(keys_df, prev_dir, out_dir, bits)
+
+    monkeypatch.setattr(B, "build_sidecar", spy)
+    run_and_check(
+        spark,
+        gen.Fixture("tree_bloom_cross", fx.pages, fx.seeds,
+                    fx.config.with_(bloom_min_seen=5)),
+        tmp_path,
+    )
+    # nothing built before the crossing round, which builds from the full
+    # seen view; every later round updates the previous round's sidecar
+    assert builds[0] == (None, "round-1")
+    assert all(prev is not None for prev, _ in builds[1:])
+    assert [out for _, out in builds] == [
+        f"round-{k}" for k in range(1, len(builds) + 1)
+    ]
 
 
 def test_max_queued_links_golden(spark, tmp_path):

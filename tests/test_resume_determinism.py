@@ -4,8 +4,8 @@
   state identical to an uninterrupted run (north_rule checkpoint criterion).
 - the trace must not depend on partition count: every ordering key is
   data-derived (SURVEY.md §4 item 2). In-session we vary the engine's
-  partition configs; cross-JVM master variance (local[8] vs local[32]) is
-  exercised by bench.py's scaling report.
+  partition configs; the master (and so the core count) is fixed per JVM
+  and is not varied here.
 """
 
 from webcrawl_spark import schemas

@@ -235,7 +235,8 @@ def test_enqueue_uri_between_runs(spark, tmp_path):
     )
     pages = pd.concat([fx.pages, extra], ignore_index=True)
     pdf = spark.createDataFrame(pages, schema=schemas.PAGES)
-    cfg = fx.config.with_(num_partitions=4)
+    # the check on from round 0, so a complete sidecar exists to insert into
+    cfg = fx.config.with_(num_partitions=4, bloom_min_seen=0)
     c = SparkCrawler(spark, pdf, fx.seeds, str(tmp_path / "s"), cfg)
     c.run(max_rounds=1)
     from webcrawl_spark.operators import bloom as B

@@ -108,7 +108,7 @@ def main(argv=None):
         num_partitions=args.partitions,
         domain_navigation=args.domain_nav,
         directory_navigation=args.dir_nav,
-        bloom_enabled=not args.no_bloom,
+        bloom_min_seen=None if args.no_bloom else CrawlConfig.bloom_min_seen,
         max_redirects=args.max_redirects,
         max_retries=args.max_retries,
         post_seeds=tuple((u, d) for u, d in args.post),

@@ -66,14 +66,16 @@ class CrawlConfig:
     max_rounds: int = 10_000
     num_partitions: int = 32         # host-hash partition count P
     salt_buckets: int = 1            # S sub-splits per mega-host (skew); 1 = off
-    bloom_enabled: bool = True       # Bloom prefilter in front of the seen anti-join
-    bloom_min_seen: int = 100_000    # the check stage (candidate repartition +
-                                     # bitset-file probes) only pays once the
-                                     # seen set outgrows a plain anti-join;
-                                     # below this row count the round skips it.
-                                     # The sidecar files are MAINTAINED from
-                                     # round 0 either way, so crossing the
-                                     # threshold needs no rebuild. 0 = always on
+    bloom_min_seen: Optional[int] = 100_000  # Bloom prefilter in front of
+                                     # the seen anti-join: the check stage
+                                     # (candidate repartition + bitset-file
+                                     # probes) only pays once the seen set
+                                     # outgrows a plain anti-join, so rounds
+                                     # below this row count skip it and keep
+                                     # no sidecar. The first checking round
+                                     # builds its sidecar from the full seen
+                                     # view; later rounds update it from each
+                                     # seen delta. 0 = always on, None = never
     bloom_bits: int = 1 << 17        # bits per host-hash partition; size so
                                      # total bits ≈ 10-15× expected seen keys
                                      # (cluster: 1<<30+ per partition sidecar)

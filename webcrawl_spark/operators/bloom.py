@@ -19,9 +19,12 @@ executors that own each partition — the driver never touches a key:
   (rediscoveries + false positives) enter the shuffle — at 10^10-URL scale
   the anti-join's candidate volume drops to the rediscovery rate plus the
   false-positive rate.
-- RESUME: a missing/incomplete sidecar dir is rebuilt by the same update
-  job over the committed seen table — distributed, never a driver
-  ``toPandas``.
+- LIFECYCLE: only a round that runs the check (seen has reached
+  ``bloom_min_seen``) keeps a sidecar. A checking round with no complete
+  sidecar dir — the first checking round, a resume, a dir dropped by
+  frontier surgery — rebuilds it by the same update job over its full seen
+  view (distributed, never a driver ``toPandas``); each checking round then
+  updates the next round's dir from its seen delta.
 
 All hashing and bit manipulation is VECTORIZED: two independent 64-bit
 hashes per key come from ``pd.util.hash_pandas_object`` with two fixed

@@ -3,9 +3,8 @@
 - brute-force cosine top-k: the exactness baseline — crossJoin + window.
   All arithmetic is JVM-side (``zip_with``/``aggregate`` fold, sequential
   and deterministic), cast to double before accumulating.
-- IVF-style bucketed top-k: a coarse quantizer (here: argmax component —
-  deterministic and engine-independent; swap for k-means centroid ids at
-  scale) prunes the candidate set to one bucket before ranking. At 100 TB
+- IVF bucketed top-k: a deterministic integer k-means quantizer prunes
+  the candidate set to the query's probe buckets before ranking. At 100 TB
   the bucket column is the shuffle/partition key and the per-bucket join
   replaces the full crossJoin.
 - near-duplicate pairs: cosine threshold over candidate pairs.
@@ -28,25 +27,15 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def cosine_sql(a: str, b: str) -> str:
-    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
-
-
-def _prep(emb: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias(out_id), F.expr(as_double(vec_col)).alias(out_vec)
-    )
-
-
 def _prep_normed(
     emb: DataFrame, id_col: str, vec_col: str,
     out_id: str, out_vec: str, out_norm: str,
 ) -> DataFrame:
-    """Like :func:`_prep` plus the vector's L2 norm computed ONCE per vector.
+    """(id, vector as doubles, L2 norm), the norm computed ONCE per vector.
 
     Pair-scoring then uses ``dot / (na * nb)`` — the exact same IEEE
-    operations (and therefore bit-identical results) as inlining
-    :func:`cosine_sql` per pair, at 1 fold per pair instead of 3."""
+    operations (and therefore bit-identical results) as computing both
+    norms per pair, at 1 fold per pair instead of 3."""
     v = as_double(vec_col)
     return emb.select(
         F.col(id_col).alias(out_id),
@@ -106,37 +95,6 @@ def brute_force_ranks(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("neighbor_id", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def argmax_bucket_sql(vec: str) -> str:
-    """Coarse quantizer: 1-based index of the max component (deterministic;
-    array_position returns the first match)."""
-    return f"array_position({vec}, array_max({vec}))"
-
-
-def ivf_topk(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    n_queries: int = 8, k: int = 5, round_to: int = 4,
-) -> DataFrame:
-    """Bucketed ANN: rank only within the query's coarse bucket."""
-    base = _prep(emb, id_col, vec_col, "id", "v").withColumn(
-        "bucket", F.expr(argmax_bucket_sql("v")).cast("int")
-    )
-    queries = base.filter(F.col("id") < n_queries).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "bucket"
-    )
-    corpus = base.select(F.col("id").alias("neighbor_id"), F.col("v").alias("nv"), "bucket")
-    scored = (
-        queries.join(corpus, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", F.expr(cosine_sql("qv", "nv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "bucket", F.round("cos", round_to).alias("cos"))
     )
 
 

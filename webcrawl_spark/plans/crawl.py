@@ -213,21 +213,13 @@ class SparkCrawler:
             F.lit(0).cast("int").alias("first_depth"),
             F.lit(0).cast("int").alias("first_round"),
         )
-        # the three seed commits are independent — run them concurrently
-        # (the sidecar builds from the in-memory delta, not the written
-        # files; same rows either way)
+        # the two seed commits are independent — run them concurrently
         from .round import _Job
 
-        seen_delta = seen_delta.localCheckpoint(eager=True)
         jobs = [
             _Job(lambda: self.state.write_table("frontier", 0, frontier)),
             _Job(lambda: self.state.write_table("seen", 0, seen_delta)),
         ]
-        if self.cfg.bloom_enabled:
-            jobs.append(_Job(lambda: B.build_sidecar(
-                seen_delta, None, B.sidecar_dir(self.state.root, 0),
-                self.cfg.bloom_bits,
-            )))
         for j in jobs:
             j.wait()
         m = Manifest(
@@ -248,8 +240,6 @@ class SparkCrawler:
         m = self.state.latest_manifest()
         if m is None:
             m = self._init_seeds()
-        if self.cfg.bloom_enabled:
-            self._ensure_sidecar(m)
         rounds_done = 0
         # carry = the previous round's in-flight state: its background
         # commits (still running — they overlap the next round's compute),
@@ -288,20 +278,7 @@ class SparkCrawler:
         for j in carry["stats"].jobs:
             j.wait()
         self.state.commit(carry["manifest"])
-        if self.cfg.bloom_enabled:
-            B.gc_sidecars(self.state.root, carry["manifest"].next_round)
-
-    def _ensure_sidecar(self, m: Manifest) -> None:
-        """Make sure the resume round's sidecar dir is complete; if missing
-        or incomplete (sidecar loss), rebuild it from the committed seen
-        table — a DISTRIBUTED job over the seen partitions, never a
-        driver-side materialization of the seen set. Later rounds' sidecars
-        are built inside run_round."""
-        d = B.sidecar_dir(self.state.root, m.next_round)
-        if not B.is_complete(d):
-            B.build_sidecar(
-                self.state.read_seen(m.next_round), None, d, self.cfg.bloom_bits
-            )
+        B.gc_sidecars(self.state.root, carry["manifest"].next_round)
 
     def _run_one(self, m: Manifest, carry):
         k = m.next_round
@@ -462,8 +439,8 @@ def _enqueue_uri(crawler: "SparkCrawler", url: str, post_data=None,
         delta = delta.localCheckpoint(eager=True)
         st.write_table("seen", k, delta)
         # O(1) sidecar maintenance: OR the one key's bits into its partition
-        # file in place (an incomplete/missing sidecar falls back to the
-        # distributed rebuild on the next run())
+        # file in place (an incomplete/missing sidecar is dropped; the next
+        # checking round rebuilds it from seen)
         bd = B.sidecar_dir(st.root, k)
         if B.is_complete(bd):
             row = entry.select("host", "url_key", "host_hash").head()
@@ -524,7 +501,8 @@ def _frontier_removal(crawler: "SparkCrawler", pattern: str, allow_requeue: bool
         # (state.replace_table) — the new seen content is published
         # atomically, never a delete-then-write window
         st.replace_table("seen", k, consolidated)
-        # bloom has no deletes: drop sidecars so the next run() rebuilds
+        # bloom has no deletes: drop sidecars so the next checking round
+        # rebuilds from seen
         bdir = os.path.join(st.root, "bloom")
         if os.path.exists(bdir):
             shutil.rmtree(bdir)

@@ -224,9 +224,9 @@ def run_round(
     bloom_job=None,
 ) -> RoundStats:
     """Run round ``rnd``. ``bloom_job`` is the previous round's sidecar
-    build (its ``RoundStats.bloom_job``; None on a run's first round, whose
-    sidecar is already complete). It writes this round's sidecar, so the
-    round waits on it before reading that sidecar in any way."""
+    build (its ``RoundStats.bloom_job``; None on a run's first round). It
+    writes this round's sidecar, so the round waits on it before reading
+    that sidecar in any way."""
     cfg = ctx.cfg
     P = cfg.num_partitions
     small = frontier_rows <= SMALL_ROUND_THRESHOLD
@@ -234,6 +234,18 @@ def run_round(
     # seen feeds both the dedup anti-join and the derived query-string
     # counts — persist so the (large, growing) union scan happens once
     seen = seen.persist()
+
+    # The Bloom check runs once seen reaches bloom_min_seen, and only a
+    # checking round owns a sidecar. With no build in flight and no complete
+    # dir on disk (round 0, resume, the threshold-crossing round, a sidecar
+    # dropped by frontier surgery), rebuild it from the full seen view — a
+    # distributed job that overlaps SELECT..PARSE; the check stage waits.
+    sidecar = B.sidecar_dir(state.root, rnd)
+    use_bloom = cfg.bloom_min_seen is not None and seen_rows >= cfg.bloom_min_seen
+    if use_bloom and bloom_job is None and not B.is_complete(sidecar):
+        bloom_job = _Job(
+            lambda: B.build_sidecar(seen, None, sidecar, cfg.bloom_bits)
+        )
 
     # ---------------- 1. SELECT (politeness + budgets) ----------------
     sel = select_polite(
@@ -461,12 +473,10 @@ def run_round(
     #     shuffle. The two consumers of the flagged frame share the
     #     repartition exchange (ReusedExchange).
     bloom_flagged = None
-    sidecar = B.sidecar_dir(state.root, rnd)
-    use_bloom = cfg.bloom_enabled and seen_rows >= cfg.bloom_min_seen
     if use_bloom:
         if bloom_job is not None:
-            # the previous round's build writes THIS round's sidecar — it
-            # must be on disk before any action triggers the check stage
+            # the build writes THIS round's sidecar — it must be on disk
+            # before any action triggers the check stage
             bloom_job.wait()
         flagged = (
             cand.withColumn("__hh", host_hash_col(P))
@@ -624,17 +634,17 @@ def run_round(
     # serial-action floor is what caps scaling efficiency at small rounds).
     # The sidecar update is executor-side: the seen delta ORs into
     # per-partition bitset files and untouched partitions carry forward as
-    # hard links from THIS round's sidecar — so that sidecar's build must
-    # have settled (it has had the whole round to; the check stage above
-    # already waited on it when it ran).
-    if bloom_job is not None:
-        bloom_job.wait()
+    # hard links from THIS round's sidecar. Only a checking round updates:
+    # its sidecar is complete (the check stage waited on its build), and
+    # seen only grows, so the next round checks too. A non-checking round
+    # builds nothing — an update over an incomplete sidecar would read its
+    # missing partitions as zeros and commit false negatives.
     jobs = [
         _Job(lambda: state.write_table("seen", rnd + 1, seen_delta)),
         _Job(lambda: state.write_table("frontier", rnd + 1, next_frontier)),
     ]
     next_bloom_job = None
-    if cfg.bloom_enabled:
+    if use_bloom:
         next_sidecar = B.sidecar_dir(state.root, rnd + 1)
         next_bloom_job = _Job(lambda: B.build_sidecar(
             seen_delta, sidecar, next_sidecar, cfg.bloom_bits
