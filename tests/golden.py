@@ -18,7 +18,8 @@ def run_oracle(fx: Fixture):
     return OracleCrawler(
         fx.pages_dict(), fx.seeds, fx.config, fx.robots,
         redirects=fx.redirects, statuses=fx.statuses, mimes=fx.mimes,
-        ranks=fx.ranks,
+        # no ranks means no rank fold, as run_spark passes no ranks table
+        ranks=fx.ranks or None,
     ).run()
 
 

@@ -185,7 +185,7 @@ def test_truncate_golden(spark, tmp_path):
 
 def test_rank_priority_golden(spark, tmp_path):
     """A ranks table (the shape link_pagerank emits) reorders frontier
-    selection within the html/binary class under cfg.rank_priority — the
+    selection within the html/binary class when passed to the crawl — the
     reference's HTML-first priority (EnqueueCore, Crawler.cs:2507-2512)
     generalized to an external signal. Budget 2/host/round: the trace must
     follow rank order among html pages, with the top-ranked BINARY resource

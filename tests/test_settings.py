@@ -54,7 +54,6 @@ def test_roundtrip_every_knob(tmp_path):
         salt_buckets=2,
         bloom_min_seen=None,
         bloom_bits=1 << 10,
-        robots_enabled=False,
         reliable_checkpoints=True,
     )
     save_settings(cfg, p)
@@ -83,7 +82,8 @@ def test_older_file_gets_defaults_and_ignores_unknown(tmp_path):
     with open(p, "w") as f:
         json.dump({"version": 0, "depth_limit": 2, "retired_knob": 99,
                    "small_round_threshold": 10, "bloom_fpp": 0.01,
-                   "bloom_enabled": False}, f)
+                   "bloom_enabled": False, "rank_priority": True,
+                   "robots_enabled": False}, f)
     cfg = load_settings(p)
     assert cfg.depth_limit == 2
     assert cfg.max_retries == CrawlConfig().max_retries

@@ -274,3 +274,79 @@ class TestUriFilters:
         )
         out = apply_uri_filters(pd.Series(["http://a/p"]), ch, pos, neg)
         assert out.iloc[0] == "http://c/p"
+
+
+FETCH_IN_SCHEMA = (
+    "url string, url_key string, host string, host_hash int, path string, "
+    "query string, depth int, referrer string, link_type string, "
+    "is_external boolean, priority int, seq long, failures int, round int, "
+    "post_data string, fetch_seq long, html binary, final_url string, "
+    "server_mime string, http_status int, present boolean, exceeded boolean, "
+    "final_present boolean, ok boolean"
+)
+
+
+def _fetch_row(path, fseq, html, present=True, status=200, final_url=None):
+    """One fetch-join row as the round builds it (frontier columns, html,
+    redirect target, server MIME and the JVM-side routing flags)."""
+    ok = present and status == 200 and html is not None
+    return (
+        "http://a.test" + path, path, "a.test", 0, path, "", 0, None, "link",
+        False, 0, fseq, 0, 0, None, fseq, html, final_url, None, status,
+        present, False, True, ok,
+    )
+
+
+def test_fetch_stage_matches_decode_then_candidate_stages(spark):
+    """The fused fetch stage through Spark's Arrow path: its page rows equal
+    the decode stage's output and its link rows equal the parse→candidate
+    stage's output on those pages, over partitions holding nothing, only
+    error rows, only a binary page, and an html page with links plus a
+    redirect-landing page (whose relative link resolves against the landing
+    url). Only the last partition yields link rows."""
+    from pandas.testing import assert_frame_equal
+    from pyspark.sql import functions as F
+
+    from webcrawl_spark.config import CrawlConfig
+    from webcrawl_spark.functions import crawl_udfs as U
+
+    cfg = CrawlConfig(directory_navigation="UpAndDown")
+    base_bc = spark.sparkContext.broadcast(
+        [{"scheme": "http", "host": "a.test", "path": "/index.html"}]
+    )
+    filters = compile_uri_filters((), (), ())
+    parts = [
+        [],
+        [_fetch_row("/gone.html", 0, None, present=False),
+         _fetch_row("/busy.html", 1, None, status=503)],
+        [_fetch_row("/img.png", 2, b"\x89PNG-fake")],
+        [_fetch_row("/index.html", 3, b'<a href="/p1.html">p</a>'
+                    b'<a href="http://b.test/x">x</a><img src="i.png">'),
+         _fetch_row("/old.html", 4, b'<a href="sub.html">s</a>',
+                    final_url="http://a.test/new/landing.html")],
+    ]
+    fetch_in = spark.createDataFrame(
+        spark.sparkContext.parallelize(range(len(parts)), len(parts))
+        .flatMap(lambda i: parts[i]),
+        FETCH_IN_SCHEMA,
+    )
+    fused = fetch_in.mapInPandas(
+        U.make_fetch_stage(cfg, base_bc, filters, None), U.FETCH_SCHEMA
+    ).withColumn("pid", F.spark_partition_id())
+    dec = fetch_in.mapInPandas(U.make_decode_stage(cfg, base_bc), U.DECODE_SCHEMA)
+    cand = dec.withColumn("base0", F.coalesce("final_url", "url")).mapInPandas(
+        U.make_parse_candidate_stage(cfg, base_bc, filters, None),
+        U.CANDIDATE_SCHEMA,
+    )
+
+    got_pages = fused.filter(F.col("passes").isNull()).select(*U.DECODE_COLS)
+    assert_frame_equal(
+        got_pages.orderBy("fetch_seq").toPandas(),
+        dec.orderBy("fetch_seq").toPandas(),
+    )
+    links = fused.filter(F.col("passes").isNotNull())
+    got_links = links.select(*U.CANDIDATE_COLS).orderBy("pos_f", "pos_o").toPandas()
+    assert_frame_equal(got_links, cand.orderBy("pos_f", "pos_o").toPandas())
+    assert {r.pid for r in links.select("pid").collect()} == {3}
+    assert "http://a.test/new/sub.html" in set(got_links["url"])
+    assert len(got_links) == 3  # /p1.html, i.png, new/sub.html; b.test out of scope

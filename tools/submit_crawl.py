@@ -114,7 +114,6 @@ def main(argv=None):
         post_seeds=tuple((u, d) for u, d in args.post),
         mime_overrides=tuple((e, m) for e, m in args.mime_override),
         reliable_checkpoints=args.reliable_checkpoints,
-        rank_priority=args.ranks is not None,
     )
     ranks = spark.read.parquet(args.ranks) if args.ranks else None
     crawler = SparkCrawler(

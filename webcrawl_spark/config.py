@@ -79,14 +79,6 @@ class CrawlConfig:
     bloom_bits: int = 1 << 17        # bits per host-hash partition; size so
                                      # total bits ≈ 10-15× expected seen keys
                                      # (cluster: 1<<30+ per partition sidecar)
-    robots_enabled: bool = True
-    rank_priority: bool = False      # weight discovered links by a ranks
-                                     # table (url -> rank, e.g. link_pagerank):
-                                     # priority = base * RANK_SPAN - clamped
-                                     # rank, so the reference's HTML-first
-                                     # class ordering (EnqueueCore,
-                                     # Crawler.cs:2507-2512) still dominates
-                                     # and rank orders within a class
     reliable_checkpoints: bool = False  # lineage cuts via DataFrame.checkpoint
                                      # into the state dir (survives executor
                                      # loss on a cluster) instead of

@@ -56,7 +56,7 @@ class Fixture:
     redirects: dict = field(default_factory=dict)  # url -> Location target
     statuses: dict = field(default_factory=dict)   # url -> HTTP status (absent = 200)
     mimes: dict = field(default_factory=dict)      # url -> server Content-Type
-    ranks: dict = field(default_factory=dict)      # url -> rank (rank_priority)
+    ranks: dict = field(default_factory=dict)      # url -> rank; empty = no rank fold
 
     def pages_dict(self) -> dict:
         """Content rows only — redirect rows live in ``redirects``."""
@@ -764,7 +764,7 @@ def truncate_fixture() -> Fixture:
 
 
 def rank_fixture() -> Fixture:
-    """Rank-weighted frontier priority (cfg.rank_priority): a ranks table
+    """Rank-weighted frontier priority: a ranks table passed to the crawl
     (url → rank, the shape ``link_pagerank`` emits) reorders selection
     WITHIN the html/binary class — the reference's HTML-first class ordering
     (EnqueueCore, Crawler.cs:2507-2512) generalized to an external signal.
@@ -805,10 +805,7 @@ def rank_fixture() -> Fixture:
         "rank",
         _mk_pages(rows),
         [f"{host}/index.html"],
-        CrawlConfig(
-            max_connections=None, max_connections_per_server=2,
-            rank_priority=True,
-        ),
+        CrawlConfig(max_connections=None, max_connections_per_server=2),
         ranks=ranks,
     )
 

@@ -7,13 +7,16 @@ structural, not coincidental.
 
 Stages (SURVEY.md §3.2):
 
-- :func:`decode_stage`     — charset decode + content filters + MIME
+- :func:`make_decode_stage` — charset decode + content filters + MIME
   (Crawler.cs:1619-1656, 2085-2119; filter-before-scan order 1622 vs 1658).
-- :func:`parse_stage`      — link extraction in reference scan order with
-  ``<base href>`` override (Crawler.cs:1878-1921).
-- :func:`candidate_stage`  — resolve → user URI filters → canonicalize →
-  scope → robots → depth rule, emitting flagged candidate rows
+- :func:`make_parse_stage` — link extraction in reference scan order
+  with ``<base href>`` override (Crawler.cs:1878-1921).
+- :func:`make_candidate_stage` — resolve → user URI filters → canonicalize
+  → scope → robots → depth rule, emitting flagged candidate rows
   (Crawler.cs:1773-1797, 3108-3164; main.cs:285-319).
+- :func:`make_fetch_stage` — the round's one Python stage: decode, then
+  parse → candidate on the decoded batch, so each page's text crosses the
+  JVM↔Python boundary once.
 
 Config objects are captured in closures (small, pickled once per task);
 the robots rule index rides a Spark broadcast.
@@ -34,9 +37,9 @@ from ..kernels.scope import scope_filter
 from ..kernels.textdec import decode_batch
 from ..kernels.urlnorm import canonicalize, resolve_links
 
-# the fetch+decode stage emits EVERY joined row (decoded pages AND error
-# rows) so the round needs only ONE lineage cut for the whole fetch side:
-# frontier columns pass through untouched, the JVM-computed routing flags
+# the decode stage emits EVERY joined row (decoded pages AND error rows) so
+# the round needs only ONE lineage cut for the whole fetch side: frontier
+# columns pass through untouched, the JVM-computed routing flags
 # (present/exceeded/final_present/http_status/ok) ride along for the
 # post-checkpoint CASE routing, and html is dropped (text replaces it) —
 # the checkpoint is therefore LIGHTER than the raw fetch join it replaces.
@@ -58,16 +61,18 @@ DECODE_SCHEMA = (
     "reject string"
 )
 
-PARSE_SCHEMA = (
-    "parent_url string, parent_depth int, pos_f long, pos_o int, "
-    "href string, link_type string, dec boolean, base_url string"
-)
-
 CANDIDATE_SCHEMA = (
     "url string, url_key string, host string, path string, query string, "
     "depth int, referrer string, link_type string, is_external boolean, "
     "priority int, pos_f long, pos_o int, passes boolean"
 )
+CANDIDATE_COLS = [f.split()[0] for f in CANDIDATE_SCHEMA.split(", ")]
+
+# the fetch stage's one flat frame: page rows (``passes`` NULL) carry the
+# decode columns; link rows fill the candidate columns — each already in
+# DECODE_SCHEMA under the same name and type — and leave the rest NULL
+FETCH_COLS = DECODE_COLS + ["pos_f", "pos_o", "passes"]
+FETCH_SCHEMA = DECODE_SCHEMA + ", pos_f long, pos_o int, passes boolean"
 
 
 def make_decode_stage(cfg: CrawlConfig, base_uris_bc):
@@ -78,7 +83,7 @@ def make_decode_stage(cfg: CrawlConfig, base_uris_bc):
     Rows with ``ok`` false (fetch errors, absent urls, dead redirects) pass
     straight through with NULL decode columns — they exist in the output so
     the error CASE routing reads the same checkpoint as the fetch_log and
-    parse consumers (one cut instead of two)."""
+    the candidate rows (one cut for the whole fetch side)."""
 
     ext_table = M.build_ext_table(cfg.mime_overrides)
 
@@ -126,17 +131,16 @@ def make_decode_stage(cfg: CrawlConfig, base_uris_bc):
             rtype = rtype.where(rtype != M.UNKNOWN, M.HTML)
             mime = rtype.map(M.mime_of_type)
             # second-chance re-type from the server Content-Type when the
-            # pages table carries one (GetMimeType prefers the response
-            # header over the extension guess, Crawler.cs:2100-2119)
-            if "server_mime" in pdf.columns:
-                srv = M.resource_types_of_mime_batch(pdf["server_mime"])
-                use = srv != M.UNKNOWN
-                rtype = srv.where(use, rtype)
-                base = (
-                    pdf["server_mime"].fillna("").astype(str)
-                    .str.split(";").str[0].str.strip().str.lower()
-                )
-                mime = base.where(use, mime)
+            # page has one (GetMimeType prefers the response header over the
+            # extension guess, Crawler.cs:2100-2119)
+            srv = M.resource_types_of_mime_batch(pdf["server_mime"])
+            use = srv != M.UNKNOWN
+            rtype = srv.where(use, rtype)
+            base = (
+                pdf["server_mime"].fillna("").astype(str)
+                .str.split(";").str[0].str.strip().str.lower()
+            )
+            mime = base.where(use, mime)
             is_binary = rtype == M.BINARY
             valid = ok & reject.isna()
             dec = decode_batch(
@@ -166,10 +170,9 @@ def make_parse_stage():
     def parse_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            base0 = pdf["base0"] if "base0" in pdf.columns else pdf["url"]
             for url, depth, fseq, rtype, text, b0 in zip(
                 pdf["url"], pdf["depth"], pdf["fetch_seq"], pdf["rtype"],
-                pdf["text"], base0,
+                pdf["text"], pdf["base0"],
             ):
                 if not isinstance(text, str) or rtype not in (M.HTML, M.CSS):
                     continue
@@ -208,6 +211,24 @@ def make_parse_candidate_stage(cfg: CrawlConfig, base_uris_bc, uri_filters, rule
         return candidate(parse(batches))
 
     return stage
+
+
+def make_fetch_stage(cfg: CrawlConfig, base_uris_bc, uri_filters, rule_index_bc):
+    """Decode, then parse→candidate on the decoded batch, in ONE Python task
+    emitting one flat ``FETCH_SCHEMA`` frame: the round cuts it once, and
+    each page's text crosses the JVM↔Python boundary once. Links resolve
+    against the redirect-terminal url (the reference updates resourceUri to
+    the ResponseUri, Crawler.cs:1585-1588); referrer stays the queued url."""
+    decode = make_decode_stage(cfg, base_uris_bc)
+    parse = make_parse_candidate_stage(cfg, base_uris_bc, uri_filters, rule_index_bc)
+
+    def fetch_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pages in decode(batches):
+            base0 = pages["final_url"].fillna(pages["url"])
+            for frame in (pages, *parse([pages.assign(base0=base0)])):
+                yield frame.assign(**{c: None for c in FETCH_COLS if c not in frame})
+
+    return fetch_stage
 
 
 def make_candidate_stage(cfg: CrawlConfig, base_uris_bc, uri_filters, rule_index_bc):

@@ -155,7 +155,7 @@ def host_ranks_to_url_ranks(host_ranks: DataFrame, urls: DataFrame,
     """Roll a host-level rank table (``host`` string, ``hrank`` long —
     the ``host_rank`` / ``trust_rank`` output with ids rendered as
     hostnames) down to the ``(url, rank)`` table
-    ``functions/rankprio.fold_rank_priority`` / ``config.rank_priority``
+    ``functions/rankprio.fold_rank_priority`` / the crawl's ``ranks``
     consumes — the DOMAIN-RANK crawl-budget allocator: within a priority
     class, URLs on high-rank hosts are fetched first. The third rank
     producer next to ``recrawl_ranks`` (two-snapshot churn) and

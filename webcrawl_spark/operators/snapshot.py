@@ -134,7 +134,7 @@ def change_rate_estimate(history: DataFrame) -> DataFrame:
 def change_rate_ranks(est: DataFrame) -> DataFrame:
     """Turn :func:`change_rate_estimate` output into the ``(url, rank)``
     table the crawler's rank-weighted priority consumes
-    (``functions/rankprio.fold_rank_priority`` / ``config.rank_priority``)
+    (``functions/rankprio.fold_rank_priority`` / the crawl's ``ranks``)
     — the ADAPTIVE-recrawl loop closure, next to the two-snapshot
     ``recrawl_ranks``: urls with a higher estimated change rate are
     revisited sooner. ``rank = λ̂ in milli-changes-per-snapshot`` (integer
@@ -152,7 +152,7 @@ def change_rate_ranks(est: DataFrame) -> DataFrame:
 def recrawl_ranks(diff: DataFrame, scale: int = RECRAWL_SCALE) -> DataFrame:
     """Turn a snapshot diff into the ``(url, rank)`` table the crawler's
     rank-weighted priority consumes (``functions/rankprio.py`` /
-    ``config.rank_priority``) — the recrawl-scheduling loop: hosts that
+    the crawl's ``ranks``) — the recrawl-scheduling loop: hosts that
     churn get revisited sooner next crawl.
 
     ``rank = host_rate + scale·[status = changed]`` where ``host_rate`` is

@@ -119,14 +119,14 @@ class OracleCrawler:
         self.redirects = redirects or {}  # url -> Location target
         self.statuses = statuses or {}    # url -> HTTP status (absent = 200)
         self.mimes = mimes or {}          # url -> server Content-Type header
-        self.ranks = ranks or {}          # url -> rank (cfg.rank_priority)
+        self.ranks = ranks                # url -> rank; None = no rank fold
         self.cfg = config
         self.seeds = seeds
         rules = robots_rules if robots_rules is not None else pd.DataFrame(
             columns=["host", "path_prefix", "allow", "crawl_delay"]
         )
-        self.rule_index = R.build_rule_index(rules) if config.robots_enabled else {}
-        self.delays = R.crawl_delays(rules) if config.robots_enabled else {}
+        self.rule_index = R.build_rule_index(rules)
+        self.delays = R.crawl_delays(rules)
         self.ext_table = M.build_ext_table(config.mime_overrides)
         self.uri_filters = compile_uri_filters(
             config.change_filters, config.positive_filters, config.negative_filters
@@ -405,7 +405,7 @@ class OracleCrawler:
                     pq.add(cc.query)
                     seen[key] = (depth, rnd)
                     prio = _priority(cc.path, cfg, self.ext_table)
-                    if cfg.rank_priority:
+                    if self.ranks is not None:
                         # rank-weighted ordering within the base class
                         # (EnqueueCore HTML-first generalized; the engine
                         # applies the same formula at 5c')

@@ -88,8 +88,8 @@ class SparkCrawler:
         if "redirect_to" in pages.columns:
             self.eff_pages = _cut(self.eff_pages, config.reliable_checkpoints)
         rules = robots_rules if robots_rules is not None else _EMPTY_ROBOTS
-        rule_index = R.build_rule_index(rules) if config.robots_enabled else {}
-        delays = R.crawl_delays(rules) if config.robots_enabled else {}
+        rule_index = R.build_rule_index(rules)
+        delays = R.crawl_delays(rules)
         self._rule_index = rule_index
         self.ctx = RoundContext(
             cfg=config,
@@ -102,8 +102,8 @@ class SparkCrawler:
             ),
             delays=delays,
             # (url, rank) priority weights — e.g. a link_pagerank output fed
-            # back into the frontier; consumed only under cfg.rank_priority
-            ranks=ranks if config.rank_priority else None,
+            # back into the frontier; folded into priority when given
+            ranks=ranks,
         )
 
     # ------------------------------------------------------------------

@@ -14,10 +14,10 @@ Dataflow (each step cites the reference semantics it re-expresses):
     MaxRetries (Crawler.cs:1814-1860). ``pages.url`` is assumed unique
     (the Iceberg table's key; multi-version corpora are pre-deduped
     latest-wins upstream, once, not per round).
-3.  DECODE   Arrow-batched charset decode + content filters + MIME
-    (mapInPandas; Crawler.cs:1619-1656).
-4.  PARSE    link extraction + resolve + URI filters + canonicalize + scope
-    + robots + depth rule (mapInPandas stages over the shared kernels).
+3+4. DECODE + PARSE  ONE mapInPandas stage over the shared kernels:
+    Arrow-batched charset decode + content filters + MIME
+    (Crawler.cs:1619-1656), then link extraction + resolve + URI filters +
+    canonicalize + scope + robots + depth rule on the decoded batch.
 5.  ENQUEUE  min-depth merge into the carried frontier (Crawler.cs:2303-2307);
     left-anti join vs the seen set (Service.Enqueue dedup,
     Crawler.cs:2301-2320); first-passing-discovery selection; crawler-trap
@@ -32,8 +32,9 @@ Physical-plan choices (the 100-TB story):
 - the ``pages`` table is scanned EXACTLY ONCE per round: the fetch join
   result is checkpointed, and its size is bounded by the politeness budget
   (per-host cap × host count), never by corpus size.
-- one combined ``fetch_log`` commit (fetched ∪ errors) doubles as the
-  parse input — no decode recomputation, a hard lineage cut, one write.
+- ONE lineage cut holds the whole fetch side: page rows (fetched ∪
+  errors) feed the one ``fetch_log`` write, link rows feed ENQUEUE — no
+  decode recomputation, and page text crosses into Python once.
 - per-round stats ride a single aggregate over the checkpointed join plus
   write-side Observations — no standalone count jobs over big inputs.
 - sequence assignment is adaptive: below
@@ -55,10 +56,10 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..functions.crawl_udfs import (
+    CANDIDATE_COLS,
     CANDIDATE_SCHEMA,
-    DECODE_SCHEMA,
-    make_decode_stage,
-    make_parse_candidate_stage,
+    FETCH_SCHEMA,
+    make_fetch_stage,
 )
 from ..kernels import robots as R
 from ..kernels.errors import FATAL_CODES
@@ -90,8 +91,8 @@ class RoundContext:
     uri_filters: tuple
     rule_index_bc: object = None     # spark broadcast of robots rule index
     delays: dict = field(default_factory=dict)  # host -> crawl_delay seconds
-    ranks: DataFrame = None          # (url, rank) priority weights — consumed
-                                     # only when cfg.rank_priority is set
+    ranks: DataFrame = None          # (url, rank) priority weights — folded
+                                     # into priority when given
 
 
 @dataclass
@@ -135,11 +136,12 @@ def _budget_col(ctx: RoundContext):
 
 
 class _Job(InheritableThread):
-    """Background Spark action: the round's independent commits (fetch_log,
-    seen delta, frontier, Bloom sidecar) overlap instead of queueing as
-    serial driver actions — the scheduler interleaves their tasks. Each
-    writes its own directory; the manifest commit (after all joins) remains
-    the only visibility point, so failure atomicity is unchanged."""
+    """Background Spark action: the round's independent commits (seen
+    delta, frontier, Bloom sidecar) and the carried cut overlap instead of
+    queueing as serial driver actions — the scheduler interleaves their
+    tasks. Each commit writes its own directory; the manifest commit (after
+    all joins) remains the only visibility point, so failure atomicity is
+    unchanged."""
 
     def __init__(self, fn):
         super().__init__(target=self._run)
@@ -239,7 +241,7 @@ def run_round(
     # checking round owns a sidecar. With no build in flight and no complete
     # dir on disk (round 0, resume, the threshold-crossing round, a sidecar
     # dropped by frontier surgery), rebuild it from the full seen view — a
-    # distributed job that overlaps SELECT..PARSE; the check stage waits.
+    # distributed job that overlaps SELECT..FETCH; the check stage waits.
     sidecar = B.sidecar_dir(state.root, rnd)
     use_bloom = cfg.bloom_min_seen is not None and seen_rows >= cfg.bloom_min_seen
     if use_bloom and bloom_job is None and not B.is_complete(sidecar):
@@ -260,17 +262,17 @@ def run_round(
             reliable=cfg.reliable_checkpoints,
         )
 
-    # ---------------- 2+3. FETCH + DECODE: ONE pages scan, ONE cut ----
+    # ------------ 2-4. FETCH + DECODE + PARSE: ONE pages scan, ONE cut ----
     # Bounded by the politeness budget, not the corpus: the join holds at
     # most (hosts-with-work × per-host budget) rows of html. ``pages`` here
     # is the redirect-resolved effective view (operators/redirect.py):
     # (url, html, final_url, exceeded, final_present) — html is the chain-
-    # terminal row's. The decode mapInPandas sees EVERY joined row (error
+    # terminal row's. The fetch mapInPandas sees EVERY joined row (error
     # rows pass through with NULL decode columns, the routing flags computed
-    # JVM-side below ride along), so the fetch join, charset decode, and
-    # error routing all share a SINGLE checkpoint — and since html is
-    # dropped inside the stage, the materialized cut is lighter than the
-    # raw join it replaces.
+    # JVM-side below ride along) and emits the page rows plus their link
+    # candidates, so the fetch join, charset decode, error routing and link
+    # extraction all share a SINGLE checkpoint — and since html is dropped
+    # inside the stage, the materialized cut is lighter than the raw join.
     pg = pages.withColumn("__present", F.lit(True))
     present0 = F.col("__present").isNotNull()
     status0 = F.coalesce(F.col("http_status"), F.lit(200))
@@ -283,14 +285,14 @@ def run_round(
     )
     # repartition by url BEFORE the cut: the join inherits the pages table's
     # layout (possibly a handful of files), and everything downstream — the
-    # fetch_log files and therefore parse — would inherit that
+    # fetch stage and the fetch_log files — would inherit that
     # serialization. The shuffle moves one round's html only (budget-bounded).
     # MaxFileSize truncates the TRANSFER, not just the reported byte count
     # (CopyStream, Crawler.cs:1743-1771; knob 583-598): the cut happens here
     # at the fetch boundary so decode, link-scan, and the bytes metric all
     # see the truncated body — and so one pathological multi-GB row can
     # never inflate the fetch shuffle or an Arrow decode batch.
-    dec = (
+    fetched = (
         sel.join(pg, "url", "left")
         .repartition(P, "url")
         .select(
@@ -312,9 +314,24 @@ def run_round(
             F.coalesce(F.col("final_present"), F.lit(False)).alias("final_present"),
             F.coalesce(ok0, F.lit(False)).alias("ok"),
         )
-        .mapInPandas(make_decode_stage(cfg, ctx.base_uris_bc), DECODE_SCHEMA)
+        .mapInPandas(
+            make_fetch_stage(
+                cfg, ctx.base_uris_bc, ctx.uri_filters, ctx.rule_index_bc
+            ),
+            FETCH_SCHEMA,
+        )
     )
-    dec = cut(dec, cfg.reliable_checkpoints)
+    # discoveries (acc ⊆ cand) can be orders of magnitude larger than the
+    # incoming frontier (fan-out × links per page), so the single-partition
+    # fast path for 5f gates on the candidate (link-row) count, not
+    # frontier_rows; the count rides the cut as an Observation.
+    obs_c = Observation(f"cand_r{rnd}")
+    fetched = fetched.observe(obs_c, F.count("passes").alias("n"))
+    fetched = cut(fetched, cfg.reliable_checkpoints)
+    dec = fetched.filter(F.col("passes").isNull())
+    cand = fetched.filter(F.col("passes").isNotNull()).select(*CANDIDATE_COLS)
+    cand_count = cand.count() if cfg.reliable_checkpoints else obs_c.get["n"]
+    small_acc = cand_count <= SMALL_ROUND_THRESHOLD
 
     # routing (fatal taxonomy; IsFatalError Crawler.cs:2121-2164 + redirect
     # outcomes Crawler.cs:635-647, 1585-1597):
@@ -330,7 +347,7 @@ def run_round(
     # ``ok`` false + reachable + non-fatal status ⟺ the old
     # "status 200 with NULL html, or retryable status" condition — html
     # itself is gone from the checkpoint, the flag stands in for it.
-    # ONE projection over the decode cut classifies every selected row:
+    # ONE projection over the page rows classifies every selected row:
     # fetch_log is its fetch-log columns, the retry rows re-enter the
     # frontier from it, and the failure count is +1 for every fetch error.
     present = F.col("present")
@@ -376,52 +393,12 @@ def run_round(
         F.count(F.when(F.col("status") == "ok", 1)).alias("n_good"),
         F.count(F.when(F.col("status") == "retryable", 1)).alias("n_retry"),
     )
-    # the fetch_log commit has no downstream dependents until its
-    # Observation is read — run it in the background so the parse stage
-    # (which reads the same decode checkpoint) overlaps it
-    fl_job = _Job(lambda: state.write_table("fetch_log", rnd, fetch_log))
+    state.write_table("fetch_log", rnd, fetch_log)
 
     retry_rows = routed.filter(F.col("status") == "retryable").select(*FRONTIER_COLS)
 
-    # ---------------- 4. PARSE → candidates --------------------------
-    cand = (
-        dec.filter(
-            F.col("text").isNotNull() & F.col("rtype").isin("html", "css")
-        )
-        # links resolve against the redirect-terminal url (the reference
-        # updates resourceUri to the ResponseUri, Crawler.cs:1585-1588);
-        # parent_url/referrer stays the queued (original) url
-        .select(
-            "url", "depth", "fetch_seq", "rtype", "text",
-            F.coalesce("final_url", "url").alias("base0"),
-        )
-        .mapInPandas(
-            make_parse_candidate_stage(
-                cfg, ctx.base_uris_bc, ctx.uri_filters, ctx.rule_index_bc
-            ),
-            CANDIDATE_SCHEMA,
-        )
-    )
-    # discoveries (acc ⊆ cand) can be orders of magnitude larger than the
-    # incoming frontier (fan-out × links per page), so the single-partition
-    # fast path for 5f gates on the candidate count, not frontier_rows; the
-    # count rides the checkpoint job as an Observation (no standalone scan).
-    obs_c = Observation(f"cand_r{rnd}")
-    cand = cand.observe(obs_c, F.count(F.lit(1)).alias("n"))
-    cand = cut(cand, cfg.reliable_checkpoints)
-    cand_count = cand.count() if cfg.reliable_checkpoints else obs_c.get["n"]
-    small_acc = cand_count <= SMALL_ROUND_THRESHOLD
-
-    # the fetch_log write has been overlapping the parse stage; its
-    # Observation (needed for the carried anti-join's broadcast gate and the
-    # counters) is read at the top of ENQUEUE, by which point the write has
-    # typically drained.
-    def _fl_done() -> dict:
-        fl_job.wait()
-        return obs_f.get
-
     # ---------------- 5. ENQUEUE ----------------
-    v = _fl_done()
+    v = obs_f.get
     n_selected, n_good, n_retry = v["n_sel"], v["n_good"], v["n_retry"]
     next_fetch_seq += n_selected
     counters += [
@@ -540,15 +517,15 @@ def run_round(
         )
     )
 
-    # 5c'. rank-weighted priority (config-gated): discovered entries join the
-    #      ranks table (url → rank, e.g. a link_pagerank output) and fold the
-    #      rank into the priority — base class still dominates (RANK_SPAN
+    # 5c'. rank-weighted priority (when a ranks table is given): discovered
+    #      entries join it (url → rank, e.g. a link_pagerank output) and fold
+    #      the rank into the priority — base class still dominates (RANK_SPAN
     #      exceeds any clamped rank), rank orders within a class. This is
     #      the reference's HTML-first class ordering (EnqueueCore,
     #      Crawler.cs:2507-2512) generalized to an externally-computed
     #      signal. Uniform-key join on url (the ranks table is corpus-sized
     #      at scale — never assume broadcast; AQE picks one when it is small).
-    if cfg.rank_priority and ctx.ranks is not None:
+    if ctx.ranks is not None:
         from ..functions.rankprio import fold_rank_priority
 
         acc = fold_rank_priority(acc, ctx.ranks)

@@ -410,7 +410,7 @@ def q_host_rank(spark, sf_dir):
     damping 0.85) — Common Crawl's domain-ranks product: the
     crawl-budget allocator above the page-level ``link_pagerank``
     (rank hosts, then spend politeness budget on high-rank hosts
-    first; ``config.rank_priority`` consumes the rollup). Edge mass is
+    first; the crawl's ``ranks`` table consumes the rollup). Edge mass is
     weighted: each host splits its rank over out-LINKS, not out-hosts
     (``(r * w) div ow`` per edge, truncating per-edge BEFORE the sum so
     every engine agrees bit-for-bit). Per iteration: one uniform-key
@@ -1043,7 +1043,7 @@ def q_politeness_topk(spark, sf_dir):
 
 
 def q_politeness_topk_ranked(spark, sf_dir):
-    """Rank-weighted politeness selection (§2 ops 2-3 + `rank_priority`):
+    """Rank-weighted politeness selection (§2 ops 2-3 + crawl ranks):
     the engine's shared priority formula — ``base * RANK_SPAN − clamp(rank)``
     (`config.rank_weighted_priority`, what the crawl applies at its accept
     stage) — evaluated JVM-side over neutral data, then the REAL selection
@@ -2017,7 +2017,7 @@ def q_url_alias_groups(spark, sf_dir):
 
 def q_recrawl_ranks(spark, sf_dir):
     """Recrawl scheduling (operators/snapshot.recrawl_ranks): the snapshot
-    diff folded into the (url, rank) table config.rank_priority consumes —
+    diff folded into the (url, rank) table the crawl's ``ranks`` takes —
     host change-rate in integer thousandths plus a flat boost for urls
     whose own digest changed; deleted urls dropped. Closes the loop
     snapshot_diff's docstring promises: diff → next crawl's priorities."""
@@ -2433,7 +2433,7 @@ def q_focused_crawl_ranks(spark, sf_dir):
     """Focused crawling for training data (Chakrabarti et al. 1999 meets
     the FineWeb-Edu gate): the edu classifier's 0..5 buckets become the
     FIFTH rank producer — a ``(url, rank)`` table with ``rank =
-    edu_score · EDU_RANK_SCALE`` that ``config.rank_priority`` consumes,
+    edu_score · EDU_RANK_SCALE`` that the crawl's ``ranks`` consumes,
     composing with recrawl/change-rate/domain-rank producers by
     rank-table sum. Within a politeness class the frontier then fetches
     predicted-educational pages first — classifier inference steers the
@@ -7914,7 +7914,7 @@ def q_sp_unigram_learn(spark, sf_dir):
 
 
 def q_politeness_backoff_topk(spark, sf_dir):
-    """The AIMD loop CLOSED into the scheduler (the rank_priority
+    """The AIMD loop CLOSED into the scheduler (the rank-priority
     pattern applied to budgets): host_backoff's per-host budgets join
     the frontier and drive the ENGINE's actual selection code path
     (`plans.round.select_polite` — `budget` is a Column, the same

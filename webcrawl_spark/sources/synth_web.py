@@ -122,7 +122,6 @@ def crawl_config(**overrides) -> CrawlConfig:
         directory_navigation="UpAndDown",
         max_connections=None,
         max_connections_per_server=8,
-        robots_enabled=False,
         depth_limit=50,
         salt_buckets=4,
         max_query_strings_per_file=None,  # synth web has no query strings
