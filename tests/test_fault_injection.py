@@ -128,3 +128,43 @@ def test_run_exception_joins_carry_threads(spark, tmp_path):
     assert [tuple(r) for r in resumed.trace().collect()] == [
         tuple(r) for r in clean.trace().collect()
     ]
+
+
+def test_round_exception_joins_its_own_jobs(spark, tmp_path, monkeypatch):
+    """A round that throws after launching its fetch_log write (a
+    background commit) and its carried cut joins both before the error
+    leaves ``run_round`` — neither may outlive ``run()``."""
+    import threading
+    import time
+
+    import pytest
+
+    from webcrawl_spark.plans import round as R
+    from webcrawl_spark.plans.state import CrawlState
+
+    real_write, real_seq = CrawlState.write_table, R._lazy_seq
+
+    def slow_write(self, table, rnd, df):
+        if table == "fetch_log":
+            time.sleep(1.5)   # still writing when ENQUEUE fails
+        real_write(self, table, rnd, df)
+
+    def boom(df, order_cols, start, out_col):
+        if out_col == "seq":
+            raise RuntimeError("injected enqueue failure")
+        return real_seq(df, order_cols, start, out_col)
+
+    monkeypatch.setattr(CrawlState, "write_table", slow_write)
+    monkeypatch.setattr(R, "_lazy_seq", boom)
+    fx = tree(branching=2, depth=2)
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    c = SparkCrawler(spark, pages, fx.seeds, str(tmp_path / "boom"),
+                     fx.config.with_(num_partitions=4))
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected enqueue failure"):
+        c.run()
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.is_alive() and type(t).__name__ == "_Job"
+    ]
+    assert leaked == []

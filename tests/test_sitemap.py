@@ -75,8 +75,12 @@ def test_plan_single_scan_no_exchange(spark):
 
 
 def test_sitemap_recrawl_actions(spark):
-    """Every action branch: never-fetched -> new; lastmod newer than our
-    fetch OR absent -> refetch; our copy newer -> fresh."""
+    """Every action branch over a DATE lastmod (parse_sitemaps' type):
+    never-fetched -> new; our copy newer -> fresh; lastmod newer than our
+    fetch, absent, or not comparable with a malformed fetch date ->
+    refetch."""
+    from pyspark.sql import functions as F
+
     from webcrawl_spark.operators.sitemap import sitemap_recrawl
 
     entries = spark.createDataFrame(
@@ -85,15 +89,17 @@ def test_sitemap_recrawl_actions(spark):
             ("h", "url", "http://s/b", "2024-05-01", None),
             ("h", "url", "http://s/c", None, None),
             ("h", "url", "http://s/d", "2024-05-01", None),
+            ("h", "url", "http://s/e", "2024-05-01", None),
             ("h", "sitemap", "http://s/map.xml", "2024-05-01", None),
         ],
         "host string, kind string, loc string, lastmod string, priority string",
-    )
+    ).withColumn("lastmod", F.col("lastmod").cast("date"))
     fetched = spark.createDataFrame(
         [
             ("http://s/a", "2024-01-01"),   # stale copy -> refetch
             ("http://s/b", "2024-12-01"),   # newer copy -> fresh
             ("http://s/c", "2024-12-01"),   # no lastmod claim -> refetch
+            ("http://s/e", "garbage"),      # corrupt fetch state -> refetch
         ],
         "loc string, last_fetch string",
     )
@@ -103,6 +109,7 @@ def test_sitemap_recrawl_actions(spark):
         "http://s/b": "fresh",
         "http://s/c": "refetch",
         "http://s/d": "new",
+        "http://s/e": "refetch",
     }
     # child sitemaps are discovery edges, not fetch targets
     assert "http://s/map.xml" not in got

@@ -23,3 +23,17 @@ Reference semantics are cited per function as ``Backend/Crawler.cs:line``.
 """
 
 __version__ = "0.1.0"
+
+
+def _in_task() -> bool:
+    from pyspark import TaskContext
+
+    return TaskContext.get() is not None
+
+
+# every engine UDF unpickles through this package, so a reused Python
+# worker is patched on its first engine task; the driver is left alone
+if _in_task():
+    from .pyworker import lazy_zip_invalidation
+
+    lazy_zip_invalidation()

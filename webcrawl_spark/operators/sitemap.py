@@ -109,12 +109,12 @@ def sitemap_recrawl(
     a parsed ``<urlset>`` on the NEXT visit: join each advertised loc
     against the stored per-URL fetch state and emit ``(loc, lastmod,
     last_fetch, action)`` with ``action`` ∈ ``new`` (never fetched),
-    ``refetch`` (advertised lastmod is newer than our fetch — or absent:
-    no freshness claim means the conservative policy refetches), and
-    ``fresh`` (our copy postdates the advertised change). Dates compare
-    as ISO-8601 STRINGS (sitemaps advertise W3C datetimes; lexicographic
-    order IS chronological order for them), keeping the decision
-    engine-exact with no timezone arithmetic.
+    ``fresh`` (our copy postdates the advertised change) and ``refetch``
+    (everything else: the advertised lastmod is newer than our fetch, or
+    the two do not compare). ``last_fetch`` is try-cast to ``lastmod``'s
+    type (DATE, as :func:`parse_sitemaps` emits it), so an absent lastmod
+    or a malformed fetch date makes the comparison NULL — and a row with
+    no freshness evidence takes the conservative branch, ``refetch``.
 
     Composes with the other recrawl producers (snapshot diff, Poisson
     change-rate): a sitemap is the site ANNOUNCING change, those two are
@@ -125,11 +125,13 @@ def sitemap_recrawl(
     """
     e = entries.filter(F.col("kind") == "url").select("loc", "lastmod")
     j = e.join(fetched.select("loc", "last_fetch"), "loc", "left")
+    lastmod = F.col("lastmod")
+    last_fetch = F.col("last_fetch").try_cast(e.schema["lastmod"].dataType)
     return j.select(
         "loc", "lastmod", "last_fetch",
         F.when(F.col("last_fetch").isNull(), F.lit("new"))
-        .when(F.col("lastmod").isNull(), F.lit("refetch"))
-        .when(F.col("lastmod") > F.col("last_fetch"), F.lit("refetch"))
-        .otherwise(F.lit("fresh"))
+        .when(lastmod > last_fetch, F.lit("refetch"))
+        .when(lastmod <= last_fetch, F.lit("fresh"))
+        .otherwise(F.lit("refetch"))
         .alias("action"),
     )

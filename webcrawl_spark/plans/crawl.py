@@ -13,10 +13,12 @@ from __future__ import annotations
 from typing import Optional
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from ..config import CrawlConfig
@@ -26,18 +28,25 @@ from ..kernels.config_free import SCHEMES
 from ..kernels.filters import compile_uri_filters
 from ..kernels.urlnorm import canonicalize
 from ..operators import bloom as B
-from .round import FRONTIER_COLS, RoundContext, host_hash_col, run_round
+from .round import (
+    FRONTIER_COLS, RoundContext, _join_quietly, host_hash_col, run_round,
+)
 from .state import CrawlState, Manifest
 
 _EMPTY_ROBOTS = pd.DataFrame(columns=["host", "path_prefix", "allow", "crawl_delay"])
 
 
-def _join_quietly(jobs: list) -> None:
-    """Settle background commits on an error path without raising their
-    own errors (``join``, not ``wait``) — the error in flight is the one
-    to propagate."""
-    for j in jobs:
-        j.join()
+def _driver_df(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A frame of driver-side rows, handed to Spark as a pyarrow Table: the
+    JVM converts it whatever the session's Arrow setting, where a list or
+    pandas input (Arrow off) runs a Python stage of defaultParallelism
+    tasks on every action over it."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class SparkCrawler:
@@ -155,11 +164,7 @@ class SparkCrawler:
             T.StructField(f.name, f.dataType)
             for f in schemas.FRONTIER.fields if f.name != "host_hash"
         ]
-        cols = [f.name for f in fields]
-        return self.spark.createDataFrame(
-            pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols),
-            schema=T.StructType(fields),
-        ).withColumn(
+        return _driver_df(self.spark, rows, T.StructType(fields)).withColumn(
             "host_hash", host_hash_col(self.cfg.num_partitions)
         ).select(*FRONTIER_COLS)
 
@@ -200,12 +205,13 @@ class SparkCrawler:
             k = (row[2], row[1])   # (host, url_key)
             if k not in first:
                 first[k] = (row[3], row[4])  # path, query
-        seen_pdf = pd.DataFrame(
+        seen_delta = _driver_df(
+            self.spark,
             [(h, uk, p, q) for (h, uk), (p, q) in first.items()],
-            columns=["host", "url_key", "path", "query"],
-        )
-        seen_delta = self.spark.createDataFrame(
-            seen_pdf, schema="host string, url_key string, path string, query string"
+            T.StructType([
+                T.StructField(c, T.StringType())
+                for c in ("host", "url_key", "path", "query")
+            ]),
         ).select(
             "host",
             host_hash_col(cfg.num_partitions).alias("host_hash"),
@@ -265,8 +271,9 @@ class SparkCrawler:
         finally:
             # Error path: settle the carried round's writer threads before
             # propagating — an orphaned _Job racing a later run()'s
-            # mode('overwrite') writes to the same seen/frontier/bloom round
-            # dirs could leave mixed data under a later-committed manifest.
+            # mode('overwrite') writes to the same fetch_log/seen/frontier/
+            # bloom round dirs could leave mixed data under a later-committed
+            # manifest.
             # The manifest is deliberately NOT committed here (commit is
             # success-only, in _drain): the uncommitted round replays
             # identically on resume, which the fault probes verify.
@@ -384,7 +391,7 @@ class SparkCrawler:
 
     def counters(self) -> DataFrame:
         rows = [tuple(c) for m in self.state.manifests() for c in m.counters]
-        return self.spark.createDataFrame(rows, schemas.COUNTERS)
+        return _driver_df(self.spark, rows, schemas.COUNTERS)
 
     # ---------------- frontier surgery between runs ----------------
     def enqueue_uri(self, url: str, post_data=None, force: bool = True) -> bool:

@@ -35,8 +35,9 @@ Physical-plan choices (the 100-TB story):
 - ONE lineage cut holds the whole fetch side: page rows (fetched ∪
   errors) feed the one ``fetch_log`` write, link rows feed ENQUEUE — no
   decode recomputation, and page text crosses into Python once.
-- per-round stats ride a single aggregate over the checkpointed join plus
-  write-side Observations — no standalone count jobs over big inputs.
+- per-round stats ride the fetch cut as one Observation — no standalone
+  count jobs over big inputs, and the fetch_log write is a background
+  commit, off the round's critical path.
 - sequence assignment is adaptive: below
   ``SMALL_ROUND_THRESHOLD`` rows a lazy single-partition window embeds
   in downstream plans (zero extra jobs); above it, a range-partitioned
@@ -103,7 +104,8 @@ class RoundStats:
     counters: list
     n_new: int = 0                # seen keys added this round
     jobs: list = field(default_factory=list)  # in-flight background commits
-                                  # (seen delta, frontier, Bloom sidecar);
+                                  # (fetch_log, seen delta, frontier, Bloom
+                                  # sidecar);
                                   # the caller waits for them BEFORE
                                   # committing this round's manifest, but
                                   # AFTER the next round's compute — the
@@ -136,8 +138,8 @@ def _budget_col(ctx: RoundContext):
 
 
 class _Job(InheritableThread):
-    """Background Spark action: the round's independent commits (seen
-    delta, frontier, Bloom sidecar) and the carried cut overlap instead of
+    """Background Spark action: the round's independent commits (fetch_log,
+    seen delta, frontier, Bloom sidecar) and the carried cut overlap instead of
     queueing as serial driver actions — the scheduler interleaves their
     tasks. Each commit writes its own directory; the manifest commit (after
     all joins) remains the only visibility point, so failure atomicity is
@@ -210,6 +212,14 @@ def select_polite(
     return sel
 
 
+def _join_quietly(jobs: list) -> None:
+    """Settle background jobs on an error path without raising their own
+    errors (``join``, not ``wait``) — the error in flight is the one to
+    propagate."""
+    for j in jobs:
+        j.join()
+
+
 def run_round(
     spark: SparkSession,
     ctx: RoundContext,
@@ -228,7 +238,34 @@ def run_round(
     """Run round ``rnd``. ``bloom_job`` is the previous round's sidecar
     build (its ``RoundStats.bloom_job``; None on a run's first round). It
     writes this round's sidecar, so the round waits on it before reading
-    that sidecar in any way."""
+    that sidecar in any way.
+
+    If the round raises, every background job it started (a sidecar
+    build, the fetch_log write, the carried cut) is joined before the
+    error propagates: an orphaned writer racing a resumed run's overwrite
+    of the same round dir could leave mixed data under a later manifest."""
+    started: list = []
+    try:
+        return _run_round(
+            spark, ctx, state, frontier, pages, seen, pq, rnd, next_seq,
+            next_fetch_seq, frontier_rows, seen_rows, bloom_job, started,
+        )
+    except BaseException:
+        _join_quietly(started)
+        raise
+
+
+def _run_round(
+    spark, ctx, state, frontier, pages, seen, pq, rnd, next_seq,
+    next_fetch_seq, frontier_rows, seen_rows, bloom_job, started: list,
+) -> RoundStats:
+    """The body of :func:`run_round`; every ``_Job`` it starts goes
+    through ``launch`` into ``started``."""
+
+    def launch(fn) -> _Job:
+        started.append(_Job(fn))
+        return started[-1]
+
     cfg = ctx.cfg
     P = cfg.num_partitions
     small = frontier_rows <= SMALL_ROUND_THRESHOLD
@@ -245,7 +282,7 @@ def run_round(
     sidecar = B.sidecar_dir(state.root, rnd)
     use_bloom = cfg.bloom_min_seen is not None and seen_rows >= cfg.bloom_min_seen
     if use_bloom and bloom_job is None and not B.is_complete(sidecar):
-        bloom_job = _Job(
+        bloom_job = launch(
             lambda: B.build_sidecar(seen, None, sidecar, cfg.bloom_bits)
         )
 
@@ -321,18 +358,6 @@ def run_round(
             FETCH_SCHEMA,
         )
     )
-    # discoveries (acc ⊆ cand) can be orders of magnitude larger than the
-    # incoming frontier (fan-out × links per page), so the single-partition
-    # fast path for 5f gates on the candidate (link-row) count, not
-    # frontier_rows; the count rides the cut as an Observation.
-    obs_c = Observation(f"cand_r{rnd}")
-    fetched = fetched.observe(obs_c, F.count("passes").alias("n"))
-    fetched = cut(fetched, cfg.reliable_checkpoints)
-    dec = fetched.filter(F.col("passes").isNull())
-    cand = fetched.filter(F.col("passes").isNotNull()).select(*CANDIDATE_COLS)
-    cand_count = cand.count() if cfg.reliable_checkpoints else obs_c.get["n"]
-    small_acc = cand_count <= SMALL_ROUND_THRESHOLD
-
     # routing (fatal taxonomy; IsFatalError Crawler.cs:2121-2164 + redirect
     # outcomes Crawler.cs:635-647, 1585-1597):
     #   original url absent                  → http_404 fatal
@@ -347,9 +372,6 @@ def run_round(
     # ``ok`` false + reachable + non-fatal status ⟺ the old
     # "status 200 with NULL html, or retryable status" condition — html
     # itself is gone from the checkpoint, the flag stands in for it.
-    # ONE projection over the page rows classifies every selected row:
-    # fetch_log is its fetch-log columns, the retry rows re-enter the
-    # frontier from it, and the failure count is +1 for every fetch error.
     present = F.col("present")
     status_c = F.col("http_status")
     ok = F.col("ok")
@@ -361,6 +383,34 @@ def run_round(
     c_fatal_status = reachable & (status_c != 200) & fatal_code
     nf = F.col("failures") + 1
     retryable = ~ok & reachable & ~fatal_code & (nf <= cfg.max_retries)
+
+    # per-round stats ride the cut as an Observation — no standalone
+    # aggregate job. Discoveries (acc ⊆ cand) can be orders of magnitude
+    # larger than the incoming frontier (fan-out × links per page), so the
+    # single-partition fast path for 5f gates on the candidate (link-row)
+    # count, not frontier_rows. The selected/good/retry counts are over the
+    # page rows (every selected row is one page row), so ENQUEUE never
+    # waits on the fetch_log write.
+    page = F.col("passes").isNull()
+    stats = [
+        F.count("passes").alias("n_cand"),
+        F.count(F.when(page, 1)).alias("n_sel"),
+        F.count(F.when(page & good, 1)).alias("n_good"),
+        F.count(F.when(page & retryable, 1)).alias("n_retry"),
+    ]
+    obs_c = Observation(f"fetch_r{rnd}")
+    fetched = cut(fetched.observe(obs_c, *stats), cfg.reliable_checkpoints)
+    # reliable mode counts with one aggregate over the checkpoint, as its
+    # acc cut does below
+    v = fetched.agg(*stats).first() if cfg.reliable_checkpoints else obs_c.get
+    n_selected, n_good, n_retry = v["n_sel"], v["n_good"], v["n_retry"]
+    small_acc = v["n_cand"] <= SMALL_ROUND_THRESHOLD
+    dec = fetched.filter(page)
+    cand = fetched.filter(~page).select(*CANDIDATE_COLS)
+
+    # ONE projection over the page rows classifies every selected row:
+    # fetch_log is its fetch-log columns, the retry rows re-enter the
+    # frontier from it, and the failure count is +1 for every fetch error.
     routed = dec.withColumns({
         "status": F.when(good, F.lit("ok"))
         .when(ok, F.col("reject"))
@@ -376,10 +426,9 @@ def run_round(
         .when(c_fatal_status, status_c)
         .otherwise(0).cast("int"),
     })
-    # per-round fetch stats ride the write as Observations — no standalone
-    # aggregate job (every selected row lands in fetch_log exactly once).
+    # the fetch_log write reads only the cut — a background commit from
+    # here on, overlapping ENQUEUE and the next round like the others.
     # The decode stage already NULLs mime/charset/bytes/text off the good rows.
-    obs_f = Observation(f"fetch_r{rnd}")
     fetch_log = routed.select(
         "url", "url_key", "host",
         F.lit(rnd).cast("int").alias("round"),
@@ -387,19 +436,12 @@ def run_round(
         "mime", "charset", "bytes",
         F.col("text").alias("extracted_text"),
         "final_url", "status", "failures", "fatal",
-    ).observe(
-        obs_f,
-        F.count(F.lit(1)).alias("n_sel"),
-        F.count(F.when(F.col("status") == "ok", 1)).alias("n_good"),
-        F.count(F.when(F.col("status") == "retryable", 1)).alias("n_retry"),
     )
-    state.write_table("fetch_log", rnd, fetch_log)
+    fetch_log_job = launch(lambda: state.write_table("fetch_log", rnd, fetch_log))
 
     retry_rows = routed.filter(F.col("status") == "retryable").select(*FRONTIER_COLS)
 
     # ---------------- 5. ENQUEUE ----------------
-    v = obs_f.get
-    n_selected, n_good, n_retry = v["n_sel"], v["n_good"], v["n_retry"]
     next_fetch_seq += n_selected
     counters += [
         (rnd, "select", "selected", n_selected),
@@ -435,7 +477,7 @@ def run_round(
     # below — materialize it CONCURRENTLY with the acc checkpoint; the next
     # round's frontier is then a zero-cost union of the two cuts
     carried_slot: dict = {}
-    carried_job = _Job(
+    carried_job = launch(
         lambda: carried_slot.update(df=cut(carried, cfg.reliable_checkpoints))
     )
 
@@ -617,13 +659,14 @@ def run_round(
     # builds nothing — an update over an incomplete sidecar would read its
     # missing partitions as zeros and commit false negatives.
     jobs = [
-        _Job(lambda: state.write_table("seen", rnd + 1, seen_delta)),
-        _Job(lambda: state.write_table("frontier", rnd + 1, next_frontier)),
+        fetch_log_job,
+        launch(lambda: state.write_table("seen", rnd + 1, seen_delta)),
+        launch(lambda: state.write_table("frontier", rnd + 1, next_frontier)),
     ]
     next_bloom_job = None
     if use_bloom:
         next_sidecar = B.sidecar_dir(state.root, rnd + 1)
-        next_bloom_job = _Job(lambda: B.build_sidecar(
+        next_bloom_job = launch(lambda: B.build_sidecar(
             seen_delta, sidecar, next_sidecar, cfg.bloom_bits
         ))
         jobs.append(next_bloom_job)

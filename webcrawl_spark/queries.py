@@ -862,8 +862,9 @@ def q_sitemap_parse(spark, sf_dir):
 def q_sitemap_recrawl(spark, sf_dir):
     """Sitemap-driven recrawl (operators/sitemap.sitemap_recrawl): the
     parsed <urlset> entries joined against a stored fetch-state table —
-    never-fetched locs are 'new', lastmod-newer (or lastmod-absent:
-    conservative policy) locs 'refetch', the rest 'fresh'. Fetch state
+    never-fetched locs are 'new', locs fetched on or after lastmod
+    'fresh', the rest 'refetch' (conservative policy: also when the
+    dates do not compare). Fetch state
     synthesized deterministically: half the locs (md5 parity) carry a
     fetch date, split between one far older and one far newer than any
     advertised lastmod, so every action branch is exercised."""
@@ -3763,9 +3764,11 @@ f AS (SELECT loc,
       WHERE {_sr_h} < 2)
 SELECT u.loc, u.lastmod, f.last_fetch,
        CASE WHEN f.last_fetch IS NULL THEN 'new'
-            WHEN u.lastmod IS NULL THEN 'refetch'
-            WHEN u.lastmod > f.last_fetch THEN 'refetch'
-            ELSE 'fresh' END AS action
+            WHEN TRY_CAST(u.lastmod AS DATE) > TRY_CAST(f.last_fetch AS DATE)
+              THEN 'refetch'
+            WHEN TRY_CAST(u.lastmod AS DATE) <= TRY_CAST(f.last_fetch AS DATE)
+              THEN 'fresh'
+            ELSE 'refetch' END AS action
 FROM u LEFT JOIN f ON f.loc = u.loc
 """
 
