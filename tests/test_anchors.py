@@ -147,3 +147,22 @@ def test_anchor_postings_and_search(spark):
     ).collect()
     assert top[0].id == "http://t/a" and top[0].n_hits == 2
     assert all(r.id != "http://t/c" for r in top)
+
+
+def test_anchor_postings_drops_empty_targets(spark):
+    """An anchor with ``href=""`` names no target: it yields no posting, so
+    no empty-string id becomes retrievable. Relative hrefs still index
+    under their raw text (they are not resolved against the source)."""
+    from webcrawl_spark.functions.anchors import anchor_postings
+
+    pages = spark.createDataFrame(
+        [
+            ("http://s1.test/", '<a href="">empty target</a>'
+                                '<a href="http://t/a">kept</a>'
+                                '<a href="rel.html">relative</a>'),
+            ("http://s2.test/", None),
+        ],
+        "url string, html string",
+    )
+    ids = {r.id for r in anchor_postings(pages).collect()}
+    assert ids == {"http://t/a", "rel.html"}

@@ -3,12 +3,18 @@
 The kill/resume golden (tests/test_resume_determinism.py) stops BETWEEN
 rounds — a graceful shutdown. This test dies with ``os._exit`` at the worst
 moment the commit protocol allows: after a round's compute returned but
-while its background state writes are (possibly) still in flight and its
-manifest is UNCOMMITTED (commits lag compute by one round; plans/crawl.py
-``run`` docstring). Resume from the surviving manifests must replay to a
-trace byte-identical to an uninterrupted run — partially-written round
+while its background state writes are still in flight and its manifest is
+UNCOMMITTED (each round's committer publishes its manifest only once all
+of that round's writes land, in round order; plans/crawl.py ``run``
+docstring). Every manifest that did commit must name complete round dirs,
+and resume from the surviving manifests must replay to a trace
+byte-identical to an uninterrupted run — partially-written round
 directories are invisible until their manifest exists and are simply
 overwritten on replay (plans/state.py layout contract).
+
+The other tests here pin the commit protocol itself: no ``_Job``
+(committers included) outlives ``run()`` on an error path, and a round's
+manifest is committed while later rounds still compute.
 """
 
 import os
@@ -27,6 +33,18 @@ from webcrawl_spark.fixtures.gen import tree
 from webcrawl_spark.plans.crawl import SparkCrawler
 
 state_dir, n_rounds = sys.argv[1], int(sys.argv[2])
+
+# round 1's fetch_log write never lands before the crash, so round 1's
+# manifest (round-2.json) is certainly uncommitted at os._exit
+import time
+from webcrawl_spark.plans.state import CrawlState
+_write = CrawlState.write_table
+def slow_write(self, table, rnd, df):
+    if table == "fetch_log" and rnd == 1:
+        time.sleep(600)
+    _write(self, table, rnd, df)
+CrawlState.write_table = slow_write
+
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.ui.enabled", "false")
@@ -36,14 +54,17 @@ fx = tree(branching=2, depth=2)
 pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
 c = SparkCrawler(spark, pages, fx.seeds, state_dir,
                  fx.config.with_(num_partitions=4))
-m = c.state.latest_manifest()
-if m is None:
-    m = c._init_seeds()
-carry = None
+m, carry = c._init_seeds()
 for _ in range(n_rounds):
     m, carry = c._run_one(m, carry)
+# round 0's writes are not held back: its manifest commits while round 1's
+# writes are still in flight
+done = os.path.join(state_dir, "_manifests", "round-1.json")
+deadline = time.monotonic() + 120
+while not os.path.exists(done) and time.monotonic() < deadline:
+    time.sleep(0.05)
 # hard crash: no drain — the last round's manifest is uncommitted and its
-# background writes may be mid-flight. os._exit skips every destructor.
+# background writes are mid-flight. os._exit skips every destructor.
 os._exit(137)
 """
 
@@ -59,10 +80,19 @@ def test_hard_crash_resume_identical(spark, tmp_path):
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert p.returncode == 137, p.stderr[-2000:]
-    # the crashed run computed 2 rounds but could only have committed round 1
-    # (commit lags by one); round 2's dirs may exist, its manifest must not
+    # the crashed run computed rounds 0 and 1; round 1's fetch_log write
+    # was held back, so its manifest (round-2.json) cannot exist, and every
+    # manifest that did commit names round dirs whose writes all landed
     committed = sorted(os.listdir(os.path.join(state, "_manifests")))
-    assert "round-2.json" not in committed
+    assert committed == ["round-0.json", "round-1.json"]
+    for name in committed:
+        k = int(name[len("round-"):-len(".json")])
+        dirs = [("frontier", k), ("seen", k)]
+        if k > 0:
+            dirs.append(("fetch_log", k - 1))
+        for table, rnd in dirs:
+            assert os.path.exists(os.path.join(
+                state, table, f"round={rnd}", "_SUCCESS")), (name, table, rnd)
 
     fx = tree(branching=2, depth=2)
     pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
@@ -84,10 +114,11 @@ def test_hard_crash_resume_identical(spark, tmp_path):
 
 def test_run_exception_joins_carry_threads(spark, tmp_path):
     """A round that THROWS mid-run() must not orphan the carried round's
-    background writer threads (two live writers on one round dir could mix
-    data under a later-committed manifest) and must not commit the failed
-    round's manifest; a fresh crawler on the same state resumes to the
-    uninterrupted trace."""
+    committer or its background writer threads (two live writers on one
+    round dir could mix data under a later-committed manifest) and must not
+    commit the failed round's manifest; the round before it, whose writes
+    all landed, is committed; a fresh crawler on the same state resumes to
+    the uninterrupted trace."""
     import threading
 
     import pytest
@@ -111,15 +142,17 @@ def test_run_exception_joins_carry_threads(spark, tmp_path):
     before = {t for t in threading.enumerate()}
     with pytest.raises(RuntimeError, match="injected round failure"):
         c.run()
-    # no _Job writer threads outlive run()
+    # no _Job (writer or committer) outlives run()
     leaked = [
         t for t in threading.enumerate()
         if t not in before and t.is_alive() and type(t).__name__ == "_Job"
     ]
     assert leaked == []
-    # round 1 computed but its manifest must NOT have been committed
+    # round 0's writes landed, so its manifest is committed; round 1 failed
+    # and its manifest must NOT have been committed
     committed = sorted(os.listdir(os.path.join(state, "_manifests")))
-    assert "round-1.json" not in committed
+    assert "round-1.json" in committed
+    assert "round-2.json" not in committed
 
     resumed = SparkCrawler(spark, pages, fx.seeds, state, cfg)
     resumed.run()
@@ -168,3 +201,78 @@ def test_round_exception_joins_its_own_jobs(spark, tmp_path, monkeypatch):
         if t not in before and t.is_alive() and type(t).__name__ == "_Job"
     ]
     assert leaked == []
+
+
+def _wait_for(path: str, timeout: float) -> bool:
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not os.path.exists(path):
+        if time.monotonic() > deadline:
+            return False
+        time.sleep(0.05)
+    return True
+
+
+def test_round_commits_before_next_round_returns(spark, tmp_path, monkeypatch):
+    """A round's manifest is committed as soon as its writes land, while the
+    next round still computes: round k's manifest (``round-{k+1}.json``)
+    appears before round k+1's ``run_round`` returns."""
+    from webcrawl_spark.plans import crawl as C
+
+    fx = tree(branching=2, depth=2)
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    state = str(tmp_path / "early")
+    mdir = os.path.join(state, "_manifests")
+    real = C.run_round
+    seen_early = []
+
+    def spy(*args, **kwargs):
+        stats = real(*args, **kwargs)
+        k = args[7]
+        if k > 0:
+            # round k-1's manifest, awaited before round k's run_round returns
+            seen_early.append(
+                (k, _wait_for(os.path.join(mdir, f"round-{k}.json"), 60))
+            )
+        return stats
+
+    monkeypatch.setattr(C, "run_round", spy)
+    m = SparkCrawler(spark, pages, fx.seeds, state,
+                     fx.config.with_(num_partitions=4)).run()
+    assert m.next_round >= 3
+    assert seen_early and all(ok for _, ok in seen_early), seen_early
+
+
+def test_fresh_crawl_round0_reads_seed_frames(spark, tmp_path, monkeypatch):
+    """A fresh crawl hands round 0 the in-memory seed frames: it never reads
+    the round-0 frontier or seen table back, and the seed manifest is
+    committed before round 0's."""
+    from webcrawl_spark.plans.state import CrawlState
+
+    reads, commits = [], []
+    real_rf, real_rs = CrawlState.read_frontier, CrawlState.read_seen
+    real_commit = CrawlState.commit
+
+    def read_frontier(self, rnd):
+        reads.append(("frontier", rnd))
+        return real_rf(self, rnd)
+
+    def read_seen(self, upto_round):
+        reads.append(("seen", upto_round))
+        return real_rs(self, upto_round)
+
+    def commit(self, manifest):
+        commits.append(manifest.next_round)
+        real_commit(self, manifest)
+
+    monkeypatch.setattr(CrawlState, "read_frontier", read_frontier)
+    monkeypatch.setattr(CrawlState, "read_seen", read_seen)
+    monkeypatch.setattr(CrawlState, "commit", commit)
+    fx = tree(branching=2, depth=2)
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    c = SparkCrawler(spark, pages, fx.seeds, str(tmp_path / "seeds"),
+                     fx.config.with_(num_partitions=4))
+    m = c.run(max_rounds=2)
+    assert reads == []
+    assert commits == list(range(m.next_round + 1))

@@ -18,7 +18,7 @@ from webcrawl_spark.fixtures import gen
 from webcrawl_spark.operators import bloom as B
 from webcrawl_spark.plans import round as round_plan
 
-from .golden import run_and_check
+from .golden import run_and_check, run_spark
 
 
 def test_tree_golden(spark, tmp_path):
@@ -105,13 +105,23 @@ def test_post_golden(spark, tmp_path):
 
 def test_reliable_checkpoints_golden(spark, tmp_path):
     """Cluster-mode lineage cuts (DataFrame.checkpoint into the state dir)
-    produce the identical golden trace."""
+    produce the identical golden trace, and the round counts their cuts'
+    Observations report equal a local-mode crawl's, counter for counter."""
     fx = gen.tree(branching=2, depth=3)
-    run_and_check(
+    reliable = run_and_check(
         spark,
         gen.Fixture("tree_rckpt", fx.pages, fx.seeds,
                     fx.config.with_(reliable_checkpoints=True)),
         tmp_path,
+    )
+    local = run_spark(spark, fx, str(tmp_path / "state_local"))
+
+    def counters(c):
+        return [m.counters for m in c.state.manifests()]
+
+    assert counters(reliable) == counters(local)
+    assert any(
+        c[2] == "new_links" and c[3] > 0 for cs in counters(local) for c in cs
     )
 
 

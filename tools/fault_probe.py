@@ -113,7 +113,9 @@ def _kill_tree(pid):
 
 def _run_crawl(tag, kill_worker=None, kill_after_round=2):
     """Run the crawl child; optionally kill a worker once the crawl's state
-    dir holds the manifest of round k (round k-1 committed, k underway)."""
+    dir holds ``round-k.json``: round k-1's writes have all landed and its
+    manifest is committed, and round k is computing (or done computing
+    with its writes in flight)."""
     script = "/tmp/fault_child.py"
     with open(script, "w") as f:
         f.write(_CHILD)

@@ -115,13 +115,15 @@ def anchor_postings(
     ``textstats.bm25_from_postings`` ranks targets by anchor relevance
     directly, and the table merges additively across crawls (tf sums).
     Targets whose every inbound anchor is empty get no postings (no
-    describable text → not retrievable by this field).
+    describable text → not retrievable by this field), and neither does
+    an empty ``href=""`` (it names no target). Relative hrefs index under
+    their raw text; they are not resolved against the source url.
 
     100-TB shape: tag scan + field extraction + tokenization are
     map-side codegen; the only exchange is the vocabulary-bounded
     (target, term) aggregate with map-side partial combine.
     """
-    a = extract_anchors(pages, html_col, url_col)
+    a = extract_anchors(pages, html_col, url_col).filter(F.col("target") != "")
     return (
         a.select(
             F.col("target").alias("id"),

@@ -29,7 +29,7 @@ from ..kernels.filters import compile_uri_filters
 from ..kernels.urlnorm import canonicalize
 from ..operators import bloom as B
 from .round import (
-    FRONTIER_COLS, RoundContext, _join_quietly, host_hash_col, run_round,
+    FRONTIER_COLS, RoundContext, _Job, _join_quietly, host_hash_col, run_round,
 )
 from .state import CrawlState, Manifest
 
@@ -168,10 +168,12 @@ class SparkCrawler:
             "host_hash", host_hash_col(self.cfg.num_partitions)
         ).select(*FRONTIER_COLS)
 
-    def _init_seeds(self) -> Manifest:
+    def _init_seeds(self) -> tuple:
         """Round-0 frontier from the seed list plus user POST resources
         (driver-side: seeds are tiny by definition; all per-row logic still
-        runs the shared kernels)."""
+        runs the shared kernels). Returns the seed manifest and round 0's
+        carry: the seed frames themselves, with a committer that publishes
+        the manifest once both seed writes land."""
         cfg = self.cfg
         c = self._canonicalize(self.seeds)
         seen_keys: set = set()
@@ -219,22 +221,40 @@ class SparkCrawler:
             F.lit(0).cast("int").alias("first_depth"),
             F.lit(0).cast("int").alias("first_round"),
         )
-        # the two seed commits are independent — run them concurrently
-        from .round import _Job
-
-        jobs = [
-            _Job(lambda: self.state.write_table("frontier", 0, frontier)),
-            _Job(lambda: self.state.write_table("seen", 0, seen_delta)),
-        ]
-        for j in jobs:
-            j.wait()
         m = Manifest(
             next_round=0, next_seq=seq, next_fetch_seq=0, frontier_rows=len(rows),
             done=(len(rows) == 0),
             seen_rows=len(first),   # unique keys (POST force-dups collapse)
         )
-        self.state.commit(m)
-        return m
+        # round 0 reads the seed frames themselves, not their parquet
+        jobs = [
+            _Job(lambda: self.state.write_table("frontier", 0, frontier)),
+            _Job(lambda: self.state.write_table("seen", 0, seen_delta)),
+        ]
+        return m, {
+            "frontier": frontier, "seen": seen_delta, "bloom_job": None,
+            "committer": self._committer(None, jobs, m),
+        }
+
+    def _committer(self, prev, jobs: list, manifest: Manifest) -> _Job:
+        """Commit ``manifest`` in the background once the previous round's
+        committer ``prev`` and every write in ``jobs`` have landed. On a
+        failure it still joins every job it waits on, so a finished
+        committer leaves no earlier committer or write running."""
+
+        def commit():
+            try:
+                if prev is not None:
+                    prev.wait()
+                for j in jobs:
+                    j.wait()
+            except BaseException:
+                _join_quietly(jobs)
+                raise
+            self.state.commit(manifest)
+            B.gc_sidecars(self.state.root, manifest.next_round)
+
+        return _Job(commit)
 
     # ------------------------------------------------------------------
     def run(self, max_rounds: Optional[int] = None) -> Manifest:
@@ -242,19 +262,23 @@ class SparkCrawler:
 
         ``max_rounds`` limits *this call* (kill/resume tests); the config's
         ``max_rounds`` bounds the whole crawl.
+
+        Each round's manifest is committed by its own background committer
+        as soon as that round's writes land, in round order; the next
+        round's compute never waits for it. ``run`` returns once the last
+        committer has finished, so the on-disk state is current whenever
+        ``run`` is not executing (resume, accessors, enqueue/requeue APIs).
         """
         m = self.state.latest_manifest()
-        if m is None:
-            m = self._init_seeds()
-        rounds_done = 0
-        # carry = the previous round's in-flight state: its background
-        # commits (still running — they overlap the next round's compute),
-        # its uncommitted manifest, and the in-memory frontier/seen views
-        # the next round consumes instead of reading the writes back.
-        # Commits therefore lag compute by one round; _drain settles the
-        # tail before returning, so the on-disk state is current whenever
-        # run() is not executing (resume, accessors, enqueue/requeue APIs).
         carry = None
+        if m is None:
+            m, carry = self._init_seeds()
+        rounds_done = 0
+        # carry = the previous round's in-flight state: its committer (which
+        # waits for that round's background writes), and the in-memory
+        # frontier/seen views (plus the Bloom build writing the next
+        # sidecar) that the next round consumes instead of reading the
+        # writes back. The seeds hand round 0 a carry of the same shape.
         try:
             while (
                 not m.done
@@ -266,39 +290,38 @@ class SparkCrawler:
                 rounds_done += 1
             if carry is not None:
                 self._drain(carry)
-                carry = None
             return m
         finally:
-            # Error path: settle the carried round's writer threads before
-            # propagating — an orphaned _Job racing a later run()'s
-            # mode('overwrite') writes to the same fetch_log/seen/frontier/
-            # bloom round dirs could leave mixed data under a later-committed
-            # manifest.
-            # The manifest is deliberately NOT committed here (commit is
-            # success-only, in _drain): the uncommitted round replays
-            # identically on resume, which the fault probes verify.
+            # Error path: the newest committer joins every earlier committer
+            # and every write they wait on — an orphaned _Job racing a later
+            # run()'s mode('overwrite') writes to the same round dirs could
+            # leave mixed data under a later-committed manifest. A round
+            # whose writes all landed is still committed; the failed round's
+            # manifest never is, so it replays identically on resume.
             if carry is not None:
-                _join_quietly(carry["stats"].jobs)
+                carry["committer"].join()
 
     def _drain(self, carry) -> None:
-        """Wait for a round's background commits, then make it visible."""
-        for j in carry["stats"].jobs:
-            j.wait()
-        self.state.commit(carry["manifest"])
-        B.gc_sidecars(self.state.root, carry["manifest"].next_round)
+        """Wait until the carried round's manifest is committed."""
+        carry["committer"].wait()
 
     def _run_one(self, m: Manifest, carry):
         k = m.next_round
         st = self.state
         if carry is None:
-            # first round of this run(): state comes from the committed tables
+            # first round of a resumed run(): state comes from the committed
+            # tables
             frontier = st.read_frontier(k)
             seen = st.read_seen(k)
+            prev = None
         else:
-            # chained from the previous round's checkpoints — the background
-            # writes of the same rows are still in flight and are NOT read
-            frontier = carry["stats"].next_frontier
-            seen = carry["seen"]
+            # chained from the previous round's in-memory frames — the
+            # background writes of the same rows may still be in flight and
+            # are NOT read
+            frontier, seen = carry["frontier"], carry["seen"]
+            prev = carry["committer"]
+            if not prev.is_alive():
+                prev.wait()   # a failed commit stops the crawl here
         pq = (
             seen.groupBy("host", "path").agg(F.count(F.lit(1)).alias("n"))
             if self.cfg.max_query_strings_per_file is not None
@@ -321,14 +344,9 @@ class SparkCrawler:
             # post-requeue-removal state) fall back to next_seq, which can
             # only overstate (force-enqueues reuse seen keys)
             seen_rows=m.seen_rows if m.seen_rows is not None else m.next_seq,
-            bloom_job=None if carry is None else carry["stats"].bloom_job,
+            bloom_job=None if carry is None else carry["bloom_job"],
         )
         try:
-            # the PREVIOUS round's background commits have now fully
-            # overlapped this round's compute — settle them and make that
-            # round visible
-            if carry is not None:
-                self._drain(carry)
             nm = Manifest(
                 next_round=k + 1,
                 next_seq=stats.next_seq,
@@ -341,15 +359,16 @@ class SparkCrawler:
                 ),
             )
             return nm, {
-                "stats": stats,
-                "manifest": nm,
+                "frontier": stats.next_frontier,
                 "seen": seen.unionByName(stats.seen_delta),
+                "bloom_job": stats.bloom_job,
+                "committer": self._committer(prev, stats.jobs, nm),
             }
         except BaseException:
             # THIS round's background writers started inside run_round but
-            # are not yet in any carry the caller could settle — join them
-            # here so a failed drain of the previous round can't orphan them
-            # (their manifest is never committed, so the round replays).
+            # no committer owns them yet — join them here so they cannot be
+            # orphaned (their manifest is never committed, so the round
+            # replays).
             _join_quietly(stats.jobs)
             raise
 

@@ -105,11 +105,10 @@ class RoundStats:
     n_new: int = 0                # seen keys added this round
     jobs: list = field(default_factory=list)  # in-flight background commits
                                   # (fetch_log, seen delta, frontier, Bloom
-                                  # sidecar);
-                                  # the caller waits for them BEFORE
-                                  # committing this round's manifest, but
-                                  # AFTER the next round's compute — the
-                                  # writes overlap it
+                                  # sidecar); the caller's committer waits
+                                  # for them, then commits this round's
+                                  # manifest — the next round's compute
+                                  # never waits, the writes overlap it
     next_frontier: DataFrame = None  # checkpointed frontier entering the
                                      # next round (same rows the background
                                      # frontier write persists)
@@ -399,10 +398,10 @@ def _run_round(
         F.count(F.when(page & retryable, 1)).alias("n_retry"),
     ]
     obs_c = Observation(f"fetch_r{rnd}")
+    # the Observation fires on both kinds of cut (localCheckpoint and the
+    # reliable checkpoint(eager=True)), counting each row once
     fetched = cut(fetched.observe(obs_c, *stats), cfg.reliable_checkpoints)
-    # reliable mode counts with one aggregate over the checkpoint, as its
-    # acc cut does below
-    v = fetched.agg(*stats).first() if cfg.reliable_checkpoints else obs_c.get
+    v = obs_c.get
     n_selected, n_good, n_retry = v["n_sel"], v["n_good"], v["n_retry"]
     small_acc = v["n_cand"] <= SMALL_ROUND_THRESHOLD
     dec = fetched.filter(page)
@@ -610,7 +609,7 @@ def _run_round(
     obs_n = Observation(f"acc_r{rnd}")
     acc = acc.observe(obs_n, F.count(F.lit(1)).alias("n"))
     acc = cut(acc, cfg.reliable_checkpoints)
-    n_new = acc.count() if cfg.reliable_checkpoints else obs_n.get["n"]
+    n_new = obs_n.get["n"]
     if bloom_flagged is not None:
         bloom_flagged.unpersist()
     seen.unpersist()
@@ -648,8 +647,8 @@ def _run_round(
 
     # the remaining commits (seen delta, frontier snapshot, Bloom sidecar)
     # all read only checkpointed inputs and write independent directories —
-    # they launch here and OVERLAP the next round's compute; the caller
-    # waits for them before committing this round's manifest (the per-round
+    # they launch here and OVERLAP the next round's compute; the caller's
+    # committer commits this round's manifest once they land (the per-round
     # serial-action floor is what caps scaling efficiency at small rounds).
     # The sidecar update is executor-side: the seen delta ORs into
     # per-partition bitset files and untouched partitions carry forward as

@@ -3739,7 +3739,7 @@ a AS (
 toks AS (
   SELECT target AS id,
          unnest(string_split_regex(lower(trim(anchor)), '\\s+')) AS term
-  FROM a),
+  FROM a WHERE target <> ''),
 t2 AS (SELECT id, term FROM toks WHERE term <> ''),
 {_bm25_chain(_anc_terms)},
 r AS (SELECT id, CAST(n_hits AS BIGINT) AS n_hits,
