@@ -227,15 +227,15 @@ def test_round_commits_before_next_round_returns(spark, tmp_path, monkeypatch):
     real = C.run_round
     seen_early = []
 
-    def spy(*args, **kwargs):
-        stats = real(*args, **kwargs)
-        k = args[7]
+    def spy(spark, ctx, state, pages, m, carry):
+        out = real(spark, ctx, state, pages, m, carry)
+        k = m.next_round
         if k > 0:
             # round k-1's manifest, awaited before round k's run_round returns
             seen_early.append(
                 (k, _wait_for(os.path.join(mdir, f"round-{k}.json"), 60))
             )
-        return stats
+        return out
 
     monkeypatch.setattr(C, "run_round", spy)
     m = SparkCrawler(spark, pages, fx.seeds, state,

@@ -6,8 +6,8 @@ untouched (SURVEY.md §2 ops 2, 4, 5, 9):
 - CaseSensitivePaths=False lower-cases the dedup key (Crawler.cs:2621-2622)
 - DomainNavigation SameDomain / SameTLD / Everywhere (Crawler.cs:2763-2801)
 - DirectoryNavigation Up / UpAndDown (Crawler.cs:2885-2905)
-- want_html off rejects nothing (only NonHtml gates types); want_nonhtml
-  off rejects binary (Crawler.cs:3122-3125)
+- want_nonhtml off rejects binary (Crawler.cs:3122-3125); only NonHtml
+  gates types during the crawl
 - depth-limit exemption for external supporting resources
   (Crawler.cs:1475-1484)
 """

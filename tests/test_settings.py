@@ -36,7 +36,6 @@ def test_roundtrip_every_knob(tmp_path):
         max_file_size=1234,
         directory_navigation="UpAndDown",
         domain_navigation="SameDomain",
-        want_html=False,
         want_nonhtml=False,
         external_resources=False,
         prioritize_nonhtml=True,
@@ -83,7 +82,7 @@ def test_older_file_gets_defaults_and_ignores_unknown(tmp_path):
         json.dump({"version": 0, "depth_limit": 2, "retired_knob": 99,
                    "small_round_threshold": 10, "bloom_fpp": 0.01,
                    "bloom_enabled": False, "rank_priority": True,
-                   "robots_enabled": False}, f)
+                   "robots_enabled": False, "want_html": False}, f)
     cfg = load_settings(p)
     assert cfg.depth_limit == 2
     assert cfg.max_retries == CrawlConfig().max_retries

@@ -38,6 +38,8 @@ def test_remove_uris_with_requeue(spark, tmp_path):
     # so it stays unfetched; re-adding via a fresh crawl driver seeded at
     # p2 re-enqueues it (seen no longer blocks).
     assert c.remove_uris(r"/p2\.html", allow_requeue=True) == 1
+    # the requeue removal counts the consolidated seen set it writes
+    assert c.state.latest_manifest().seen_rows == c.seen().count()
     m = c.run()
     urls = {r["url"].rsplit("/", 1)[-1] for r in c.fetched().collect()}
     assert "p2.html" not in urls

@@ -31,7 +31,6 @@ class CrawlConfig:
     # --- scope rules (Crawler.cs:19-52, 470-496) ---
     directory_navigation: str = "Down"              # Same|Up|Down|UpAndDown
     domain_navigation: str = "SameHostName"         # SameHostName|SameDomain|SameTLD|Everywhere
-    want_html: bool = True                          # DownloadFlags.Html
     want_nonhtml: bool = True                       # DownloadFlags.NonHtml
     external_resources: bool = True                 # DownloadFlags.ExternalResources
     prioritize_nonhtml: bool = False                # DownloadFlags.PrioritizeNonHtml

@@ -10,12 +10,13 @@ identical future trace (north_rule resumability).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional
 
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -29,7 +30,8 @@ from ..kernels.filters import compile_uri_filters
 from ..kernels.urlnorm import canonicalize
 from ..operators import bloom as B
 from .round import (
-    FRONTIER_COLS, RoundContext, _Job, _join_quietly, host_hash_col, run_round,
+    FRONTIER_COLS, Carry, RoundContext, _Job, commit_when_landed, host_hash_col,
+    run_round,
 )
 from .state import CrawlState, Manifest
 
@@ -231,30 +233,9 @@ class SparkCrawler:
             _Job(lambda: self.state.write_table("frontier", 0, frontier)),
             _Job(lambda: self.state.write_table("seen", 0, seen_delta)),
         ]
-        return m, {
-            "frontier": frontier, "seen": seen_delta, "bloom_job": None,
-            "committer": self._committer(None, jobs, m),
-        }
-
-    def _committer(self, prev, jobs: list, manifest: Manifest) -> _Job:
-        """Commit ``manifest`` in the background once the previous round's
-        committer ``prev`` and every write in ``jobs`` have landed. On a
-        failure it still joins every job it waits on, so a finished
-        committer leaves no earlier committer or write running."""
-
-        def commit():
-            try:
-                if prev is not None:
-                    prev.wait()
-                for j in jobs:
-                    j.wait()
-            except BaseException:
-                _join_quietly(jobs)
-                raise
-            self.state.commit(manifest)
-            B.gc_sidecars(self.state.root, manifest.next_round)
-
-        return _Job(commit)
+        return m, Carry(frontier, seen_delta, committer=_Job(
+            lambda: commit_when_landed(self.state, None, jobs, m)
+        ))
 
     # ------------------------------------------------------------------
     def run(self, max_rounds: Optional[int] = None) -> Manifest:
@@ -263,7 +244,9 @@ class SparkCrawler:
         ``max_rounds`` limits *this call* (kill/resume tests); the config's
         ``max_rounds`` bounds the whole crawl.
 
-        Each round's manifest is committed by its own background committer
+        Each round is one ``run_round`` call that takes the manifest and
+        the carry and returns the next ones. The round's background
+        committer, started by ``run_round``, commits the returned manifest
         as soon as that round's writes land, in round order; the next
         round's compute never waits for it. ``run`` returns once the last
         committer has finished, so the on-disk state is current whenever
@@ -274,11 +257,12 @@ class SparkCrawler:
         if m is None:
             m, carry = self._init_seeds()
         rounds_done = 0
-        # carry = the previous round's in-flight state: its committer (which
+        # carry = the previous round's in-flight Carry: its committer (which
         # waits for that round's background writes), and the in-memory
         # frontier/seen views (plus the Bloom build writing the next
         # sidecar) that the next round consumes instead of reading the
-        # writes back. The seeds hand round 0 a carry of the same shape.
+        # writes back. The seeds hand round 0 one too; a resumed run starts
+        # with None and reads the committed tables.
         try:
             while (
                 not m.done
@@ -299,78 +283,20 @@ class SparkCrawler:
             # whose writes all landed is still committed; the failed round's
             # manifest never is, so it replays identically on resume.
             if carry is not None:
-                carry["committer"].join()
+                carry.committer.join()
 
-    def _drain(self, carry) -> None:
+    def _drain(self, carry: Carry) -> None:
         """Wait until the carried round's manifest is committed."""
-        carry["committer"].wait()
+        carry.committer.wait()
 
-    def _run_one(self, m: Manifest, carry):
-        k = m.next_round
-        st = self.state
+    def _run_one(self, m: Manifest, carry: Optional[Carry]):
         if carry is None:
-            # first round of a resumed run(): state comes from the committed
-            # tables
-            frontier = st.read_frontier(k)
-            seen = st.read_seen(k)
-            prev = None
-        else:
-            # chained from the previous round's in-memory frames — the
-            # background writes of the same rows may still be in flight and
-            # are NOT read
-            frontier, seen = carry["frontier"], carry["seen"]
-            prev = carry["committer"]
-            if not prev.is_alive():
-                prev.wait()   # a failed commit stops the crawl here
-        pq = (
-            seen.groupBy("host", "path").agg(F.count(F.lit(1)).alias("n"))
-            if self.cfg.max_query_strings_per_file is not None
-            else None
-        )
-
-        stats = run_round(
-            self.spark,
-            self.ctx,
-            st,
-            frontier,
-            self.eff_pages,
-            seen,
-            pq,
-            k,
-            m.next_seq,
-            m.next_fetch_seq,
-            m.frontier_rows,
-            # the true seen count from the manifest; old manifests (or a
-            # post-requeue-removal state) fall back to next_seq, which can
-            # only overstate (force-enqueues reuse seen keys)
-            seen_rows=m.seen_rows if m.seen_rows is not None else m.next_seq,
-            bloom_job=None if carry is None else carry["bloom_job"],
-        )
-        try:
-            nm = Manifest(
-                next_round=k + 1,
-                next_seq=stats.next_seq,
-                next_fetch_seq=stats.next_fetch_seq,
-                frontier_rows=stats.frontier_rows,
-                done=(stats.frontier_rows == 0),
-                counters=[list(c) for c in stats.counters],
-                seen_rows=(
-                    None if m.seen_rows is None else m.seen_rows + stats.n_new
-                ),
-            )
-            return nm, {
-                "frontier": stats.next_frontier,
-                "seen": seen.unionByName(stats.seen_delta),
-                "bloom_job": stats.bloom_job,
-                "committer": self._committer(prev, stats.jobs, nm),
-            }
-        except BaseException:
-            # THIS round's background writers started inside run_round but
-            # no committer owns them yet — join them here so they cannot be
-            # orphaned (their manifest is never committed, so the round
-            # replays).
-            _join_quietly(stats.jobs)
-            raise
+            # first round of a resumed run(): the committed tables
+            k = m.next_round
+            carry = Carry(self.state.read_frontier(k), self.state.read_seen(k))
+        elif not carry.committer.is_alive():
+            carry.committer.wait()   # a failed commit stops the crawl here
+        return run_round(self.spark, self.ctx, self.state, self.eff_pages, m, carry)
 
     # ---------------- result accessors ----------------
     def _m(self) -> Manifest:
@@ -414,135 +340,117 @@ class SparkCrawler:
 
     # ---------------- frontier surgery between runs ----------------
     def enqueue_uri(self, url: str, post_data=None, force: bool = True) -> bool:
-        return _enqueue_uri(self, url, post_data, force)
+        """EnqueueUri(uri, postData[, force]) between runs (Crawler.cs:1081-1101;
+        the public two-arg overload forces). Appends one depth-0 entry to the
+        current frontier snapshot and re-commits the manifest; with
+        ``force=False`` an already-seen key is dropped (Service.Enqueue,
+        Crawler.cs:2301-2320). Returns True if enqueued."""
+        st = self.state
+        m = self._m()
+        k = m.next_round
+        r = self._canonicalize([url]).iloc[0]
+        if not self._seed_allowed(r):
+            return False
+        seen_new = (
+            st.read_seen(k)
+            .filter((F.col("host") == r.host) & (F.col("url_key") == r.url_key))
+            .isEmpty()
+        )
+        if not force and not seen_new:
+            return False
+        entry = self._frontier_df([self._entry_row(r, m.next_seq, post_data)])
+        frontier = st.read_frontier(k).unionByName(entry).localCheckpoint(eager=True)
+        st.write_table("frontier", k, frontier)
+        if seen_new:
+            import os as _os
+            import shutil as _shutil
+
+            delta = entry.select(
+                "host", "host_hash", "url_key", "path", "query",
+                F.col("depth").alias("first_depth"),
+                F.lit(k).cast("int").alias("first_round"),
+            )
+            d = st._dir("seen", k)
+            if _os.path.exists(d):
+                delta = self.spark.read.parquet(d).unionByName(delta)
+            delta = delta.localCheckpoint(eager=True)
+            st.write_table("seen", k, delta)
+            # O(1) sidecar maintenance: OR the one key's bits into its
+            # partition file in place (an incomplete/missing sidecar is
+            # dropped; the next checking round rebuilds it from seen)
+            bd = B.sidecar_dir(st.root, k)
+            if B.is_complete(bd):
+                row = entry.select("host", "url_key", "host_hash").head()
+                B.add_key_inplace(
+                    bd, row.host, row.url_key, row.host_hash, self.cfg.bloom_bits
+                )
+            else:
+                _shutil.rmtree(_os.path.join(st.root, "bloom"), ignore_errors=True)
+        st.commit(replace(
+            m, next_seq=m.next_seq + 1, frontier_rows=m.frontier_rows + 1,
+            done=False, seen_rows=m.seen_rows + int(seen_new),
+        ))
+        return True
 
     def remove_uris(self, pattern: str, allow_requeue: bool = True) -> int:
-        return _frontier_removal(self, pattern, allow_requeue)
+        """RemoveUris (Crawler.cs:874-883, Service.Remove 2326-2341): drop
+        frontier entries whose URL matches ``pattern``. With
+        ``allow_requeue=False`` the keys STAY in the seen set (the reference's
+        ``queued[key] = null``) and can never re-enqueue; with ``True`` they
+        are erased from seen (dict entry removed) and may be rediscovered.
+
+        Frontier surgery mutates the current snapshot in place and re-commits
+        the manifest; the allow_requeue=True path compacts the seen table
+        (append-only deltas → one consolidated delta).
+        """
+        st = self.state
+        m = self._m()
+        k = m.next_round
+        frontier = st.read_frontier(k)
+        match = F.col("url").rlike(pattern)
+        # count only — the matched keys never leave the executors (at
+        # 10^10-URL scale clear_uris() matches the whole frontier; collecting
+        # it would be a driver OOM). The requeue path below stays distributed.
+        n_removed = frontier.filter(match).count()
+        if n_removed == 0:
+            return 0
+        kept = frontier.filter(~match).localCheckpoint(eager=True)
+
+        seen_rows = m.seen_rows
+        if allow_requeue:
+            import os
+            import shutil
+
+            removed_keys = frontier.filter(match).select("host", "url_key")
+            # the consolidated seen count rides its checkpoint (no extra job)
+            obs = Observation(f"requeue_r{k}")
+            consolidated = (
+                st.read_seen(k)
+                .join(removed_keys, ["host", "url_key"], "left_anti")
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            seen_rows = obs.get["n"]
+            # crash-safe wholesale rewrite via the compaction marker flip
+            # (state.replace_table) — the new seen content is published
+            # atomically, never a delete-then-write window
+            st.replace_table("seen", k, consolidated)
+            # bloom has no deletes: drop sidecars so the next checking round
+            # rebuilds from seen
+            bdir = os.path.join(st.root, "bloom")
+            if os.path.exists(bdir):
+                shutil.rmtree(bdir)
+
+        st.write_table("frontier", k, kept)
+        frontier_rows = m.frontier_rows - n_removed
+        st.commit(replace(
+            m, frontier_rows=frontier_rows, done=frontier_rows == 0,
+            seen_rows=seen_rows,
+        ))
+        return n_removed
 
     def clear_uris(self) -> int:
         """ClearUris (Crawler.cs:845-851, Service.Clear 2255-2271): drop the
         whole frontier; the cleared keys remain marked seen
         (``queued[key] = null`` at Crawler.cs:2268) and never re-enqueue."""
-        return _frontier_removal(self, ".*", allow_requeue=False)
-
-
-def _enqueue_uri(crawler: "SparkCrawler", url: str, post_data=None,
-                 force: bool = True) -> bool:
-    """EnqueueUri(uri, postData[, force]) between runs (Crawler.cs:1081-1101;
-    the public two-arg overload forces). Appends one depth-0 entry to the
-    current frontier snapshot and re-commits the manifest; with
-    ``force=False`` an already-seen key is dropped (Service.Enqueue,
-    Crawler.cs:2301-2320). Returns True if enqueued."""
-    st = crawler.state
-    m = crawler._m()
-    k = m.next_round
-    cfg = crawler.cfg
-    r = crawler._canonicalize([url]).iloc[0]
-    if not crawler._seed_allowed(r):
-        return False
-    seen_new = (
-        st.read_seen(k)
-        .filter((F.col("host") == r.host) & (F.col("url_key") == r.url_key))
-        .isEmpty()
-    )
-    if not force and not seen_new:
-        return False
-    entry = crawler._frontier_df([crawler._entry_row(r, m.next_seq, post_data)])
-    frontier = st.read_frontier(k).unionByName(entry).localCheckpoint(eager=True)
-    st.write_table("frontier", k, frontier)
-    if seen_new:
-        import os as _os
-        import shutil as _shutil
-
-        delta = entry.select(
-            "host", "host_hash", "url_key", "path", "query",
-            F.col("depth").alias("first_depth"),
-            F.lit(k).cast("int").alias("first_round"),
-        )
-        d = st._dir("seen", k)
-        if _os.path.exists(d):
-            delta = crawler.spark.read.parquet(d).unionByName(delta)
-        delta = delta.localCheckpoint(eager=True)
-        st.write_table("seen", k, delta)
-        # O(1) sidecar maintenance: OR the one key's bits into its partition
-        # file in place (an incomplete/missing sidecar is dropped; the next
-        # checking round rebuilds it from seen)
-        bd = B.sidecar_dir(st.root, k)
-        if B.is_complete(bd):
-            row = entry.select("host", "url_key", "host_hash").head()
-            B.add_key_inplace(
-                bd, row.host, row.url_key, row.host_hash, cfg.bloom_bits
-            )
-        else:
-            _shutil.rmtree(_os.path.join(st.root, "bloom"), ignore_errors=True)
-    st.commit(Manifest(
-        next_round=k,
-        next_seq=m.next_seq + 1,
-        next_fetch_seq=m.next_fetch_seq,
-        frontier_rows=m.frontier_rows + 1,
-        done=False,
-        counters=m.counters,
-        seen_rows=(
-            None if m.seen_rows is None
-            else m.seen_rows + (1 if seen_new else 0)
-        ),
-    ))
-    return True
-
-
-def _frontier_removal(crawler: "SparkCrawler", pattern: str, allow_requeue: bool) -> int:
-    """RemoveUris (Crawler.cs:874-883, Service.Remove 2326-2341): drop
-    frontier entries whose URL matches ``pattern``. With
-    ``allow_requeue=False`` the keys STAY in the seen set (the reference's
-    ``queued[key] = null``) and can never re-enqueue; with ``True`` they
-    are erased from seen (dict entry removed) and may be rediscovered.
-
-    Frontier surgery mutates the current snapshot in place and re-commits
-    the manifest; the allow_requeue=True path compacts the seen table
-    (append-only deltas → one consolidated delta).
-    """
-    st = crawler.state
-    m = crawler._m()
-    k = m.next_round
-    frontier = st.read_frontier(k)
-    match = F.col("url").rlike(pattern)
-    # count only — the matched keys never leave the executors (at 10^10-URL
-    # scale clear_uris() matches the whole frontier; collecting it would be
-    # a driver OOM). The requeue path below stays distributed too.
-    n_removed = frontier.filter(match).count()
-    if n_removed == 0:
-        return 0
-    kept = frontier.filter(~match).localCheckpoint(eager=True)
-
-    if allow_requeue:
-        import os
-        import shutil
-
-        seen = st.read_seen(k)
-        removed_keys = frontier.filter(match).select("host", "url_key")
-        consolidated = seen.join(
-            removed_keys, ["host", "url_key"], "left_anti"
-        ).localCheckpoint(eager=True)
-        # crash-safe wholesale rewrite via the compaction marker flip
-        # (state.replace_table) — the new seen content is published
-        # atomically, never a delete-then-write window
-        st.replace_table("seen", k, consolidated)
-        # bloom has no deletes: drop sidecars so the next checking round
-        # rebuilds from seen
-        bdir = os.path.join(st.root, "bloom")
-        if os.path.exists(bdir):
-            shutil.rmtree(bdir)
-
-    st.write_table("frontier", k, kept)
-    st.commit(Manifest(
-        next_round=k,
-        next_seq=m.next_seq,
-        next_fetch_seq=m.next_fetch_seq,
-        frontier_rows=m.frontier_rows - n_removed,
-        done=(m.frontier_rows - n_removed) == 0,
-        counters=m.counters,
-        # requeue removal shrinks seen by an uncounted amount → unknown;
-        # the no-requeue path leaves seen untouched
-        seen_rows=None if allow_requeue else m.seen_rows,
-    ))
-    return n_removed
+        return self.remove_uris(".*", allow_requeue=False)

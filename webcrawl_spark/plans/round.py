@@ -67,6 +67,7 @@ from ..kernels.errors import FATAL_CODES
 from ..operators import bloom as B
 from ..operators.ckpt import cut
 from ..operators.seq import assign_global_seq
+from .state import Manifest
 
 FRONTIER_COLS = [
     "url", "url_key", "host", "host_hash", "path", "query", "depth",
@@ -97,29 +98,17 @@ class RoundContext:
 
 
 @dataclass
-class RoundStats:
-    next_seq: int
-    next_fetch_seq: int
-    frontier_rows: int
-    counters: list
-    n_new: int = 0                # seen keys added this round
-    jobs: list = field(default_factory=list)  # in-flight background commits
-                                  # (fetch_log, seen delta, frontier, Bloom
-                                  # sidecar); the caller's committer waits
-                                  # for them, then commits this round's
-                                  # manifest — the next round's compute
-                                  # never waits, the writes overlap it
-    next_frontier: DataFrame = None  # checkpointed frontier entering the
-                                     # next round (same rows the background
-                                     # frontier write persists)
-    seen_delta: DataFrame = None     # checkpoint-backed seen rows added this
-                                     # round (same rows the seen write
-                                     # persists) — the next round's anti-join
-                                     # unions this instead of re-reading
-                                     # parquet
-    bloom_job: object = None         # the Bloom-sidecar member of ``jobs``
-                                     # (builds the next round's sidecar) —
-                                     # handed to the next run_round
+class Carry:
+    """The in-memory half of a round hand-off (the manifest is the durable
+    half): the next round reads these frames instead of the background
+    writes of the same rows, which may still be in flight."""
+    frontier: DataFrame              # frontier entering the round
+    seen: DataFrame                  # seen view the round dedups against
+    bloom_job: object = None         # the build writing the round's Bloom
+                                     # sidecar; None = none in flight
+    committer: object = None         # the previous round's committer; None
+                                     # when the frames come from committed
+                                     # tables
 
 
 def _budget_col(ctx: RoundContext):
@@ -137,12 +126,12 @@ def _budget_col(ctx: RoundContext):
 
 
 class _Job(InheritableThread):
-    """Background Spark action: the round's independent commits (fetch_log,
-    seen delta, frontier, Bloom sidecar) and the carried cut overlap instead of
-    queueing as serial driver actions — the scheduler interleaves their
-    tasks. Each commit writes its own directory; the manifest commit (after
-    all joins) remains the only visibility point, so failure atomicity is
-    unchanged."""
+    """Background driver work: the round's independent writes (fetch_log,
+    seen delta, frontier, Bloom sidecar) and the carried cut overlap instead
+    of queueing as serial driver actions — the scheduler interleaves their
+    tasks. Each write has its own directory; the round's committer (a
+    ``_Job`` too, :func:`commit_when_landed`) publishes the manifest after
+    they all land, so the manifest stays the only visibility point."""
 
     def __init__(self, fn):
         super().__init__(target=self._run)
@@ -219,45 +208,50 @@ def _join_quietly(jobs: list) -> None:
         j.join()
 
 
+def commit_when_landed(state, prev, jobs: list, manifest: Manifest) -> None:
+    """A committer's body: commit ``manifest`` once the previous committer
+    ``prev`` (None for the seeds) and every write in ``jobs`` have landed.
+    On a failure it still joins every job it waits on, so a finished
+    committer leaves no earlier committer or write running."""
+    try:
+        if prev is not None:
+            prev.wait()
+        for j in jobs:
+            j.wait()
+    except BaseException:
+        _join_quietly(jobs)
+        raise
+    state.commit(manifest)
+    B.gc_sidecars(state.root, manifest.next_round)
+
+
 def run_round(
-    spark: SparkSession,
-    ctx: RoundContext,
-    state,
-    frontier: DataFrame,
-    pages: DataFrame,
-    seen: DataFrame,
-    pq: DataFrame,
-    rnd: int,
-    next_seq: int,
-    next_fetch_seq: int,
-    frontier_rows: int,
-    seen_rows: int,
-    bloom_job=None,
-) -> RoundStats:
-    """Run round ``rnd``. ``bloom_job`` is the previous round's sidecar
-    build (its ``RoundStats.bloom_job``; None on a run's first round). It
-    writes this round's sidecar, so the round waits on it before reading
-    that sidecar in any way.
+    spark: SparkSession, ctx: RoundContext, state, pages: DataFrame,
+    m: Manifest, carry: Carry,
+) -> tuple[Manifest, Carry]:
+    """Run round ``m.next_round`` from the manifest ``m`` and the
+    in-memory ``carry``; return the next round's manifest and carry.
+
+    The round's writes and its committer run in the background: the
+    committer waits for ``carry.committer`` and this round's writes, then
+    commits the returned manifest, so rounds commit in order and the next
+    round's compute never waits. ``carry.bloom_job`` writes this round's
+    sidecar, so the round waits on it before reading that sidecar.
 
     If the round raises, every background job it started (a sidecar
-    build, the fetch_log write, the carried cut) is joined before the
-    error propagates: an orphaned writer racing a resumed run's overwrite
-    of the same round dir could leave mixed data under a later manifest."""
+    build, the fetch_log write, the carried cut, the committer) is joined
+    before the error propagates: an orphaned writer racing a resumed run's
+    overwrite of the same round dir could leave mixed data under a later
+    manifest."""
     started: list = []
     try:
-        return _run_round(
-            spark, ctx, state, frontier, pages, seen, pq, rnd, next_seq,
-            next_fetch_seq, frontier_rows, seen_rows, bloom_job, started,
-        )
+        return _run_round(ctx, state, pages, m, carry, started)
     except BaseException:
         _join_quietly(started)
         raise
 
 
-def _run_round(
-    spark, ctx, state, frontier, pages, seen, pq, rnd, next_seq,
-    next_fetch_seq, frontier_rows, seen_rows, bloom_job, started: list,
-) -> RoundStats:
+def _run_round(ctx, state, pages, m, carry, started: list):
     """The body of :func:`run_round`; every ``_Job`` it starts goes
     through ``launch`` into ``started``."""
 
@@ -267,11 +261,11 @@ def _run_round(
 
     cfg = ctx.cfg
     P = cfg.num_partitions
-    small = frontier_rows <= SMALL_ROUND_THRESHOLD
-    counters: list = []
+    rnd, frontier, bloom_job = m.next_round, carry.frontier, carry.bloom_job
+    small = m.frontier_rows <= SMALL_ROUND_THRESHOLD
     # seen feeds both the dedup anti-join and the derived query-string
     # counts — persist so the (large, growing) union scan happens once
-    seen = seen.persist()
+    seen = carry.seen.persist()
 
     # The Bloom check runs once seen reaches bloom_min_seen, and only a
     # checking round owns a sidecar. With no build in flight and no complete
@@ -279,7 +273,9 @@ def _run_round(
     # dropped by frontier surgery), rebuild it from the full seen view — a
     # distributed job that overlaps SELECT..FETCH; the check stage waits.
     sidecar = B.sidecar_dir(state.root, rnd)
-    use_bloom = cfg.bloom_min_seen is not None and seen_rows >= cfg.bloom_min_seen
+    use_bloom = (
+        cfg.bloom_min_seen is not None and m.seen_rows >= cfg.bloom_min_seen
+    )
     if use_bloom and bloom_job is None and not B.is_complete(sidecar):
         bloom_job = launch(
             lambda: B.build_sidecar(seen, None, sidecar, cfg.bloom_bits)
@@ -290,10 +286,10 @@ def _run_round(
         frontier, _budget_col(ctx), cfg.salt_buckets, cfg.max_connections
     )
     if small:
-        sel = _lazy_seq(sel, ["priority", "seq"], next_fetch_seq, "fetch_seq")
+        sel = _lazy_seq(sel, ["priority", "seq"], m.next_fetch_seq, "fetch_seq")
     else:
         sel = assign_global_seq(
-            sel, ["priority", "seq"], start=next_fetch_seq,
+            sel, ["priority", "seq"], start=m.next_fetch_seq,
             out_col="fetch_seq", num_partitions=P,
             reliable=cfg.reliable_checkpoints,
         )
@@ -441,14 +437,7 @@ def _run_round(
     retry_rows = routed.filter(F.col("status") == "retryable").select(*FRONTIER_COLS)
 
     # ---------------- 5. ENQUEUE ----------------
-    next_fetch_seq += n_selected
-    counters += [
-        (rnd, "select", "selected", n_selected),
-        (rnd, "fetch", "fetched", n_good),
-        (rnd, "fetch", "retries", n_retry),
-        (rnd, "fetch", "errors", n_selected - n_good - n_retry),
-    ]
-    n_carried = frontier_rows - n_selected + n_retry
+    n_carried = m.frontier_rows - n_selected + n_retry
 
     # 5a. min-depth merge into carried entries (still-queued rediscoveries,
     #     Crawler.cs:2303-2307). Carried keys ⊆ seen, so joining all
@@ -575,7 +564,10 @@ def _run_round(
     #     → ignore (Crawler.cs:2415-2423). Each accepted key adds exactly
     #     one distinct query to its path, so rank-vs-prior-count is exact.
     #     None = Infinite: skip the join (and its full seen re-aggregation).
+    #     The prior counts per (host, path) derive from seen: each seen row
+    #     is one distinct query string of its path.
     if cfg.max_query_strings_per_file is not None:
+        pq = seen.groupBy("host", "path").agg(F.count(F.lit(1)).alias("n"))
         wpq = Window.partitionBy("host", "path").orderBy("pos_f", "pos_o")
         acc = (
             acc.withColumn("__rnq", F.row_number().over(wpq))
@@ -596,10 +588,10 @@ def _run_round(
     # 5f. deterministic discovery sequence (EnqueueCore order ADAPTed to a
     #     (priority, seq) total order; Crawler.cs:2507-2512)
     if small_acc:
-        acc = _lazy_seq(acc, ["pos_f", "pos_o"], next_seq, "seq")
+        acc = _lazy_seq(acc, ["pos_f", "pos_o"], m.next_seq, "seq")
     else:
         acc = assign_global_seq(
-            acc, ["pos_f", "pos_o"], start=next_seq, out_col="seq",
+            acc, ["pos_f", "pos_o"], start=m.next_seq, out_col="seq",
             num_partitions=P, reliable=cfg.reliable_checkpoints,
         )
     # acc feeds four consumers (seen delta, new frontier entries, the Bloom
@@ -647,8 +639,8 @@ def _run_round(
 
     # the remaining commits (seen delta, frontier snapshot, Bloom sidecar)
     # all read only checkpointed inputs and write independent directories —
-    # they launch here and OVERLAP the next round's compute; the caller's
-    # committer commits this round's manifest once they land (the per-round
+    # they launch here and OVERLAP the next round's compute; the round's
+    # committer commits its manifest once they land (the per-round
     # serial-action floor is what caps scaling efficiency at small rounds).
     # The sidecar update is executor-side: the seen delta ORs into
     # per-partition bitset files and untouched partitions carry forward as
@@ -669,19 +661,28 @@ def _run_round(
             seen_delta, sidecar, next_sidecar, cfg.bloom_bits
         ))
         jobs.append(next_bloom_job)
-    next_seq += n_new
-    counters.append((rnd, "enqueue", "new_links", n_new))
-    frontier_rows_next = n_carried + n_new
-    counters.append((rnd, "commit", "frontier_out", frontier_rows_next))
 
-    return RoundStats(
-        next_seq=next_seq,
-        next_fetch_seq=next_fetch_seq,
-        frontier_rows=frontier_rows_next,
-        counters=counters,
-        n_new=n_new,
-        jobs=jobs,
-        next_frontier=next_frontier,
-        seen_delta=seen_delta,
+    frontier_out = n_carried + n_new
+    nm = Manifest(
+        next_round=rnd + 1,
+        next_seq=m.next_seq + n_new,
+        next_fetch_seq=m.next_fetch_seq + n_selected,
+        frontier_rows=frontier_out,
+        seen_rows=m.seen_rows + n_new,
+        done=frontier_out == 0,
+        counters=[
+            [rnd, "select", "selected", n_selected],
+            [rnd, "fetch", "fetched", n_good],
+            [rnd, "fetch", "retries", n_retry],
+            [rnd, "fetch", "errors", n_selected - n_good - n_retry],
+            [rnd, "enqueue", "new_links", n_new],
+            [rnd, "commit", "frontier_out", frontier_out],
+        ],
+    )
+    prev = carry.committer
+    return nm, Carry(
+        frontier=next_frontier,
+        seen=seen.unionByName(seen_delta),
         bloom_job=next_bloom_job,
+        committer=launch(lambda: commit_when_landed(state, prev, jobs, nm)),
     )

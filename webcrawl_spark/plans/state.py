@@ -46,12 +46,9 @@ class Manifest:
     next_seq: int         # next discovery sequence number
     next_fetch_seq: int   # next fetch sequence number
     frontier_rows: int    # rows in frontier/round=next_round
+    seen_rows: int        # seen-set keys (the Bloom check-stage gate)
     done: bool = False
     counters: list = field(default_factory=list)  # (round, stage, metric, value)
-    # true seen-key count (Bloom check-stage gate). None = unknown (old
-    # manifests / after a requeue removal) → callers fall back to next_seq,
-    # which only ever OVERSTATES (force-enqueues re-use seen keys).
-    seen_rows: int = None
 
 
 class CrawlState:
@@ -84,7 +81,10 @@ class CrawlState:
         with open(self._manifest_path(rnd)) as f:
             d = json.load(f)
         d.setdefault("counters", [])
-        d.setdefault("seen_rows", None)
+        if d.get("seen_rows") is None:
+            # a manifest written before seen_rows was tracked: next_seq can
+            # only overstate it (force-enqueues re-use seen keys)
+            d["seen_rows"] = d["next_seq"]
         return Manifest(**d)
 
     def latest_manifest(self) -> Manifest | None:
