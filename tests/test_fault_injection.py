@@ -276,3 +276,37 @@ def test_fresh_crawl_round0_reads_seed_frames(spark, tmp_path, monkeypatch):
     m = c.run(max_rounds=2)
     assert reads == []
     assert commits == list(range(m.next_round + 1))
+
+
+def test_finished_jobs_are_freed(spark, tmp_path, monkeypatch):
+    """A finished ``_Job`` drops its closure, so the committer chain does
+    not keep every earlier round's jobs (and the checkpointed frames their
+    closures hold) alive until ``run()`` returns: the count of finished
+    jobs still in memory after each round stays under a fixed bound."""
+    import gc
+
+    from webcrawl_spark.fixtures.gen import chain
+    from webcrawl_spark.plans import crawl as C
+    from webcrawl_spark.plans.round import _Job
+
+    real = C.run_round
+    finished = []
+
+    def spy(*args):
+        out = real(*args)
+        gc.collect()
+        finished.append(sum(
+            1 for o in gc.get_objects()
+            if isinstance(o, _Job) and o.ident is not None and not o.is_alive()
+        ))
+        return out
+
+    monkeypatch.setattr(C, "run_round", spy)
+    fx = chain(n=10, depth_limit=9)
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    c = SparkCrawler(spark, pages, fx.seeds, str(tmp_path / "jobs"),
+                     fx.config.with_(num_partitions=4))
+    c.run(max_rounds=8)
+    assert len(finished) == 8
+    # one round's writes, its carried cut and the previous committer
+    assert max(finished) <= 6, finished

@@ -13,6 +13,7 @@ Each topology stresses a different operator set:
 """
 
 import os
+import re
 
 from webcrawl_spark.fixtures import gen
 from webcrawl_spark.operators import bloom as B
@@ -219,12 +220,16 @@ def test_bloom_forced_golden(spark, tmp_path, monkeypatch):
     entering rounds 0, 1, 2, so bloom_min_seen=5 crosses at round 1 —
     before round 2's level-2 pages re-discover /n0.html."""
     fx = gen.tree(branching=2, depth=3)
-    run_and_check(
+    crawler = run_and_check(
         spark,
         gen.Fixture("tree_bloom", fx.pages, fx.seeds,
                     fx.config.with_(bloom_min_seen=0)),
         tmp_path,
     )
+    # one sidecar for the whole crawl: a single set of partition files
+    names = os.listdir(B.sidecar_dir(crawler.state.root))
+    assert "_COMPLETE" in names
+    assert all(re.fullmatch(r"part-\d+\.npy", n) for n in names if n != "_COMPLETE")
     run_and_check(
         spark,
         gen.Fixture("tree_bloom_sat", fx.pages, fx.seeds,
@@ -235,24 +240,25 @@ def test_bloom_forced_golden(spark, tmp_path, monkeypatch):
     builds = []
     real = B.build_sidecar
 
-    def spy(keys_df, prev_dir, out_dir, bits):
-        builds.append((prev_dir, os.path.basename(out_dir)))
-        return real(keys_df, prev_dir, out_dir, bits)
+    def spy(keys_df, d, bits, partitions, rebuild):
+        builds.append((rebuild, keys_df.count(), d))
+        return real(keys_df, d, bits, partitions, rebuild)
 
     monkeypatch.setattr(B, "build_sidecar", spy)
-    run_and_check(
+    crawler = run_and_check(
         spark,
         gen.Fixture("tree_bloom_cross", fx.pages, fx.seeds,
                     fx.config.with_(bloom_min_seen=5)),
         tmp_path,
     )
-    # nothing built before the crossing round, which builds from the full
-    # seen view; every later round updates the previous round's sidecar
-    assert builds[0] == (None, "round-1")
-    assert all(prev is not None for prev, _ in builds[1:])
-    assert [out for _, out in builds] == [
-        f"round-{k}" for k in range(1, len(builds) + 1)
-    ]
+    # nothing built before the crossing round, which builds from its full
+    # seen view (5 keys); every checking round then ORs its delta into the
+    # same files in place
+    d = B.sidecar_dir(crawler.state.root)
+    assert builds[0] == (True, 5, d)
+    assert len(builds) > 2
+    assert all(not rebuild and out == d for rebuild, _, out in builds[1:])
+    assert B.is_complete(d, fx.config.bloom_bits, 4)   # run_spark's P
 
 
 def test_max_queued_links_golden(spark, tmp_path):

@@ -12,7 +12,7 @@ from webcrawl_spark import schemas
 from webcrawl_spark.fixtures.gen import broken, tree
 from webcrawl_spark.plans.crawl import SparkCrawler
 
-from .golden import run_oracle
+from .golden import assert_match, run_oracle
 
 
 def _trace(c: SparkCrawler):
@@ -61,3 +61,51 @@ def test_partitioning_invariance(spark, tmp_path):
     # and both match the sequential oracle
     ot = run_oracle(fx).trace
     assert traces[0] == [tuple(r) for r in ot.itertuples(index=False)]
+
+
+def _crawl_in_runs(spark, fx, state_dir, runs) -> SparkCrawler:
+    """Crawl ``fx`` on one state dir in one run per (config changes,
+    max_rounds) pair; each run resumes the previous one's committed state.
+    Returns the last run's crawler."""
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    for changes, max_rounds in runs:
+        cfg = fx.config.with_(**{"num_partitions": 4, **changes})
+        c = SparkCrawler(spark, pages, fx.seeds, state_dir, cfg)
+        c.run(max_rounds=max_rounds)
+    return c
+
+
+def test_bloom_check_off_between_checking_runs(spark, tmp_path):
+    """Check, no check, check: the keys added by rounds without the check
+    never reach the Bloom sidecar, so the third run must not trust it (a
+    stale sidecar would miss them and re-enqueue seen URLs)."""
+    fx = tree(branching=2, depth=3)
+    c = _crawl_in_runs(spark, fx, str(tmp_path / "s"), [
+        ({"bloom_min_seen": 0}, 1),
+        ({"bloom_min_seen": None}, 2),
+        ({"bloom_min_seen": 0}, None),
+    ])
+    assert_match(run_oracle(fx), c)
+
+
+def test_bloom_bits_change_on_resume(spark, tmp_path):
+    """A resume with another ``bloom_bits`` rebuilds the sidecar instead of
+    probing bitsets of the old size."""
+    fx = tree(branching=2, depth=3)
+    c = _crawl_in_runs(spark, fx, str(tmp_path / "s"), [
+        ({"bloom_min_seen": 0, "bloom_bits": 1 << 12}, 1),
+        ({"bloom_min_seen": 0, "bloom_bits": 1 << 10}, None),
+    ])
+    assert_match(run_oracle(fx), c)
+
+
+def test_partition_count_change_on_resume(spark, tmp_path):
+    """A resume with another partition count rebuilds the sidecar, placing
+    every seen key by the new host-hash partitioning (tree.test lands in
+    partition 0 of 4 but 2 of 5)."""
+    fx = tree(branching=2, depth=3)
+    c = _crawl_in_runs(spark, fx, str(tmp_path / "s"), [
+        ({"bloom_min_seen": 0, "num_partitions": 4}, 2),
+        ({"bloom_min_seen": 0, "num_partitions": 5}, None),
+    ])
+    assert_match(run_oracle(fx), c)

@@ -218,7 +218,7 @@ def test_rewrite_want_flags_null_mime(spark):
     assert 'href="http://h.test/noext">' in out2["http://h.test/index.html"]
 
 
-def test_enqueue_uri_between_runs(spark, tmp_path):
+def test_enqueue_uri_between_runs(spark, tmp_path, monkeypatch):
     """EnqueueUri API (Crawler.cs:1081-1101): force-enqueue between runs —
     an orphan page gets fetched, a force dup refetches a seen url, and a
     non-forced dup is rejected."""
@@ -243,13 +243,11 @@ def test_enqueue_uri_between_runs(spark, tmp_path):
     c.run(max_rounds=1)
     from webcrawl_spark.operators import bloom as B
 
-    bd = B.sidecar_dir(c.state.root, c.state.latest_manifest().next_round)
-    gen_before = B._generation(bd)
+    bd = B.sidecar_dir(c.state.root)
     assert c.enqueue_uri(orphan)
-    # O(1) in-place sidecar insert: the dir survives complete (no
-    # O(seen-set) rebuild queued for the next run) with a bumped generation
-    assert B.is_complete(bd)
-    assert B._generation(bd) > gen_before
+    # O(1) in-place sidecar insert: the sidecar stays complete, so the next
+    # run queues no O(seen-set) rebuild
+    assert B.is_complete(bd, cfg.bloom_bits, cfg.num_partitions)
     assert c.enqueue_uri(fx.seeds[0], force=True)
     assert not c.enqueue_uri(fx.seeds[0], force=False)
     assert not c.enqueue_uri("mailto:not-a-crawl-url")
@@ -258,8 +256,17 @@ def test_enqueue_uri_between_runs(spark, tmp_path):
     m = c.state.latest_manifest()
     assert m.seen_rows == c.seen().count()
 
+    rebuilds = []
+    real = B.build_sidecar
+
+    def spy(keys_df, d, bits, partitions, rebuild):
+        rebuilds.append(rebuild)
+        return real(keys_df, d, bits, partitions, rebuild)
+
+    monkeypatch.setattr(B, "build_sidecar", spy)
     c2 = SparkCrawler(spark, pdf, fx.seeds, str(tmp_path / "s"), cfg)
     c2.run()
+    assert rebuilds and not any(rebuilds)
     urls = [r["url"] for r in c2.trace().collect()]
     assert orphan in urls
     assert urls.count(fx.seeds[0]) == 2

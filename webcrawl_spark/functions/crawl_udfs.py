@@ -126,21 +126,7 @@ def make_decode_stage(cfg: CrawlConfig, base_uris_bc):
                 reject.loc[red[red].index[out_of_scope]] = "redirect_out_of_scope"
                 ok_red = red[red].index[~out_of_scope]
                 eff_path.loc[ok_red] = fc["path"].loc[ok_red]
-            rtype = M.guess_types_batch(eff_path, ext_table)
-            # no response headers: unfetched-type pages are HTML (oracle ADAPT)
-            rtype = rtype.where(rtype != M.UNKNOWN, M.HTML)
-            mime = rtype.map(M.mime_of_type)
-            # second-chance re-type from the server Content-Type when the
-            # page has one (GetMimeType prefers the response header over the
-            # extension guess, Crawler.cs:2100-2119)
-            srv = M.resource_types_of_mime_batch(pdf["server_mime"])
-            use = srv != M.UNKNOWN
-            rtype = srv.where(use, rtype)
-            base = (
-                pdf["server_mime"].fillna("").astype(str)
-                .str.split(";").str[0].str.strip().str.lower()
-            )
-            mime = base.where(use, mime)
+            rtype, mime = M.effective_types(eff_path, pdf["server_mime"], ext_table)
             is_binary = rtype == M.BINARY
             valid = ok & reject.isna()
             dec = decode_batch(

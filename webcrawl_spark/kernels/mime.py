@@ -124,6 +124,25 @@ def guess_types_batch(paths: pd.Series, table: dict | None = None) -> pd.Series:
     return rtype
 
 
+def effective_types(paths: pd.Series, server_mimes: pd.Series,
+                    table: dict | None = None) -> tuple[pd.Series, pd.Series]:
+    """A fetched page's effective (resource type, mime) Series: the
+    extension guess, with unknown read as HTML (no response headers: the
+    oracle's ADAPT), then re-typed from the server Content-Type when that
+    maps to a type (GetMimeType prefers the response header over the
+    extension guess, Crawler.cs:2100-2119)."""
+    rtype = guess_types_batch(paths, table)
+    rtype = rtype.where(rtype != UNKNOWN, HTML)
+    mime = rtype.map(mime_of_type)
+    srv = resource_types_of_mime_batch(server_mimes)
+    use = srv != UNKNOWN
+    base = (
+        server_mimes.fillna("").astype(str)
+        .str.split(";").str[0].str.strip().str.lower()
+    )
+    return srv.where(use, rtype), base.where(use, mime)
+
+
 def mime_of_type(rtype: str) -> str:
     """GetMimeType(ResourceType) (Crawler.cs:2109-2119)."""
     return {

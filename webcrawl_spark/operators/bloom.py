@@ -1,30 +1,29 @@
 """Distributed Bloom-filter sidecar for the URL-seen set (north_rule:
 "partitioned Bloom/cuckoo-filter URL-seen set sharded by host-hash").
 
-One bitset FILE per host-hash partition per round, maintained by the
-executors that own each partition — the driver never touches a key:
+One directory per crawl, ``<state>/bloom/``, holds one bitset FILE per
+host-hash partition, maintained by the executors that own each partition —
+the driver never touches a key. Invariant: while ``_COMPLETE`` exists, the
+bits cover every key of the committed seen set. A Bloom filter must have no
+false negatives; an extra bit only sends a candidate to the exact
+anti-join, so a bitset that only gains bits stays safe across crashes,
+replays and requeue removals.
 
-- UPDATE: each round's seen delta (which already carries ``host_hash``)
-  is grouped by partition id; an ``applyInPandas`` task loads the previous
-  round's bitset file for its partition, ORs in the new keys' bits, and
-  writes the next round's file (tmp + atomic rename — task retries are
-  idempotent because the content is deterministic). Partitions with no new
-  keys are carried forward as hard links (an O(P) driver-side *metadata*
-  operation — no row data). A ``_COMPLETE`` marker commits the directory.
+- UPDATE: a checking round's seen delta is grouped by ``host_hash``; an
+  ``applyInPandas`` task ORs the keys' bits into its partition's file in
+  place (tmp + atomic replace — a task retry ORs the same bits again).
 - CHECK: candidates are repartitioned on ``host_hash`` and a ``mapInPandas``
-  stage loads exactly the bitset files for the partitions it holds (each
-  file is read once per round cluster-wide). Candidates that miss the
-  filter are DEFINITELY new (no false negatives given a complete sidecar
-  dir) and skip the exact anti-join entirely; only possible-seen rows
-  (rediscoveries + false positives) enter the shuffle — at 10^10-URL scale
-  the anti-join's candidate volume drops to the rediscovery rate plus the
-  false-positive rate.
-- LIFECYCLE: only a round that runs the check (seen has reached
-  ``bloom_min_seen``) keeps a sidecar. A checking round with no complete
-  sidecar dir — the first checking round, a resume, a dir dropped by
-  frontier surgery — rebuilds it by the same update job over its full seen
-  view (distributed, never a driver ``toPandas``); each checking round then
-  updates the next round's dir from its seen delta.
+  stage tests them against its partitions' files (each file is read by one
+  task per round). Misses are DEFINITELY new and skip the exact anti-join;
+  only possible-seen rows (rediscoveries + false positives) enter its
+  shuffle.
+- LIFECYCLE: a checking round (seen has reached ``bloom_min_seen``) with no
+  complete sidecar and no build in flight — the first checking round, a
+  resume after a round without the check, a changed ``bloom_bits`` or
+  partition count — rebuilds it from an empty directory by the same update
+  job over its full seen view, then writes the layout into ``_COMPLETE``.
+  A round that does not run the check removes ``_COMPLETE``, so the keys
+  it adds can never become false negatives later.
 
 All hashing and bit manipulation is VECTORIZED: two independent 64-bit
 hashes per key come from ``pd.util.hash_pandas_object`` with two fixed
@@ -89,11 +88,13 @@ def test_bits(arr: np.ndarray | None, hosts: pd.Series, url_keys: pd.Series,
 
 
 # ---------------------------------------------------------------------------
-# sidecar file layout
+# sidecar files and the executor-side stages
 # ---------------------------------------------------------------------------
 
-def sidecar_dir(state_root: str, rnd: int) -> str:
-    return os.path.join(state_root, "bloom", f"round-{rnd}")
+def sidecar_dir(state_root: str, rnd: int | None = None) -> str:
+    """The crawl's one sidecar directory. ``rnd`` is accepted for callers
+    that ask for a given round's sidecar; every round shares this one."""
+    return os.path.join(state_root, "bloom")
 
 
 def _part_path(d: str, p: int) -> str:
@@ -104,94 +105,79 @@ def _marker(d: str) -> str:
     return os.path.join(d, "_COMPLETE")
 
 
-def is_complete(d: str) -> bool:
-    return os.path.exists(_marker(d))
+def _layout(bits: int, partitions: int) -> str:
+    return f"bits={bits} partitions={partitions}"
 
 
-def _atomic_save(path: str, arr: np.ndarray) -> None:
-    tmp = f"{path}.tmp.{os.getpid()}"
+def is_complete(d: str, bits: int, partitions: int) -> bool:
+    """True when ``d`` covers the committed seen set with this bitset size
+    and host-hash partitioning; a sidecar of another layout probes the
+    wrong bits or files, so it counts as incomplete and is rebuilt."""
+    try:
+        with open(_marker(d)) as f:
+            return f.read() == _layout(bits, partitions)
+    except OSError:
+        return False
+
+
+def drop_complete(d: str) -> None:
+    """Mark ``d`` incomplete: the next checking round rebuilds it."""
+    try:
+        os.remove(_marker(d))
+    except FileNotFoundError:
+        pass
+
+
+def _load_part(d: str, p: int) -> np.ndarray | None:
+    path = _part_path(d, p)
+    return np.load(path) if os.path.exists(path) else None
+
+
+def _or_into_part(d: str, p: int, hosts: pd.Series, url_keys: pd.Series,
+                  bits: int) -> None:
+    """OR the keys' bits into partition ``p``'s bitset (zeros if absent),
+    replacing the file atomically."""
+    arr = _load_part(d, p)
+    if arr is None:
+        arr = np.zeros(bits // 8, dtype=np.uint8)
+    set_bits(arr, hosts, url_keys, bits)
+    tmp = f"{_part_path(d, p)}.tmp.{os.getpid()}"
     with open(tmp, "wb") as f:
         np.save(f, arr)
-    os.replace(tmp, path)
+    os.replace(tmp, _part_path(d, p))
 
 
-def _load_part(d: str | None, p: int) -> np.ndarray | None:
-    if d is None:
-        return None
-    path = _part_path(d, p)
-    if not os.path.exists(path):
-        return None
-    return np.load(path)
-
-
-def _or_into_part(src_dir: str | None, out_dir: str, p: int,
-                  hosts: pd.Series, url_keys: pd.Series, bits: int) -> None:
-    """Partition ``p``'s bitset from ``src_dir`` (zeros if absent) with the
-    keys' bits ORed in, saved atomically to ``out_dir``."""
-    prev = _load_part(src_dir, p)
-    arr = prev.copy() if prev is not None else np.zeros(bits // 8, dtype=np.uint8)
-    set_bits(arr, hosts, url_keys, bits)
-    _atomic_save(_part_path(out_dir, p), arr)
-
-
-# ---------------------------------------------------------------------------
-# executor-side stages
-# ---------------------------------------------------------------------------
-
-def make_update_fn(prev_dir: str | None, out_dir: str, bits: int):
-    """applyInPandas fn for ``seen_delta.groupBy("host_hash")``: load the
-    partition's previous bitset, OR in the delta keys, write the next file.
-    Returns a one-row (host_hash, n_added) stats frame."""
+def make_update_fn(d: str, bits: int):
+    """applyInPandas fn for ``keys.groupBy("host_hash")``: OR the group's
+    keys into its partition file. Returns a one-row (host_hash, n_added)
+    stats frame."""
 
     def update(pdf: pd.DataFrame) -> pd.DataFrame:
         p = int(pdf["host_hash"].iloc[0])
-        _or_into_part(prev_dir, out_dir, p, pdf["host"], pdf["url_key"], bits)
+        _or_into_part(d, p, pdf["host"], pdf["url_key"], bits)
         return pd.DataFrame({"host_hash": [p], "n_added": [len(pdf)]})
 
     return update
 
 
-# per-Python-worker bitset cache: keyed by (dir, partition, generation),
-# where the generation is the _COMPLETE marker's mtime — any in-place
-# mutation of a complete dir (the O(1) EnqueueUri insert bumps the marker)
-# invalidates stale entries, so a same-path rebuild can never serve old
-# bitsets (false negatives → duplicate fetches). Bounded to cap worker
-# memory across long crawls (workers are reused between rounds).
-_PART_CACHE: dict = {}
-_PART_CACHE_MAX = 64
-
-
-def _generation(d: str) -> int:
-    try:
-        return os.stat(_marker(d)).st_mtime_ns
-    except OSError:
-        return -1
-
-
-def _cached_part(d: str, p: int):
-    key = (d, p, _generation(d))
-    if key not in _PART_CACHE:
-        if len(_PART_CACHE) >= _PART_CACHE_MAX:
-            _PART_CACHE.clear()
-        _PART_CACHE[key] = _load_part(d, p)
-    return _PART_CACHE[key]
-
-
 def make_check_stage(d: str, bits: int):
     """mapInPandas stage over host_hash-repartitioned candidates: adds a
     ``maybe_seen`` column by testing each row against its partition's
-    bitset file (loaded once per worker per round)."""
+    bitset file. A task holds whole partitions, so each file is loaded
+    once, into a dict that serves the task's batches."""
 
     def check(batches):
+        parts: dict = {}
         for pdf in batches:
             if pdf.empty:
                 continue
             out = pdf.copy()
             maybe = np.zeros(len(pdf), dtype=bool)
             for p, idx in pdf.groupby("__hh").indices.items():
-                arr = _cached_part(d, int(p))
+                if p not in parts:
+                    parts[p] = _load_part(d, int(p))
                 maybe[idx] = test_bits(
-                    arr, pdf["host"].iloc[idx], pdf["url_key"].iloc[idx], bits
+                    parts[p], pdf["host"].iloc[idx], pdf["url_key"].iloc[idx], bits
                 )
             out["maybe_seen"] = maybe
             yield out
@@ -203,63 +189,31 @@ def make_check_stage(d: str, bits: int):
 # driver-side orchestration (file metadata only — never key rows)
 # ---------------------------------------------------------------------------
 
-def build_sidecar(keys_df, prev_dir: str | None, out_dir: str, bits: int) -> None:
-    """Build ``out_dir`` from ``prev_dir`` + the delta ``keys_df``
-    (host, url_key, host_hash). The bitset work runs on executors; the
-    driver only collects the P-row stats frame and carries forward
-    untouched partition files as hard links."""
-    os.makedirs(out_dir, exist_ok=True)
-    stats = (
+def build_sidecar(keys_df, d: str, bits: int, partitions: int,
+                  rebuild: bool) -> None:
+    """OR the keys of ``keys_df`` (host, url_key, host_hash) into ``d``'s
+    partition files in place; the bitset work runs on executors and the
+    driver collects only the P-row stats frame. A ``rebuild`` starts from
+    an empty ``d``, takes the full seen view, and marks ``d`` complete for
+    this layout once every key is in."""
+    if rebuild:
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d, exist_ok=True)
+    (
         keys_df.select("host_hash", "host", "url_key")
         .groupBy("host_hash")
-        .applyInPandas(make_update_fn(prev_dir, out_dir, bits),
-                       "host_hash int, n_added long")
+        .applyInPandas(make_update_fn(d, bits), "host_hash int, n_added long")
         .collect()
     )
-    written = {r["host_hash"] for r in stats}
-    if prev_dir is not None and os.path.isdir(prev_dir):
-        for name in os.listdir(prev_dir):
-            if not name.startswith("part-") or not name.endswith(".npy"):
-                continue
-            p = int(name[len("part-"):-len(".npy")])
-            if p in written:
-                continue
-            dst = _part_path(out_dir, p)
-            if os.path.exists(dst):
-                os.remove(dst)
-            try:
-                os.link(_part_path(prev_dir, p), dst)
-            except OSError:
-                shutil.copyfile(_part_path(prev_dir, p), dst)
-    with open(_marker(out_dir), "w"):
-        pass
+    if rebuild:
+        with open(_marker(d), "w") as f:
+            f.write(_layout(bits, partitions))
 
 
 def add_key_inplace(d: str, host: str, url_key: str, host_hash: int,
                     bits: int) -> None:
-    """O(1) single-key insert into a COMPLETE sidecar dir (the EnqueueUri
-    path — rebuilding the whole sidecar for one key would be an
-    O(seen-set) job). Only the key's partition file is rewritten, via
-    atomic replace: hard-linked copies of the old file in other round dirs
-    keep their inode and stay untouched. The _COMPLETE marker's mtime is
-    then bumped — the generation stamp that invalidates worker caches."""
-    _or_into_part(d, d, int(host_hash), pd.Series([host]), pd.Series([url_key]),
+    """O(1) single-key insert into a complete sidecar (the EnqueueUri path —
+    rebuilding the whole sidecar for one key would be an O(seen-set) job):
+    only the key's partition file is replaced."""
+    _or_into_part(d, int(host_hash), pd.Series([host]), pd.Series([url_key]),
                   bits)
-    os.utime(_marker(d))
-
-
-def gc_sidecars(state_root: str, keep_from_round: int) -> None:
-    """Drop sidecar dirs for rounds below ``keep_from_round`` (only the
-    current round's dir is ever read; old rounds are resumable from the
-    seen table via rebuild)."""
-    broot = os.path.join(state_root, "bloom")
-    if not os.path.isdir(broot):
-        return
-    for name in os.listdir(broot):
-        if name.startswith("round-"):
-            try:
-                k = int(name[len("round-"):])
-            except ValueError:
-                continue
-            if k < keep_from_round:
-                shutil.rmtree(os.path.join(broot, name), ignore_errors=True)

@@ -363,8 +363,16 @@ class SparkCrawler:
         st.write_table("frontier", k, frontier)
         if seen_new:
             import os as _os
-            import shutil as _shutil
 
+            # O(1) sidecar maintenance, before the key reaches seen: OR its
+            # bits into its partition file in place (an incomplete sidecar
+            # is rebuilt from seen by the next checking round anyway)
+            bd = B.sidecar_dir(st.root)
+            if B.is_complete(bd, self.cfg.bloom_bits, self.cfg.num_partitions):
+                row = entry.select("host", "url_key", "host_hash").head()
+                B.add_key_inplace(
+                    bd, row.host, row.url_key, row.host_hash, self.cfg.bloom_bits
+                )
             delta = entry.select(
                 "host", "host_hash", "url_key", "path", "query",
                 F.col("depth").alias("first_depth"),
@@ -375,17 +383,6 @@ class SparkCrawler:
                 delta = self.spark.read.parquet(d).unionByName(delta)
             delta = delta.localCheckpoint(eager=True)
             st.write_table("seen", k, delta)
-            # O(1) sidecar maintenance: OR the one key's bits into its
-            # partition file in place (an incomplete/missing sidecar is
-            # dropped; the next checking round rebuilds it from seen)
-            bd = B.sidecar_dir(st.root, k)
-            if B.is_complete(bd):
-                row = entry.select("host", "url_key", "host_hash").head()
-                B.add_key_inplace(
-                    bd, row.host, row.url_key, row.host_hash, self.cfg.bloom_bits
-                )
-            else:
-                _shutil.rmtree(_os.path.join(st.root, "bloom"), ignore_errors=True)
         st.commit(replace(
             m, next_seq=m.next_seq + 1, frontier_rows=m.frontier_rows + 1,
             done=False, seen_rows=m.seen_rows + int(seen_new),
@@ -418,9 +415,6 @@ class SparkCrawler:
 
         seen_rows = m.seen_rows
         if allow_requeue:
-            import os
-            import shutil
-
             removed_keys = frontier.filter(match).select("host", "url_key")
             # the consolidated seen count rides its checkpoint (no extra job)
             obs = Observation(f"requeue_r{k}")
@@ -433,13 +427,10 @@ class SparkCrawler:
             seen_rows = obs.get["n"]
             # crash-safe wholesale rewrite via the compaction marker flip
             # (state.replace_table) — the new seen content is published
-            # atomically, never a delete-then-write window
+            # atomically, never a delete-then-write window. The removed keys'
+            # bits stay in the Bloom sidecar: false positives, which the
+            # exact anti-join resolves
             st.replace_table("seen", k, consolidated)
-            # bloom has no deletes: drop sidecars so the next checking round
-            # rebuilds from seen
-            bdir = os.path.join(st.root, "bloom")
-            if os.path.exists(bdir):
-                shutil.rmtree(bdir)
 
         st.write_table("frontier", k, kept)
         frontier_rows = m.frontier_rows - n_removed

@@ -104,8 +104,9 @@ class Carry:
     writes of the same rows, which may still be in flight."""
     frontier: DataFrame              # frontier entering the round
     seen: DataFrame                  # seen view the round dedups against
-    bloom_job: object = None         # the build writing the round's Bloom
-                                     # sidecar; None = none in flight
+    bloom_job: object = None         # the update writing the previous
+                                     # round's keys into the Bloom sidecar;
+                                     # None = none in flight
     committer: object = None         # the previous round's committer; None
                                      # when the frames come from committed
                                      # tables
@@ -144,6 +145,10 @@ class _Job(InheritableThread):
             self._fn()
         except BaseException as e:  # re-raised on wait() in the driver thread
             self.exc = e
+        finally:
+            # a finished job frees what its closure holds (a committer's
+            # predecessor and writes, a write's checkpointed frames)
+            self._fn = None
 
     def wait(self):
         self.join()
@@ -222,7 +227,6 @@ def commit_when_landed(state, prev, jobs: list, manifest: Manifest) -> None:
         _join_quietly(jobs)
         raise
     state.commit(manifest)
-    B.gc_sidecars(state.root, manifest.next_round)
 
 
 def run_round(
@@ -235,8 +239,9 @@ def run_round(
     The round's writes and its committer run in the background: the
     committer waits for ``carry.committer`` and this round's writes, then
     commits the returned manifest, so rounds commit in order and the next
-    round's compute never waits. ``carry.bloom_job`` writes this round's
-    sidecar, so the round waits on it before reading that sidecar.
+    round's compute never waits. ``carry.bloom_job`` ORs the previous round's
+    keys into the Bloom sidecar, so the round waits on it before reading
+    the sidecar.
 
     If the round raises, every background job it started (a sidecar
     build, the fetch_log write, the carried cut, the committer) is joined
@@ -267,19 +272,25 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     # counts — persist so the (large, growing) union scan happens once
     seen = carry.seen.persist()
 
-    # The Bloom check runs once seen reaches bloom_min_seen, and only a
-    # checking round owns a sidecar. With no build in flight and no complete
-    # dir on disk (round 0, resume, the threshold-crossing round, a sidecar
-    # dropped by frontier surgery), rebuild it from the full seen view — a
-    # distributed job that overlaps SELECT..FETCH; the check stage waits.
-    sidecar = B.sidecar_dir(state.root, rnd)
+    # The Bloom check runs once seen reaches bloom_min_seen. With no update
+    # in flight and no complete sidecar of this layout on disk (the first
+    # checking round, a resume after rounds without the check, a changed
+    # bloom_bits or partition count), rebuild it from the full seen view —
+    # a distributed job that overlaps SELECT..FETCH; the check stage waits.
+    # The host_hash is recomputed: seen rows keep the partition count they
+    # were written with. A round without the check drops the marker before
+    # it can commit keys the sidecar lacks.
+    sidecar = B.sidecar_dir(state.root)
     use_bloom = (
         cfg.bloom_min_seen is not None and m.seen_rows >= cfg.bloom_min_seen
     )
-    if use_bloom and bloom_job is None and not B.is_complete(sidecar):
-        bloom_job = launch(
-            lambda: B.build_sidecar(seen, None, sidecar, cfg.bloom_bits)
-        )
+    if not use_bloom:
+        B.drop_complete(sidecar)
+    elif bloom_job is None and not B.is_complete(sidecar, cfg.bloom_bits, P):
+        keys = seen.withColumn("host_hash", host_hash_col(P))
+        bloom_job = launch(lambda: B.build_sidecar(
+            keys, sidecar, cfg.bloom_bits, P, rebuild=True
+        ))
 
     # ---------------- 1. SELECT (politeness + budgets) ----------------
     sel = select_polite(
@@ -482,7 +493,7 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     bloom_flagged = None
     if use_bloom:
         if bloom_job is not None:
-            # the build writes THIS round's sidecar — it must be on disk
+            # the rebuild or the previous round's update must be on disk
             # before any action triggers the check stage
             bloom_job.wait()
         flagged = (
@@ -642,13 +653,12 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     # they launch here and OVERLAP the next round's compute; the round's
     # committer commits its manifest once they land (the per-round
     # serial-action floor is what caps scaling efficiency at small rounds).
-    # The sidecar update is executor-side: the seen delta ORs into
-    # per-partition bitset files and untouched partitions carry forward as
-    # hard links from THIS round's sidecar. Only a checking round updates:
+    # The sidecar update is executor-side: the seen delta ORs into the
+    # per-partition bitset files in place. Only a checking round updates:
     # its sidecar is complete (the check stage waited on its build), and
-    # seen only grows, so the next round checks too. A non-checking round
-    # builds nothing — an update over an incomplete sidecar would read its
-    # missing partitions as zeros and commit false negatives.
+    # seen only grows, so the next round checks too. The check has read
+    # this round's bits already; the next round's check waits for this
+    # update through the carry.
     jobs = [
         fetch_log_job,
         launch(lambda: state.write_table("seen", rnd + 1, seen_delta)),
@@ -656,9 +666,8 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     ]
     next_bloom_job = None
     if use_bloom:
-        next_sidecar = B.sidecar_dir(state.root, rnd + 1)
         next_bloom_job = launch(lambda: B.build_sidecar(
-            seen_delta, sidecar, next_sidecar, cfg.bloom_bits
+            seen_delta, sidecar, cfg.bloom_bits, P, rebuild=False
         ))
         jobs.append(next_bloom_job)
 

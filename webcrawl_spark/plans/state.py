@@ -115,9 +115,6 @@ class CrawlState:
             self._dir("frontier", rnd)
         )
 
-    def read_table(self, table: str, rnd: int, schema) -> DataFrame:
-        return self.spark.read.schema(schema).parquet(self._dir(table, rnd))
-
     def read_seen(self, upto_round: int) -> DataFrame:
         return self._read_delta(
             "seen", upto_round, schemas.SEEN, "first_round"

@@ -608,23 +608,12 @@ _RETYPE_SCHEMA = (
 
 
 def _retype_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The decode stage's effective-type decision, kernel-for-kernel
-    (functions/crawl_udfs.py decode: extension guess → unknown→html adapt →
-    server Content-Type second chance; GetMimeType Crawler.cs:2100-2119)."""
+    """The decode stage's effective-type decision
+    (:func:`kernels.mime.effective_types`) over (doc_id, path, server_mime)."""
     from .kernels import mime as M
 
     for pdf in batches:
-        rtype = M.guess_types_batch(pdf["path"])
-        rtype = rtype.where(rtype != M.UNKNOWN, M.HTML)
-        mime = rtype.map(M.mime_of_type)
-        srv = M.resource_types_of_mime_batch(pdf["server_mime"])
-        use = srv != M.UNKNOWN
-        rtype = srv.where(use, rtype)
-        base = (
-            pdf["server_mime"].fillna("").astype(str)
-            .str.split(";").str[0].str.strip().str.lower()
-        )
-        mime = base.where(use, mime)
+        rtype, mime = M.effective_types(pdf["path"], pdf["server_mime"])
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
