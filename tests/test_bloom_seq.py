@@ -55,10 +55,10 @@ def test_assign_global_seq_matches_sort_order(spark):
     assert [(r["prio"], r["sub"], r["tag"]) for r in rows] == expected
 
 
-def test_assign_global_seq_with_count_empty(spark):
+def test_assign_global_seq_empty(spark):
     df = spark.createDataFrame([], "prio int, sub int")
-    out, n = assign_global_seq(df, ["prio", "sub"], 0, num_partitions=4, with_count=True)
-    assert n == 0 and out.count() == 0
+    out = assign_global_seq(df, ["prio", "sub"], 0, num_partitions=4)
+    assert out.columns == ["prio", "sub", "seq"] and out.count() == 0
 
 
 def test_shard_by_tokens_partitioning_invariant(spark):

@@ -261,18 +261,17 @@ def test_bloom_forced_golden(spark, tmp_path, monkeypatch):
     assert B.is_complete(d, fx.config.bloom_bits, 4)   # run_spark's P
 
 
-def test_max_queued_links_golden(spark, tmp_path):
-    fx = gen.chain(n=10, depth_limit=9)
-    fx = gen.Fixture(
-        "chain_cap", fx.pages, fx.seeds, fx.config.with_(max_queued_links=2)
+def _capped_tree() -> gen.Fixture:
+    """tree(3,3) with a 7-link frontier cap: the cap binds (19 fetches,
+    one of them an error, against 69 uncapped)."""
+    fx = gen.tree(branching=3, depth=3)
+    return gen.Fixture(
+        "tree_cap", fx.pages, fx.seeds, fx.config.with_(max_queued_links=7)
     )
-    run_and_check(spark, fx, tmp_path)
 
 
-def test_two_phase_seq_golden(spark, tmp_path, monkeypatch):
-    """Every round above the small-round threshold: fetch_seq and seq come
-    from the range-partitioned two-phase numbering (operators/seq.py), not
-    the lazy single-partition window — the same golden trace."""
+def _spy_numbering(monkeypatch) -> list:
+    """Record the ``out_col`` of every two-phase numbering a crawl runs."""
     numbered = []
     real = round_plan.assign_global_seq
 
@@ -280,7 +279,27 @@ def test_two_phase_seq_golden(spark, tmp_path, monkeypatch):
         numbered.append(kwargs["out_col"])
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(round_plan, "SMALL_ROUND_THRESHOLD", 0)
     monkeypatch.setattr(round_plan, "assign_global_seq", spy)
-    run_and_check(spark, gen.tree(branching=2, depth=3), tmp_path)
-    assert {"fetch_seq", "seq"} <= set(numbered)
+    return numbered
+
+
+def test_max_queued_links_golden(spark, tmp_path, monkeypatch):
+    """The cap keeps the first free slots of the one discovery numbering:
+    a small-round crawl never ranks its accepted set two-phase."""
+    numbered = _spy_numbering(monkeypatch)
+    c = run_and_check(spark, _capped_tree(), tmp_path)
+    assert c.fetch_log().count() == 19
+    assert numbered == []
+
+
+def test_two_phase_seq_golden(spark, tmp_path, monkeypatch):
+    """Every round above the small-round threshold: fetch_seq and seq come
+    from the range-partitioned two-phase numbering (operators/seq.py), not
+    the lazy single-partition window — the same golden trace, with and
+    without the frontier cap filtering it."""
+    numbered = _spy_numbering(monkeypatch)
+    monkeypatch.setattr(round_plan, "SMALL_ROUND_THRESHOLD", 0)
+    for fx in (gen.tree(branching=2, depth=3), _capped_tree()):
+        numbered.clear()
+        run_and_check(spark, fx, tmp_path)
+        assert {"fetch_seq", "seq"} <= set(numbered)

@@ -1,6 +1,7 @@
 """Frontier surgery (RemoveUris/ClearUris, SURVEY.md §2 op 17) and
 offline-mirror link rewriting (§2 op 14)."""
 
+import pytest
 
 from webcrawl_spark import schemas
 from webcrawl_spark.fixtures.gen import chain
@@ -45,6 +46,27 @@ def test_remove_uris_with_requeue(spark, tmp_path):
     assert "p2.html" not in urls
     seen_keys = {r["url_key"] for r in c.seen().collect()}
     assert "/p2.html" not in seen_keys      # erased, re-discoverable
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "requeue_removal"])
+def test_enqueue_uri_after_seen_rewrite(spark, tmp_path, rewrite):
+    """A seen compaction and a requeue removal both publish seen as a
+    compacted generation whose watermark covers the current round, so
+    reads ignore that round's dir: a key enqueued afterwards must still
+    reach seen(), or its rediscovery enqueues it a second time."""
+    c = _mk(spark, tmp_path, rewrite)
+    m = c.run(max_rounds=2)       # fetched p0, p1; frontier has p2
+    if rewrite == "compact":
+        c.state.compact("seen", m.next_round)
+    else:
+        assert c.enqueue_uri("http://chain.test/p6.html")
+        assert c.remove_uris(r"/p6\.html", allow_requeue=True) == 1
+    assert c.enqueue_uri("http://chain.test/p5.html", force=False)
+    assert "/p5.html" in {r["url_key"] for r in c.seen().collect()}
+    assert c.state.latest_manifest().seen_rows == c.seen().count()
+    c.run()                       # p4 rediscovers p5
+    urls = [r["url"] for r in c.trace().collect()]
+    assert len(urls) == len(set(urls)) == 8
 
 
 def test_clear_uris(spark, tmp_path):
@@ -245,8 +267,8 @@ def test_enqueue_uri_between_runs(spark, tmp_path, monkeypatch):
 
     bd = B.sidecar_dir(c.state.root)
     assert c.enqueue_uri(orphan)
-    # O(1) in-place sidecar insert: the sidecar stays complete, so the next
-    # run queues no O(seen-set) rebuild
+    # the key is ORed in through the rounds' sidecar update path: the
+    # sidecar stays complete, so the next run queues no O(seen-set) rebuild
     assert B.is_complete(bd, cfg.bloom_bits, cfg.num_partitions)
     assert c.enqueue_uri(fx.seeds[0], force=True)
     assert not c.enqueue_uri(fx.seeds[0], force=False)

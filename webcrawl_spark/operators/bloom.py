@@ -133,28 +133,21 @@ def _load_part(d: str, p: int) -> np.ndarray | None:
     return np.load(path) if os.path.exists(path) else None
 
 
-def _or_into_part(d: str, p: int, hosts: pd.Series, url_keys: pd.Series,
-                  bits: int) -> None:
-    """OR the keys' bits into partition ``p``'s bitset (zeros if absent),
-    replacing the file atomically."""
-    arr = _load_part(d, p)
-    if arr is None:
-        arr = np.zeros(bits // 8, dtype=np.uint8)
-    set_bits(arr, hosts, url_keys, bits)
-    tmp = f"{_part_path(d, p)}.tmp.{os.getpid()}"
-    with open(tmp, "wb") as f:
-        np.save(f, arr)
-    os.replace(tmp, _part_path(d, p))
-
-
 def make_update_fn(d: str, bits: int):
     """applyInPandas fn for ``keys.groupBy("host_hash")``: OR the group's
-    keys into its partition file. Returns a one-row (host_hash, n_added)
-    stats frame."""
+    keys into its partition's bitset (zeros if absent), replacing the file
+    atomically. Returns a one-row (host_hash, n_added) stats frame."""
 
     def update(pdf: pd.DataFrame) -> pd.DataFrame:
         p = int(pdf["host_hash"].iloc[0])
-        _or_into_part(d, p, pdf["host"], pdf["url_key"], bits)
+        arr = _load_part(d, p)
+        if arr is None:
+            arr = np.zeros(bits // 8, dtype=np.uint8)
+        set_bits(arr, pdf["host"], pdf["url_key"], bits)
+        tmp = f"{_part_path(d, p)}.tmp.{os.getpid()}"
+        with open(tmp, "wb") as f:
+            np.save(f, arr)
+        os.replace(tmp, _part_path(d, p))
         return pd.DataFrame({"host_hash": [p], "n_added": [len(pdf)]})
 
     return update
@@ -209,11 +202,3 @@ def build_sidecar(keys_df, d: str, bits: int, partitions: int,
         with open(_marker(d), "w") as f:
             f.write(_layout(bits, partitions))
 
-
-def add_key_inplace(d: str, host: str, url_key: str, host_hash: int,
-                    bits: int) -> None:
-    """O(1) single-key insert into a complete sidecar (the EnqueueUri path —
-    rebuilding the whole sidecar for one key would be an O(seen-set) job):
-    only the key's partition file is replaced."""
-    _or_into_part(d, int(host_hash), pd.Series([host]), pd.Series([url_key]),
-                  bits)

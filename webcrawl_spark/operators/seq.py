@@ -8,12 +8,13 @@ Strategy (no single-partition window, scales to 10^10 rows):
 
 1. range-repartition on the order columns (partition i holds keys ≤
    partition i+1's) and sort within partitions → a global total order;
-2. count rows per partition (tiny P-row aggregate collected to the driver);
+2. sum a weight per partition — 1 per row for a sequence, the token count
+   for ``shard_by_tokens`` (tiny P-row aggregate collected to the driver);
 3. seq = start + prefix_offset[partition] + (row_number within partition − 1).
 
 Correctness does not depend on where the range boundaries land — any split
 of a totally ordered sequence yields the same global numbering. The input is
-``localCheckpoint``-ed so the count job and the numbering job see the same
+``localCheckpoint``-ed so the sum job and the numbering job see the same
 partitioning (on a cluster the caller's per-round Parquet/Iceberg commit
 plays this role).
 """
@@ -26,52 +27,45 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _range_offsets(df: DataFrame, order_cols: list[str], weight,
+                   num_partitions: int, reliable: bool = False):
+    """Phases 1-2 of the distributed prefix sum: range-partition ``df`` on
+    ``order_cols``, sort within partitions, cut, and sum ``weight`` per
+    partition (a P-row aggregate collected to the driver). Returns the cut
+    frame (with ``__pid``) and the column holding each row's partition's
+    exclusive offset."""
+    from .ckpt import cut
+
+    ranged = cut(
+        df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn("__pid", F.spark_partition_id()),
+        reliable,
+    )
+    sums = dict(ranged.groupBy("__pid").agg(F.sum(weight).alias("s")).collect())
+    pids = sorted(sums)
+    offsets = zip(pids, accumulate([0] + [sums[p] for p in pids[:-1]]))
+    kv = [F.lit(x) for pair in offsets for x in pair]
+    return ranged, (F.create_map(*kv)[F.col("__pid")] if kv else F.lit(0))
+
+
 def assign_global_seq(
     df: DataFrame,
     order_cols: list[str],
     start: int,
     out_col: str = "seq",
     num_partitions: int = 32,
-    with_count: bool = False,
     reliable: bool = False,
 ):
     """Add ``out_col`` = start, start+1, … in ``order_cols`` order.
 
     ``order_cols`` tuples must be unique (the engine's orders are: they end
-    in a unique per-row sequence/ordinal). With ``with_count`` returns
-    ``(df, total_rows)`` — the total falls out of the per-partition counts
-    already collected, so callers never pay a separate ``count()`` job.
-    """
-    ranged = (
-        df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    from .ckpt import cut
-
-    ranged = cut(ranged, reliable)
-    counts = dict(
-        ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    )
-    pids = sorted(counts)
-    offsets = dict(zip(pids, accumulate([0] + [counts[p] for p in pids[:-1]])))
-    if offsets:
-        off_expr = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        )[F.col("__pid")]
-    else:
-        off_expr = F.lit(0)
+    in a unique per-row sequence/ordinal)."""
+    ranged, off = _range_offsets(df, order_cols, F.lit(1), num_partitions, reliable)
     w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (
-        ranged.withColumn(
-            out_col,
-            (F.lit(start) + off_expr + F.row_number().over(w) - F.lit(1)).cast("long"),
-        )
-        .drop("__pid")
-    )
-    if with_count:
-        return out, sum(counts.values())
-    return out
+    return ranged.withColumn(
+        out_col, (F.lit(start) + off + F.row_number().over(w) - F.lit(1)).cast("long")
+    ).drop("__pid")
 
 
 def shard_by_tokens(
@@ -89,10 +83,10 @@ def shard_by_tokens(
     document lands in the shard its first token falls into, so shard
     boundaries never split differently at different parallelism.
 
-    Same scale strategy as :func:`assign_global_seq` (the distributed
-    prefix sum): range-repartition on the id, per-partition token SUMS
-    (a tiny P-row aggregate to the driver), broadcast offsets, windowed
-    cumsum within partitions — no single-partition window at any size.
+    The same distributed prefix sum as :func:`assign_global_seq`, weighted
+    by token count: per-partition token SUMS give the offsets, then a
+    windowed cumsum within partitions — no single-partition window at any
+    size.
     """
     base = docs.select(
         F.col(id_col).alias("id"),
@@ -100,38 +94,14 @@ def shard_by_tokens(
             "n_tokens"
         ),
     )
-    ranged = (
-        base.repartitionByRange(num_partitions, F.col("id"))
-        .sortWithinPartitions("id")
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    from .ckpt import cut
-
-    ranged = cut(ranged, False)
-    sums = dict(
-        ranged.groupBy("__pid").agg(F.sum("n_tokens").alias("s")).collect()
-    )
-    pids = sorted(sums)
-    offsets = dict(zip(pids, accumulate([0] + [sums[p] for p in pids[:-1]])))
-    if offsets:
-        off_expr = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        )[F.col("__pid")]
-    else:
-        off_expr = F.lit(0)
+    ranged, off = _range_offsets(base, ["id"], F.col("n_tokens"), num_partitions)
     w = Window.partitionBy("__pid").orderBy("id")
-    return (
-        ranged.withColumn(
-            "__cum_excl",
-            off_expr + F.sum("n_tokens").over(w) - F.col("n_tokens"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            "n_tokens",
-            F.floor(F.col("__cum_excl") / tokens_per_shard)
-            .cast("long")
-            .alias("shard"),
-        )
+    return ranged.select(
+        F.col("id").alias(id_col),
+        "n_tokens",
+        F.floor((off + F.sum("n_tokens").over(w) - F.col("n_tokens")) / tokens_per_shard)
+        .cast("long")
+        .alias("shard"),
     )
 
 

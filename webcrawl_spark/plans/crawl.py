@@ -10,6 +10,7 @@ identical future trace (north_rule resumability).
 
 from __future__ import annotations
 
+import os
 from dataclasses import replace
 from typing import Optional
 
@@ -362,27 +363,28 @@ class SparkCrawler:
         frontier = st.read_frontier(k).unionByName(entry).localCheckpoint(eager=True)
         st.write_table("frontier", k, frontier)
         if seen_new:
-            import os as _os
-
-            # O(1) sidecar maintenance, before the key reaches seen: OR its
-            # bits into its partition file in place (an incomplete sidecar
-            # is rebuilt from seen by the next checking round anyway)
-            bd = B.sidecar_dir(st.root)
-            if B.is_complete(bd, self.cfg.bloom_bits, self.cfg.num_partitions):
-                row = entry.select("host", "url_key", "host_hash").head()
-                B.add_key_inplace(
-                    bd, row.host, row.url_key, row.host_hash, self.cfg.bloom_bits
-                )
             delta = entry.select(
                 "host", "host_hash", "url_key", "path", "query",
                 F.col("depth").alias("first_depth"),
                 F.lit(k).cast("int").alias("first_round"),
             )
-            d = st._dir("seen", k)
-            if _os.path.exists(d):
-                delta = self.spark.read.parquet(d).unionByName(delta)
-            delta = delta.localCheckpoint(eager=True)
-            st.write_table("seen", k, delta)
+            # the sidecar gains the key before seen does, through the
+            # rounds' update path (an incomplete sidecar is rebuilt from
+            # seen by the next checking round anyway)
+            bd, P = B.sidecar_dir(st.root), self.cfg.num_partitions
+            if B.is_complete(bd, self.cfg.bloom_bits, P):
+                B.build_sidecar(delta, bd, self.cfg.bloom_bits, P, rebuild=False)
+            info = st._compact_info("seen")
+            if info is not None and info[0] >= k:
+                # a compaction covers round k, so reads ignore its round
+                # dir: publish the key as the next compacted generation
+                st.replace_table("seen", k, st.read_seen(k).unionByName(delta)
+                                 .localCheckpoint(eager=True))
+            else:
+                d = st._dir("seen", k)
+                if os.path.exists(d):
+                    delta = self.spark.read.parquet(d).unionByName(delta)
+                st.write_table("seen", k, delta.localCheckpoint(eager=True))
         st.commit(replace(
             m, next_seq=m.next_seq + 1, frontier_rows=m.frontier_rows + 1,
             done=False, seen_rows=m.seen_rows + int(seen_new),

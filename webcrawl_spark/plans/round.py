@@ -20,9 +20,10 @@ Dataflow (each step cites the reference semantics it re-expresses):
     canonicalize + scope + robots + depth rule on the decoded batch.
 5.  ENQUEUE  min-depth merge into the carried frontier (Crawler.cs:2303-2307);
     left-anti join vs the seen set (Service.Enqueue dedup,
-    Crawler.cs:2301-2320); first-passing-discovery selection; crawler-trap
-    caps (MaxQueryStringsPerFile Crawler.cs:2415-2423; MaxQueuedLinks
-    Crawler.cs:2310-2315); deterministic global ``seq`` assignment.
+    Crawler.cs:2301-2320); first-passing-discovery selection;
+    MaxQueryStringsPerFile cap (Crawler.cs:2415-2423); ONE deterministic
+    global ``seq`` numbering, on which the MaxQueuedLinks cap
+    (Crawler.cs:2310-2315) is a filter keeping the first free slots.
 
 Every ordering key is data-derived — the same trace falls out at any
 parallelism (local[2] == local[32] == a 1000-executor cluster).
@@ -38,10 +39,14 @@ Physical-plan choices (the 100-TB story):
 - per-round stats ride the fetch cut as one Observation — no standalone
   count jobs over big inputs, and the fetch_log write is a background
   commit, off the round's critical path.
-- sequence assignment is adaptive: below
-  ``SMALL_ROUND_THRESHOLD`` rows a lazy single-partition window embeds
-  in downstream plans (zero extra jobs); above it, a range-partitioned
+- sequence assignment is adaptive, in one helper (``_number``) for both
+  ``fetch_seq`` and ``seq``: when the input's row bound (the frontier rows
+  for SELECT, the fetch cut's candidate count for ENQUEUE) is at most
+  ``SMALL_ROUND_THRESHOLD``, a lazy single-partition window embeds in
+  downstream plans (zero extra jobs); above it, a range-partitioned
   two-phase numbering keeps every task bounded (``operators/seq.py``).
+  Each is numbered once per round — the MaxQueuedLinks cap filters the
+  discovery numbering instead of ranking the accepted set a second time.
 - the seen anti-join keys on (host, url_key) — uniform hash keys, so a
   mega-host cannot skew the dedup shuffle; politeness selection is the one
   host-partitioned window, protected by the salt pre-prune.
@@ -55,6 +60,7 @@ from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..config import CrawlConfig
 from ..functions.crawl_udfs import (
     CANDIDATE_COLS,
@@ -69,11 +75,7 @@ from ..operators.ckpt import cut
 from ..operators.seq import assign_global_seq
 from .state import Manifest
 
-FRONTIER_COLS = [
-    "url", "url_key", "host", "host_hash", "path", "query", "depth",
-    "referrer", "link_type", "is_external", "priority", "seq", "failures",
-    "round", "post_data",
-]
+FRONTIER_COLS = schemas.FRONTIER.fieldNames()
 
 # below this many rows, global sequence numbering uses a lazy single-
 # partition window (zero extra jobs); above it, the range-partitioned
@@ -162,6 +164,19 @@ def _lazy_seq(df: DataFrame, order_cols: list, start: int, out_col: str) -> Data
     w = Window.orderBy(*order_cols)
     return df.coalesce(1).withColumn(
         out_col, (F.lit(start) + F.row_number().over(w) - F.lit(1)).cast("long")
+    )
+
+
+def _number(df: DataFrame, order_cols: list, start: int, out_col: str,
+            n_rows: int, cfg: CrawlConfig) -> DataFrame:
+    """Add ``out_col`` = start, start+1, … in ``order_cols`` order, where
+    ``n_rows`` bounds the rows of ``df``: the lazy window up to
+    ``SMALL_ROUND_THRESHOLD`` rows, the two-phase range numbering above."""
+    if n_rows <= SMALL_ROUND_THRESHOLD:
+        return _lazy_seq(df, order_cols, start, out_col)
+    return assign_global_seq(
+        df, order_cols, start=start, out_col=out_col,
+        num_partitions=cfg.num_partitions, reliable=cfg.reliable_checkpoints,
     )
 
 
@@ -267,7 +282,6 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     cfg = ctx.cfg
     P = cfg.num_partitions
     rnd, frontier, bloom_job = m.next_round, carry.frontier, carry.bloom_job
-    small = m.frontier_rows <= SMALL_ROUND_THRESHOLD
     # seen feeds both the dedup anti-join and the derived query-string
     # counts — persist so the (large, growing) union scan happens once
     seen = carry.seen.persist()
@@ -296,14 +310,10 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     sel = select_polite(
         frontier, _budget_col(ctx), cfg.salt_buckets, cfg.max_connections
     )
-    if small:
-        sel = _lazy_seq(sel, ["priority", "seq"], m.next_fetch_seq, "fetch_seq")
-    else:
-        sel = assign_global_seq(
-            sel, ["priority", "seq"], start=m.next_fetch_seq,
-            out_col="fetch_seq", num_partitions=P,
-            reliable=cfg.reliable_checkpoints,
-        )
+    sel = _number(
+        sel, ["priority", "seq"], m.next_fetch_seq, "fetch_seq",
+        m.frontier_rows, cfg,
+    )
 
     # ------------ 2-4. FETCH + DECODE + PARSE: ONE pages scan, ONE cut ----
     # Bounded by the politeness budget, not the corpus: the join holds at
@@ -410,7 +420,6 @@ def _run_round(ctx, state, pages, m, carry, started: list):
     fetched = cut(fetched.observe(obs_c, *stats), cfg.reliable_checkpoints)
     v = obs_c.get
     n_selected, n_good, n_retry = v["n_sel"], v["n_good"], v["n_retry"]
-    small_acc = v["n_cand"] <= SMALL_ROUND_THRESHOLD
     dec = fetched.filter(page)
     cand = fetched.filter(~page).select(*CANDIDATE_COLS)
 
@@ -588,23 +597,19 @@ def _run_round(ctx, state, pages, m, carry, started: list):
             .drop("__rnq", "n", "__prior")
         )
 
-    # 5e. global frontier cap (MaxQueuedLinks, Crawler.cs:2310-2315)
+    # 5f. deterministic discovery sequence (EnqueueCore order ADAPTed to a
+    #     (priority, seq) total order; Crawler.cs:2507-2512) — the one
+    #     numbering of the round's discoveries, bounded by the candidate count
+    acc = _number(acc, ["pos_f", "pos_o"], m.next_seq, "seq", v["n_cand"], cfg)
+
+    # 5e. global frontier cap (MaxQueuedLinks, Crawler.cs:2310-2315): the
+    #     reference stops accepting once the queue is full, so the cap keeps
+    #     the first ``slots`` discoveries in that same order — a filter on
+    #     the 5f numbering ((pos_f, pos_o) is unique per accepted key), and
+    #     the kept seqs stay contiguous from next_seq
     if cfg.max_queued_links is not None:
         slots = max(0, cfg.max_queued_links - n_carried)
-        acc = assign_global_seq(
-            acc, ["pos_f", "pos_o"], 0, out_col="__caprank", num_partitions=P,
-            reliable=cfg.reliable_checkpoints,
-        ).filter(F.col("__caprank") < slots).drop("__caprank")
-
-    # 5f. deterministic discovery sequence (EnqueueCore order ADAPTed to a
-    #     (priority, seq) total order; Crawler.cs:2507-2512)
-    if small_acc:
-        acc = _lazy_seq(acc, ["pos_f", "pos_o"], m.next_seq, "seq")
-    else:
-        acc = assign_global_seq(
-            acc, ["pos_f", "pos_o"], start=m.next_seq, out_col="seq",
-            num_partitions=P, reliable=cfg.reliable_checkpoints,
-        )
+        acc = acc.filter(F.col("seq") < m.next_seq + slots)
     # acc feeds four consumers (seen delta, new frontier entries, the Bloom
     # sidecar update, the next-frontier cut) — checkpoint once so the 5b-5f
     # window/join pipeline runs exactly once per round instead of once per

@@ -19,14 +19,6 @@ PAGES = T.StructType(
     ]
 )
 
-# pages extended with an HTTP-redirect edge (Location header equivalent);
-# a row with redirect_to set serves no content itself — the crawler follows
-# the chain (MaxRedirects, Crawler.cs:635-647). Optional: a pages table
-# without the column crawls exactly as before.
-PAGES_REDIRECT = T.StructType(
-    PAGES.fields + [T.StructField("redirect_to", T.StringType(), True)]
-)
-
 FRONTIER = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -88,25 +80,6 @@ FETCH_LOG = T.StructType(
         T.StructField("status", T.StringType(), False),   # ok|http_404|retryable|retries_exhausted
         T.StructField("failures", T.IntegerType(), False),
         T.StructField("fatal", T.BooleanType(), False),
-    ]
-)
-
-ERRORS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("failures", T.IntegerType(), False),
-        T.StructField("fatal", T.BooleanType(), False),
-        T.StructField("reason", T.StringType(), True),
-    ]
-)
-
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("path_prefix", T.StringType(), True),
-        T.StructField("allow", T.BooleanType(), False),
-        T.StructField("crawl_delay", T.DoubleType(), True),
     ]
 )
 
