@@ -30,62 +30,9 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # crawl scale: pages = docs × MULT; budget sized for ~6-8 BFS rounds
 MULT = int(os.environ.get("BENCH_MULT", "8"))
 
-BENCH_QUERIES = [
-    "crawl_frontier_round1",
-    "url_canonicalize", "link_extract", "link_pagerank", "link_hits",
-    "host_rank", "host_rank_urls", "trust_rank", "trust_demotion", "link_opic",
-    "mime_infer", "server_mime_retype",
-    "robots_filter", "robots_wildcard", "robots_parse", "sitemap_parse",
-    "nofollow_gate",
-    "rel_canonical", "meta_refresh",
-    "feed_parse", "url_discovery", "change_rate",
-    "politeness_topk", "politeness_topk_ranked", "politeness_backoff_topk", "seen_antijoin", "min_depth_merge",
-    "global_budget_limit", "query_string_cap", "retry_union",
-    "pricing_summary", "join_agg_revenue", "window_running_sum",
-    "sessionize", "event_tumbling_counts",
-    "dedup_exact", "paragraph_dedup", "paragraph_dedup_incremental",
-    "pii_scrub", "decontaminate",
-    "dedup_minhash_sig", "dedup_lsh_pairs", "lsh_bucket_stats",
-    "dedup_lsh_incremental", "dedup_exact_incremental",
-    "dedup_clusters", "dedup_simhash", "simhash_hamming",
-    "dedup_simhash_incremental",
-    "ngram_jaccard", "lang_id", "quality_score", "repetition_stats", "token_count",
-    "gopher_filter", "topk_terms", "pmi_collocations", "pmi_incremental", "lang_balanced_sample", "crawl_snapshot_diff",
-    "recrawl_ranks", "unigram_lm_score",
-    "c4_clean", "chunk_by_tokens", "bm25_search", "phrase_search",
-    "dedup_keep_best",
-    "duplicate_spans", "inverted_index", "anchor_text_stats",
-    "host_quality_rollup", "training_set_build", "strip_boilerplate",
-    "anchor_stats_incremental", "url_alias_groups",
-    "fingerprint", "corpus_clean_pipeline", "corpus_split_stats", "shard_by_tokens", "seeded_shuffle", "pack_sequences", "cosine_topk", "ann_ivf_topk", "ann_recall", "embed_neardup",
-    "embed_neardup_ann", "embed_neardup_incremental",
-    "embed_neardup_incr_recall", "neardup_recall", "multimodal_meta",
-    "multimodal_audio_meta", "multimodal_video_meta",
-    # crawl_host_stats is battery-only: like crawl_bfs_trace it runs a FULL
-    # crawl, which the bench measures once as crawl_bfs_full instead
-    "multimodal_frame_patches", "warc_roundtrip", "warc_revisit",
-    "wat_extract", "cdx_index",
-    "redirect_resolve",
-    "fatal_error_routing", "ngram_jaccard_lsh",
-    "hash_classifier", "dsir_weights", "semdedup",
-    "bpe_learn", "bpe_vocab", "bpe_encode", "sp_unigram_learn", "sp_unigram_encode",
-    "ann_pq_topk", "ann_pq_rerank", "ann_pq_recall",
-    "ann_pq_incremental", "curation_pipeline",
-    "knn_graph", "semantic_clusters", "tfidf_topk",
-    "cluster_balanced_sample", "srp_pairs", "srp_recall",
-    "kmv_vocab_est", "vocab_growth", "zipf_fit", "cms_freq_est",
-    "srp_incremental",
-    "hll_vocab_est", "doclen_quantiles", "ccnet_buckets", "weighted_sample",
-    "link_communities", "hybrid_search_rrf",
-    "snapshot_overlap_kmv", "host_template_lines", "host_template_clean",
-    "bigram_lm_score", "url_blocklist_filter", "mixture_weights",
-    "decontaminate_semantic", "edu_classifier", "duplicate_span_strip",
-    "wet_extract", "mixture_temperature",
-    "registrable_domain", "domain_rollup", "bloom_dedup_fpr",
-    "url_pattern_groups", "bm25_incremental", "host_mirror_pairs",
-    "dedup_normalized", "host_backoff", "cdc_dedup", "focused_crawl_ranks",
-    "cocitation", "anchor_search", "sitemap_recrawl",
-]
+# The battery entries that run a FULL crawl: the bench measures one crawl,
+# as crawl_bfs_full, instead. Every other battery entry is timed.
+FULL_CRAWL_QUERIES = ("crawl_reach_seen", "crawl_bfs_trace", "crawl_host_stats")
 
 
 def build_session(cpus: int):
@@ -160,8 +107,9 @@ def run_queries(spark, sf_dir: str) -> dict:
     import webcrawl_spark.queries as Q
 
     times = {}
-    for name in BENCH_QUERIES:
-        fn = Q.QUERIES[name]
+    for name, fn in Q.QUERIES.items():
+        if name in FULL_CRAWL_QUERIES:
+            continue
         t0 = time.time()
         n = fn(spark, sf_dir).count()
         times[name] = round(time.time() - t0, 3)

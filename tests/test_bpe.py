@@ -4,6 +4,7 @@ import re
 from collections import Counter
 
 from webcrawl_spark.operators import bpe as B
+from webcrawl_spark.operators import memo
 
 SF = "/root/testdata/sf0.001"
 
@@ -84,13 +85,13 @@ def test_bpe_model_cache_shared_and_clear(spark):
     # encode consumes the SAME model object (no refit)
     enc = B.bpe_encode_stats(docs, cache_key=("t-bpe", SF))
     assert enc.count() == docs.count()
-    B.bpe_cache_clear()
+    memo.clear()
     # m1/v1 are invalid after clear (blocks released); a fresh request
     # refits and must be fully usable
     m3, _ = B.bpe_model_cached(docs, cache_key=("t-bpe", SF))
     assert m3 is not m1
     assert m3.count() == B.BPE_MERGES
-    B.bpe_cache_clear()
+    memo.clear()
 
 
 def test_bpe_squeeze_and_determinism(spark):
@@ -123,7 +124,7 @@ def test_bpe_vocab_mass_equals_encode_mass(spark):
     """Σ vocab n_occurrences must equal Σ per-doc n_subwords — the two
     artifacts describe the same tokenized corpus."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    B.bpe_cache_clear()
+    memo.clear()
     try:
         v = B.bpe_vocab(docs, cache_key=("t-vocab", SF))
         e = B.bpe_encode_stats(docs, cache_key=("t-vocab", SF))
@@ -131,4 +132,4 @@ def test_bpe_vocab_mass_equals_encode_mass(spark):
         em = e.agg({"n_subwords": "sum"}).collect()[0][0]
         assert vm == em and vm > 0
     finally:
-        B.bpe_cache_clear()
+        memo.clear()

@@ -391,19 +391,19 @@ def test_bm25_incremental_equals_whole_corpus(spark):
     assert inc == batch
 
 
-def test_bm25_incremental_reappended_doc_accumulates(spark):
-    """A doc id present in BOTH state and delta merges additively — as if
-    its text were the concatenation."""
+def test_bm25_incremental_refetched_doc_replaces_postings(spark):
+    """A doc id present in BOTH state and delta is a re-fetch: its stored
+    postings go, and the merged index answers like a from-scratch build
+    over the delta's text for that id."""
     stored = postings_state(
         _bmdocs(spark, [(1, "spark window"), (2, "other words")])
     ).localCheckpoint(eager=True)
+    terms = ["spark", "window", "other"]
     inc = sorted(map(tuple, bm25_incremental(
-        _bmdocs(spark, [(1, "spark spark")]), stored, ["spark"], k=10
+        _bmdocs(spark, [(1, "spark spark")]), stored, terms, k=10
     ).collect()))
-    merged_docs = _bmdocs(
-        spark, [(1, "spark window spark spark"), (2, "other words")]
-    )
-    batch = sorted(map(tuple, bm25_rank(merged_docs, ["spark"], k=10).collect()))
+    refetched = _bmdocs(spark, [(1, "spark spark"), (2, "other words")])
+    batch = sorted(map(tuple, bm25_rank(refetched, terms, k=10).collect()))
     assert inc == batch
 
 

@@ -152,3 +152,31 @@ def test_vacuum_frontier_keeps_live_resume_identical(spark, tmp_path):
     c2.run()
     assert _trace(c1b) == _trace(c2)
     assert _seen(c1b) == _seen(c2)
+
+
+def test_compact_rejects_a_watermark_past_the_committed_state(spark, tmp_path):
+    """Reads ignore round dirs at or below the watermark, so a watermark
+    past ``next_round`` would hide the seen deltas of the rounds still to
+    run: seen_rows would outgrow seen() and those keys could be enqueued
+    again."""
+    import pytest
+
+    from webcrawl_spark.fixtures.gen import chain
+
+    fx = chain(n=6)
+    pages = spark.createDataFrame(fx.pages, schema=schemas.PAGES)
+    cfg = fx.config.with_(num_partitions=4)
+    root = str(tmp_path / "a")
+    c = SparkCrawler(spark, pages, fx.seeds, root, cfg)
+    m = c.run(max_rounds=2)
+    with pytest.raises(ValueError):
+        c.state.compact("seen", m.next_round + 3)
+    with pytest.raises(ValueError):
+        c.state.compact("fetch_log", m.next_round)
+    with pytest.raises(ValueError):
+        CrawlState(spark, str(tmp_path / "empty")).compact("seen", 0)
+
+    c.state.compact("seen", m.next_round)
+    c.state.compact("fetch_log", m.next_round - 1)
+    m = SparkCrawler(spark, pages, fx.seeds, root, cfg).run(max_rounds=2)
+    assert m.seen_rows == c.seen().count()

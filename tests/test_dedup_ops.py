@@ -9,6 +9,7 @@ surfaced by lsh_bucket_stats instead of silently under-reporting.
 import pandas as pd
 import pytest
 
+from webcrawl_spark.operators import memo
 from webcrawl_spark.operators import textdedup as TD
 
 
@@ -153,7 +154,7 @@ def test_minhash_cache_shares_one_materialization(spark):
     """cache_key memoizes the signature table per (application, input):
     the second call returns the SAME checkpoint-backed frame."""
     docs = _docs(spark, [f"document number {i} with words" for i in range(20)])
-    TD.minhash_cache_clear()
+    memo.clear()
     a = TD.minhash_wide_cached(docs, cache_key="t1")
     b = TD.minhash_wide_cached(docs, cache_key="t1")
     assert a is b
@@ -164,8 +165,8 @@ def test_minhash_cache_shares_one_materialization(spark):
     pairs_plain = TD.lsh_candidate_pairs(docs).toPandas()
     key = lambda df: sorted(map(tuple, df[["a", "b"]].itertuples(index=False)))
     assert key(pairs_cached) == key(pairs_plain)
-    TD.minhash_cache_clear()
-    assert not TD._SIG_CACHE
+    memo.clear()
+    assert not memo._STORE
 
 
 def test_simhash_incremental_equals_full_hamming_join(spark):

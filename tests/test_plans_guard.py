@@ -11,6 +11,7 @@ import contextlib
 
 import pyspark.sql.functions as F
 
+from webcrawl_spark.operators import memo
 from webcrawl_spark.operators import redirect as RD
 from webcrawl_spark.operators import similarity as SIM
 from webcrawl_spark.operators import textdedup as TD
@@ -122,7 +123,7 @@ def test_cached_signature_consumers_skip_the_md5_pass(spark):
     table (Scan ExistingRDD) — the md5-per-shingle pass must be ABSENT
     from their plans (it ran once at fit time)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    TD.minhash_cache_clear()
+    memo.clear()
     try:
         p = _plan(TD.lsh_candidate_pairs(docs, cache_key="guard"))
         assert "md5" not in p
@@ -131,7 +132,7 @@ def test_cached_signature_consumers_skip_the_md5_pass(spark):
         p2 = _plan(TD.lsh_candidate_pairs(docs))
         assert "md5" in p2
     finally:
-        TD.minhash_cache_clear()
+        memo.clear()
 
 
 def test_incremental_lsh_never_resignatures_the_corpus(spark):
@@ -141,7 +142,7 @@ def test_incremental_lsh_never_resignatures_the_corpus(spark):
     re-signaturing 100 TB of corpus text per delta would defeat the
     operator's purpose."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    TD.minhash_cache_clear()
+    memo.clear()
     try:
         corpus_sigs = TD.minhash_wide_cached(
             docs.filter("doc_id < 100"), cache_key="guard-corpus"
@@ -155,7 +156,7 @@ def test_incremental_lsh_never_resignatures_the_corpus(spark):
         # is pushed to the parquet reader
         assert "GreaterThanOrEqual(doc_id,100)" in p
     finally:
-        TD.minhash_cache_clear()
+        memo.clear()
 
 
 def test_incremental_neardup_never_refits_the_quantizer(spark):
@@ -165,7 +166,7 @@ def test_incremental_neardup_never_refits_the_quantizer(spark):
     must be salted (the corpus bucket side keys on only k_clusters distinct
     cids) and the whole plan JVM-only."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    SIM.kmeans_cache_clear()
+    memo.clear()
     try:
         corpus = emb.filter("vec_id % 5 <> 4")
         delta = emb.filter("vec_id % 5 = 4")
@@ -183,7 +184,7 @@ def test_incremental_neardup_never_refits_the_quantizer(spark):
         # storage
         assert p.count("windowspecdefinition") == 1
     finally:
-        SIM.kmeans_cache_clear()
+        memo.clear()
 
 
 def test_incremental_simhash_never_resignatures_the_corpus(spark):
@@ -192,7 +193,7 @@ def test_incremental_simhash_never_resignatures_the_corpus(spark):
     consumed as stored values — its banding is a shift/mask projection
     (Scan ExistingRDD), and the whole plan is JVM-only."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    TD.minhash_cache_clear()
+    memo.clear()
     try:
         corpus_sigs = TD.simhash_cached(
             docs.filter("doc_id < 100"), cache_key="guard-sh-corpus"
@@ -208,7 +209,7 @@ def test_incremental_simhash_never_resignatures_the_corpus(spark):
         # the delta text filter is pushed to the parquet reader
         assert "GreaterThanOrEqual(doc_id,100)" in p
     finally:
-        TD.minhash_cache_clear()
+        memo.clear()
 
 
 def test_hash_classifier_single_exchange_jvm_only(spark):
@@ -243,7 +244,7 @@ def test_semdedup_salted_candidates_and_broadcast_centroids(spark):
     assert "EvalPython" not in p
     assert "__salt" in p                      # candidate join is salted
     assert "BroadcastHashJoin" in p           # centroids broadcast
-    SIM.kmeans_cache_clear()
+    memo.clear()
 
 
 def test_bpe_encode_consumes_cached_model_no_refit(spark):
@@ -259,7 +260,7 @@ def test_bpe_encode_consumes_cached_model_no_refit(spark):
     assert "ExistingRDD" in p
     # consumer never re-aggregates pair counts (no TakeOrdered argmax)
     assert "TakeOrderedAndProject" not in p
-    B.bpe_cache_clear()
+    memo.clear()
 
 
 def test_incremental_pq_never_refits_or_reencodes_the_corpus(spark):
@@ -280,7 +281,7 @@ def test_incremental_pq_never_refits_or_reencodes_the_corpus(spark):
     # the model tables AND the once-materialized delta are ExistingRDD —
     # nothing re-reads parquet, nothing re-fits (no Lloyd mean aggregates)
     assert _nodes(p, "Scan parquet") == 0
-    SIM.pq_cache_clear()
+    memo.clear()
 
 
 def test_knn_graph_no_cartesian_and_jvm_only(spark):
@@ -476,7 +477,7 @@ def test_vocab_sketches_share_the_shingle_materialization(spark):
             assert _nodes(p, "Scan ExistingRDD") >= 1
             assert "EvalPython" not in p
     finally:
-        Q._shingle_cache_clear()
+        memo.clear()
 
 
 def test_ccnet_buckets_sketch_thresholds_no_corpus_window(spark):

@@ -3,6 +3,7 @@
 import math
 from collections import defaultdict
 
+from webcrawl_spark.operators import memo
 from webcrawl_spark.operators import similarity as SIM
 
 SF = "/root/testdata/sf0.001"
@@ -207,4 +208,4 @@ def test_pq_topk_salt_invariant(spark):
         outs.append(sorted((r.qid, r.nid, r.acos) for r in rows))
     assert outs[0] == outs[1] == outs[2] == outs[3]
     assert len(outs[0]) > 0
-    SIM.pq_cache_clear()
+    memo.clear()

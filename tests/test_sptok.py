@@ -94,3 +94,22 @@ def test_encode_stats_fertility(spark):
     # 'hello' count 3 >= 2 -> whole piece; 'world' count 1 -> chars
     assert got[1] == (3, 15, 1 + 1 + 5, (7 * 100) // 3)
     assert got[2] == (1, 5, 1, 100)
+
+
+def test_sp_big_bounds(spark):
+    """SP_BIG exceeds the costliest real segmentation (SP_WORD_CAP pieces,
+    each below ln(2⁶³)·10⁶ micro-nats) and its packed DP cell still fits a
+    BIGINT. A full-length word of the costliest single chars segments into
+    those chars."""
+    import math
+
+    max_piece = 44_000_000
+    assert math.log(2**63) * 1e6 < max_piece
+    assert SP.SP_BIG > SP.SP_WORD_CAP * max_piece
+    assert SP.SP_WORD_CAP * SP.SP_BIG * 2**20 < 2**63
+
+    word = "ab" * (SP.SP_WORD_CAP // 2)
+    v = _vocab(spark, [("a", -(max_piece - 1)), ("b", -(max_piece - 1))])
+    r = SP.viterbi_segment(_words(spark, [(word, 1)]), v).collect()[0]
+    assert r.n_pieces == SP.SP_WORD_CAP
+    assert r.best_cost == SP.SP_WORD_CAP * (max_piece - 1)

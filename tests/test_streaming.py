@@ -5,6 +5,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from webcrawl_spark.operators import memo
 from webcrawl_spark.streaming import events as SE
 
 SF = "/root/testdata/sf0.001"
@@ -241,7 +242,7 @@ def test_stream_neardup_flags_equals_batch(spark, tmp_path):
     )
     corpus = docs.filter("doc_id < 100")
     delta = docs.filter("doc_id >= 100")
-    TD.minhash_cache_clear()
+    memo.clear()
     try:
         corpus_sigs = TD.minhash_wide_cached(corpus, cache_key="stream-corpus")
 
@@ -272,7 +273,7 @@ def test_stream_neardup_flags_equals_batch(spark, tmp_path):
         assert got == want
         assert want, "fixture delta should hit at least one corpus bucket"
     finally:
-        TD.minhash_cache_clear()
+        memo.clear()
 
 
 def test_stream_paragraph_dedup_equals_batch(spark, tmp_path):
@@ -394,7 +395,7 @@ def test_stream_pq_topk_equals_batch(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     corpus = emb.filter("vec_id % 5 <> 4")
     delta = emb.filter("vec_id % 5 = 4")
-    SIM.pq_cache_clear()
+    memo.clear()
     try:
         _, cent, codes = SIM.pq_model_cached(
             corpus, cache_key=("stream-pq", SF)
@@ -423,7 +424,7 @@ def test_stream_pq_topk_equals_batch(spark, tmp_path):
         assert got == want
         assert want and len(want) == delta.count() * 3
     finally:
-        SIM.pq_cache_clear()
+        memo.clear()
 
 
 def test_stream_hll_registers_equal_batch(spark):

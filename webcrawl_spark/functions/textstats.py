@@ -561,7 +561,8 @@ def postings_state(
     postings under :func:`bm25_rank`'s exact tokenization — the smallest
     granularity from which every BM25 input is derivable (``dl`` is the
     per-id tf sum since postings cover EVERY term; ``df``/``N``/``avgdl``
-    follow), and which merges additively across crawls (tf sums). The
+    follow), and which merges across crawls per id (a re-fetched id's
+    postings replace its stored ones, :func:`bm25_incremental`). The
     index-maintenance analog of ``anchors.anchor_counts``: a deployment
     writes this once per crawl instead of re-tokenizing 100 TB."""
     return (
@@ -640,25 +641,22 @@ def bm25_incremental(
     query_terms: list[str], k: int = 20,
     text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
-    """Incremental search-index maintenance — the SECOND additive-state
+    """Incremental search-index maintenance — the SECOND incremental-state
     member of the delta-vs-corpus family (anchor_stats_incremental is the
     first): tokenize ONLY the delta, merge its postings into the persisted
-    :func:`postings_state` by summing tf (new docs append; a re-appended
-    doc's counts accumulate), and answer queries from the merged index.
-    The corpus text is never re-read; the battery oracle is the
-    WHOLE-CORPUS bm25_search SQL, so a hash match proves the merged index
-    answers exactly like a from-scratch build.
+    :func:`postings_state` (new docs append; a re-fetched doc's stored
+    postings are replaced by its delta postings), and answer queries from
+    the merged index. The corpus text is never re-read; the battery
+    oracle is the WHOLE-CORPUS bm25_search SQL, so a hash match proves the
+    merged index answers exactly like a from-scratch build.
 
-    100-TB shape: the merge is one uniform-key (id, term) aggregate over
-    index-sized inputs (the delta side is small by definition — AQE
-    broadcasts it); scoring inherits :func:`bm25_from_postings`' shape.
+    100-TB shape: the merge is one anti-join of the index on the delta's
+    ids (the delta side is small by definition — AQE broadcasts it);
+    scoring inherits :func:`bm25_from_postings`' shape.
     """
-    merged = (
-        stored_postings.unionByName(
-            postings_state(delta_docs, text_col, id_col)
-        )
-        .groupBy("id", "term")
-        .agg(F.sum("tf").alias("tf"))
+    refetched = delta_docs.select(F.col(id_col).alias("id"))
+    merged = stored_postings.join(refetched, "id", "left_anti").unionByName(
+        postings_state(delta_docs, text_col, id_col)
     )
     return bm25_from_postings(merged, query_terms, k)
 

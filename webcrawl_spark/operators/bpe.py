@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import memo
+
 BPE_MERGES = 8
 
 
@@ -162,58 +164,33 @@ def _learn(docs: DataFrame, text_col: str, n_merges: int):
     return merges, words.select("w", "wc", "sym")
 
 
-_BPE_CACHE: dict = {}
-_BPE_CACHE_MAX = 8
-# deferred-unpersist discipline shared with minhash_wide_cached /
-# kmeans_ranked_cached (ADVICE r4): eviction only drops the memo entry;
-# checkpoint blocks are released by the explicit clear hook so callers
-# still holding an evicted frame stay usable.
-_BPE_EVICTED: list = []
-
-
 def bpe_model_cached(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = BPE_MERGES,
     cache_key=None,
 ):
-    """Fit-once BPE model: ``(merges_df, encoded_vocab_df)`` memoized per
-    (Spark application, ``cache_key``, params) — the tokenizer analog of
-    the shared MinHash/k-means models. A tokenizer is fitted ONCE per
-    corpus and consumed by everything downstream (encode stats, chunking,
-    shard packing), so learn and encode over one corpus must not refit.
-    The encoded vocabulary is checkpointed too: it is the (small)
+    """Fit-once BPE model: ``(merges_df, encoded_vocab_df)`` memoized in
+    the one fit-once store (:mod:`.memo`) — the tokenizer analog of the
+    shared MinHash/k-means models. A tokenizer is fitted ONCE per corpus
+    and consumed by everything downstream (encode stats, chunking, shard
+    packing), so learn and encode over one corpus must not refit. The
+    encoded vocabulary is checkpointed too: it is the (small)
     vocabulary-bounded table every encode joins against. ``cache_key``
-    must identify the input; ``None`` disables caching."""
+    must identify the input; ``None`` returns the plans unmaterialized."""
     if cache_key is None:
         return _learn(docs, text_col, n_merges)
-    full_key = (
-        docs.sparkSession.sparkContext.applicationId,
-        cache_key, text_col, n_merges,
-    )
-    if full_key not in _BPE_CACHE:
-        while len(_BPE_CACHE) >= _BPE_CACHE_MAX:
-            _BPE_EVICTED.append(_BPE_CACHE.pop(next(iter(_BPE_CACHE))))
+
+    def _build():
         merges, vocab = _learn(docs, text_col, n_merges)
-        _BPE_CACHE[full_key] = (
+        return (
             merges.localCheckpoint(eager=True),
             vocab.localCheckpoint(eager=True),
         )
-    return _BPE_CACHE[full_key]
 
-
-def bpe_cache_clear() -> None:
-    """Drop every memoized BPE model (live AND evicted) and release the
-    checkpoint blocks; previously returned frames become invalid."""
-    _BPE_EVICTED.extend(_BPE_CACHE.values())
-    for merges, vocab in _BPE_EVICTED:
-        for df in (merges, vocab):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _BPE_EVICTED.clear()
-    _BPE_CACHE.clear()
+    return memo.fit_once(
+        docs, cache_key, ("bpe_model", text_col, n_merges), _build
+    )
 
 
 def bpe_learn(

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from . import memo
+
 
 def as_double(col: str) -> str:
     return f"transform({col}, x -> cast(x as double))"
@@ -201,51 +203,26 @@ def kmeans_ranked(
     return assign_ranked(emb, cent, id_col, vec_col, scale, _ve=ve)
 
 
-_KMEANS_CACHE: dict = {}
-_KMEANS_CACHE_MAX = 8
-# Evicted-but-not-released models (ADVICE r4): localCheckpoint truncates
-# lineage, so unpersisting at eviction would break callers still holding
-# the evicted frame. Eviction drops only the memo entry; blocks are
-# released by kmeans_cache_clear, the one safe invalidation point.
-_KMEANS_EVICTED: list = []
-
-
 def kmeans_ranked_cached(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     k_clusters: int = 4, iters: int = 2, scale: int = 1000,
     cache_key=None,
 ) -> DataFrame:
     """Fit-once k-means quantizer model: :func:`kmeans_ranked` materialized
-    (eager lineage cut) and memoized per (Spark application, ``cache_key``,
-    params) so ANN top-k and embedding near-dup share one fit instead of
-    each re-running Lloyd from scratch. ``cache_key`` must identify the
-    input (e.g. its path); ``None`` disables caching.
-
-    The cache is bounded (LRU-ish FIFO of ``_KMEANS_CACHE_MAX`` models):
-    localCheckpoint blocks pin executor storage for the application's
-    lifetime, so a long-lived session fitting quantizers over many inputs
-    must evict — eviction drops the memo entry but DEFERS the block
-    release to :func:`kmeans_cache_clear` (unpersisting a checkpoint a
-    caller still holds would fail its next action), which is the explicit
-    invalidation hook."""
+    (eager lineage cut) and memoized in the one fit-once store
+    (:mod:`.memo`) so ANN top-k and embedding near-dup share one fit
+    instead of each re-running Lloyd from scratch. ``cache_key`` must
+    identify the input (e.g. its path); ``None`` returns the plan
+    unmaterialized. ``memo.clear`` releases."""
     if cache_key is None:
         return kmeans_ranked(emb, id_col, vec_col, k_clusters, iters, scale)
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        cache_key, id_col, vec_col, k_clusters, iters, scale,
-    )
-    if full_key not in _KMEANS_CACHE:
-        while len(_KMEANS_CACHE) >= _KMEANS_CACHE_MAX:
-            # defer the unpersist: outstanding references stay usable
-            _KMEANS_EVICTED.append(_KMEANS_CACHE.pop(next(iter(_KMEANS_CACHE))))
-        _KMEANS_CACHE[full_key] = kmeans_ranked(
+    return memo.fit_once(
+        emb, cache_key,
+        ("kmeans_ranked", id_col, vec_col, k_clusters, iters, scale),
+        lambda: kmeans_ranked(
             emb, id_col, vec_col, k_clusters, iters, scale
-        ).localCheckpoint(eager=True)
-    return _KMEANS_CACHE[full_key]
-
-
-_MODEL_CACHE: dict = {}
-_MODEL_EVICTED: list = []
+        ).localCheckpoint(eager=True),
+    )
 
 
 def kmeans_model_cached(
@@ -257,8 +234,8 @@ def kmeans_model_cached(
     the centroid table (``kmeans_fit``) and the corpus bucket assignments
     (``assign_ranked``), fit over ONE materialized quantized long form and
     both lineage-cut. In a deployment both are parquet/Iceberg tables
-    written once at ingest; here the bounded cache stands in (same
-    deferred-unpersist discipline as the other fit caches)."""
+    written once at ingest; here the fit-once store (:mod:`.memo`) stands
+    in."""
     def _build():
         ve = _quantized_long(emb, id_col, vec_col, scale).localCheckpoint(
             eager=True
@@ -269,36 +246,10 @@ def kmeans_model_cached(
         ).localCheckpoint(eager=True)
         return cent, ranked
 
-    if cache_key is None:
-        return _build()
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        cache_key, id_col, vec_col, k_clusters, iters, scale,
+    return memo.fit_once(
+        emb, cache_key,
+        ("kmeans_model", id_col, vec_col, k_clusters, iters, scale), _build,
     )
-    if full_key not in _MODEL_CACHE:
-        while len(_MODEL_CACHE) >= _KMEANS_CACHE_MAX:
-            _MODEL_EVICTED.extend(_MODEL_CACHE.pop(next(iter(_MODEL_CACHE))))
-        _MODEL_CACHE[full_key] = _build()
-    return _MODEL_CACHE[full_key]
-
-
-def kmeans_cache_clear() -> None:
-    """Drop every memoized quantizer/model (live AND evicted) and release
-    their checkpoint blocks. After this, DataFrames previously returned by
-    :func:`kmeans_ranked_cached` / :func:`kmeans_model_cached` are
-    invalid — callers must re-request."""
-    _KMEANS_EVICTED.extend(_KMEANS_CACHE.values())
-    _KMEANS_CACHE.clear()
-    for pair in _MODEL_CACHE.values():
-        _KMEANS_EVICTED.extend(pair)
-    _MODEL_CACHE.clear()
-    _KMEANS_EVICTED.extend(_MODEL_EVICTED)
-    _MODEL_EVICTED.clear()
-    while _KMEANS_EVICTED:
-        try:
-            _KMEANS_EVICTED.pop().unpersist()
-        except Exception:
-            pass
 
 
 def kmeans_ivf_topk(
@@ -371,10 +322,6 @@ def kmeans_ivf_topk(
     ).select("query_id", "neighbor_id", F.round("cos", round_to).alias("cos"))
 
 
-_KNN_CACHE: dict = {}
-_KNN_EVICTED: list = []
-
-
 def knn_edges_cached(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 3, k_clusters: int = 4, iters: int = 2, probes: int = 2,
@@ -387,8 +334,8 @@ def knn_edges_cached(
     share instead of each re-running the IVF scoring pass (measured:
     15-17s each at sf0.1 when unshared, because the un-materialized plan
     additionally executes TWICE per consumer through the fwd/rev
-    mutuality split). Same bounded-FIFO/deferred-release contract as
-    :func:`kmeans_ranked_cached`; :func:`knn_cache_clear` releases.
+    mutuality split). Memoized in the one fit-once store (:mod:`.memo`)
+    like :func:`kmeans_ranked_cached`; ``memo.clear`` releases.
 
     The materialization uses the STATS-resetting cut (``cut_fresh_stats``
     — see its docstring): consumers self-join these edges (mutuality,
@@ -396,38 +343,19 @@ def knn_edges_cached(
     per join and have measurably killed the driver."""
     from .ckpt import cut_fresh_stats
 
-    if cache_key is None:
+    def plan():
         return kmeans_ivf_topk(
             emb, id_col, vec_col, n_queries=None, k=k, k_clusters=k_clusters,
             iters=iters, probes=probes, ranked=ranked,
         )
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        cache_key, id_col, vec_col, k, k_clusters, iters, probes,
+
+    if cache_key is None:
+        return plan()
+    return memo.fit_once(
+        emb, cache_key,
+        ("knn_edges", id_col, vec_col, k, k_clusters, iters, probes),
+        lambda: cut_fresh_stats(plan()),
     )
-    if full_key not in _KNN_CACHE:
-        while len(_KNN_CACHE) >= _KMEANS_CACHE_MAX:
-            _KNN_EVICTED.append(_KNN_CACHE.pop(next(iter(_KNN_CACHE))))
-        _KNN_CACHE[full_key] = cut_fresh_stats(
-            kmeans_ivf_topk(
-                emb, id_col, vec_col, n_queries=None, k=k,
-                k_clusters=k_clusters, iters=iters, probes=probes,
-                ranked=ranked,
-            )
-        )
-    return _KNN_CACHE[full_key]
-
-
-def knn_cache_clear() -> None:
-    """Drop every memoized k-NN edge list (live AND evicted) and release
-    their checkpoint blocks."""
-    _KNN_EVICTED.extend(_KNN_CACHE.values())
-    _KNN_CACHE.clear()
-    while _KNN_EVICTED:
-        try:
-            _KNN_EVICTED.pop().unpersist()
-        except Exception:
-            pass
 
 
 def neardup_pairs_bucketed(
@@ -800,10 +728,6 @@ def pq_encode(sub: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-_PQ_CACHE: dict = {}
-_PQ_EVICTED: list = []
-
-
 def pq_model_cached(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     m_sub: int = PQ_M, ks: int = PQ_KS, iters: int = 2, scale: int = 1000,
@@ -812,9 +736,8 @@ def pq_model_cached(
     """(sub, cent, codes) — the persisted PQ artifacts: the quantized long
     form, the M codebooks, and the corpus CODE table. In a deployment
     cent+codes are written once at ingest (the whole point of PQ: the code
-    table is the in-memory serving index); here the bounded cache stands
-    in so the three battery consumers fit once (same deferred-unpersist
-    discipline as the other model caches)."""
+    table is the in-memory serving index); here the fit-once store
+    (:mod:`.memo`) stands in so the three battery consumers fit once."""
     def _build():
         sd = dims // m_sub
         sub = _pq_sub(emb, id_col, vec_col, scale, sd).localCheckpoint(
@@ -826,29 +749,10 @@ def pq_model_cached(
         codes = pq_encode(sub, cent).localCheckpoint(eager=True)
         return sub, cent, codes
 
-    if cache_key is None:
-        return _build()
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        cache_key, id_col, vec_col, m_sub, ks, iters, scale, dims,
+    return memo.fit_once(
+        emb, cache_key,
+        ("pq_model", id_col, vec_col, m_sub, ks, iters, scale, dims), _build,
     )
-    if full_key not in _PQ_CACHE:
-        while len(_PQ_CACHE) >= _KMEANS_CACHE_MAX:
-            _PQ_EVICTED.extend(_PQ_CACHE.pop(next(iter(_PQ_CACHE))))
-        _PQ_CACHE[full_key] = _build()
-    return _PQ_CACHE[full_key]
-
-
-def pq_cache_clear() -> None:
-    """Drop every memoized PQ model (live AND evicted), release blocks."""
-    for triple in _PQ_CACHE.values():
-        _PQ_EVICTED.extend(triple)
-    _PQ_CACHE.clear()
-    while _PQ_EVICTED:
-        try:
-            _PQ_EVICTED.pop().unpersist()
-        except Exception:
-            pass
 
 
 def _pq_adc_scores(
@@ -1113,10 +1017,6 @@ def semantic_clusters(
     )
 
 
-_CLUSTERS_CACHE: dict = {}
-_CLUSTERS_EVICTED: list = []
-
-
 def semantic_clusters_cached(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 3, tau: float = 0.6, k_clusters: int = 4, iters: int = 2,
@@ -1128,43 +1028,24 @@ def semantic_clusters_cached(
     the clustering is the expensive fixpoint (CC rounds track component
     diameter), and its consumers (cluster-balanced sampling, SemDeDup
     pruning, per-cluster stats) all read the SAME assignment in
-    production. Same bounded-FIFO/deferred-release contract as the other
-    model caches; :func:`clusters_cache_clear` releases."""
+    production. Memoized in the one fit-once store (:mod:`.memo`);
+    ``memo.clear`` releases."""
     from .ckpt import cut_fresh_stats
 
-    if cache_key is None:
+    def plan():
         return semantic_clusters(
             emb, id_col, vec_col, k, tau, k_clusters, iters, probes,
             ranked, knn,
         )
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        cache_key, id_col, vec_col, k, tau, k_clusters, iters, probes,
+
+    if cache_key is None:
+        return plan()
+    return memo.fit_once(
+        emb, cache_key,
+        ("semantic_clusters", id_col, vec_col, k, tau, k_clusters, iters,
+         probes),
+        lambda: cut_fresh_stats(plan()),
     )
-    if full_key not in _CLUSTERS_CACHE:
-        while len(_CLUSTERS_CACHE) >= _KMEANS_CACHE_MAX:
-            _CLUSTERS_EVICTED.append(
-                _CLUSTERS_CACHE.pop(next(iter(_CLUSTERS_CACHE)))
-            )
-        _CLUSTERS_CACHE[full_key] = cut_fresh_stats(
-            semantic_clusters(
-                emb, id_col, vec_col, k, tau, k_clusters, iters, probes,
-                ranked, knn,
-            )
-        )
-    return _CLUSTERS_CACHE[full_key]
-
-
-def clusters_cache_clear() -> None:
-    """Drop every memoized cluster assignment (live AND evicted) and
-    release their checkpoint blocks."""
-    _CLUSTERS_EVICTED.extend(_CLUSTERS_CACHE.values())
-    _CLUSTERS_CACHE.clear()
-    while _CLUSTERS_EVICTED:
-        try:
-            _CLUSTERS_EVICTED.pop().unpersist()
-        except Exception:
-            pass
 
 
 def cluster_balanced_sample(clusters: DataFrame, cap: int) -> DataFrame:
@@ -1377,24 +1258,18 @@ def srp_codes_cached(
     cache_key=None,
 ) -> DataFrame:
     """Fit-once (id, code) table — :func:`srp_codes` materialized and
-    memoized in the k-means model store (same bounded FIFO, same
-    deferred-unpersist eviction, same :func:`kmeans_cache_clear` hook).
+    memoized in the one fit-once store (:mod:`.memo`).
     In a deployment this is the persisted corpus code table — one BIGINT
     per vector, written once at ingest; :func:`srp_pairs_incremental`
     probes it without reading a single corpus vector."""
     if cache_key is None:
         return srp_codes(emb, id_col, vec_col, n_planes, dim, scale)
-    full_key = (
-        emb.sparkSession.sparkContext.applicationId,
-        "srp", cache_key, id_col, vec_col, n_planes, dim, scale,
-    )
-    if full_key not in _KMEANS_CACHE:
-        while len(_KMEANS_CACHE) >= _KMEANS_CACHE_MAX:
-            _KMEANS_EVICTED.append(_KMEANS_CACHE.pop(next(iter(_KMEANS_CACHE))))
-        _KMEANS_CACHE[full_key] = srp_codes(
+    return memo.fit_once(
+        emb, cache_key, ("srp_codes", id_col, vec_col, n_planes, dim, scale),
+        lambda: srp_codes(
             emb, id_col, vec_col, n_planes, dim, scale
-        ).localCheckpoint(eager=True)
-    return _KMEANS_CACHE[full_key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 # Semantic benchmark decontamination (the embedding-space sibling of

@@ -39,7 +39,14 @@ SP_MAXP = 6            # max candidate piece length (chars)
 SP_MIN_COUNT = 4       # multi-char candidates need ≥ this many occurrences
 SP_WORD_CAP = 30       # words truncate here: bounds the DP and the packing
 SP_TOPN = 200          # battery output size
-SP_BIG = 1_000_000_000  # cost of an absent piece (unreachable: chars exist)
+SP_BIG = 10_000_000_000  # cost of an absent piece (unreachable: chars exist)
+
+# An absent piece must cost more than any real segmentation: a real piece
+# costs -lp < ln(2⁶³)·10⁶ < 44·10⁶ micro-nats (counts are BIGINT), and a
+# word has at most SP_WORD_CAP pieces. The Viterbi fold (and the oracle's
+# replay) packs cost·2²⁰ into a BIGINT, which caps it from above.
+assert SP_BIG > SP_WORD_CAP * 44_000_000
+assert SP_WORD_CAP * SP_BIG * 2**20 < 2**63
 
 
 def word_counts(

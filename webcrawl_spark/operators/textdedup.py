@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from . import memo
+
 # 32-bit base hash from a cross-engine-stable digest: first 8 md5 hex chars.
 # (conv returns a string; arithmetic is exact below 2^53 and results are
 # cast back to bigint.)
@@ -118,56 +120,25 @@ def minhash_wide(
     )
 
 
-_SIG_CACHE: dict = {}
-_SIG_CACHE_MAX = 8
-# Evicted-but-not-released frames (ADVICE r4): a localCheckpoint truncates
-# lineage, so unpersisting at eviction time would break any caller still
-# holding the evicted DataFrame (missing-block error on its next action).
-# Eviction therefore only drops the memo entry; the blocks are released by
-# the explicit clear hook, which is the only safe invalidation point.
-_SIG_EVICTED: list = []
-
-
 def minhash_wide_cached(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = 8, k: int = 5, cache_key=None,
 ) -> DataFrame:
     """Fit-once signature model: :func:`minhash_wide` materialized (eager
-    lineage cut) and memoized per (Spark application, ``cache_key``, params)
-    — the same pattern as the shared k-means quantizer
-    (``similarity.kmeans_ranked_cached``). The signature pass (md5 per
-    shingle occurrence + the min-aggregate shuffle) dominates every MinHash
-    consumer, so LSH pairs, star-edge clustering, and Jaccard verification
-    over one corpus should compute it ONCE. ``cache_key`` must identify the
-    input (e.g. its path); ``None`` disables caching. Bounded FIFO cache;
-    :func:`minhash_cache_clear` is the explicit invalidation hook."""
+    lineage cut) and memoized in the one fit-once store (:mod:`.memo`).
+    The signature pass (md5 per shingle occurrence + the min-aggregate
+    shuffle) dominates every MinHash consumer, so LSH pairs, star-edge
+    clustering, and Jaccard verification over one corpus should compute it
+    ONCE. ``cache_key`` must identify the input (e.g. its path); ``None``
+    returns the plan unmaterialized. ``memo.clear`` releases."""
     if cache_key is None:
         return minhash_wide(docs, text_col, id_col, num_hashes, k)
-    full_key = (
-        docs.sparkSession.sparkContext.applicationId,
-        cache_key, text_col, id_col, num_hashes, k,
-    )
-    if full_key not in _SIG_CACHE:
-        while len(_SIG_CACHE) >= _SIG_CACHE_MAX:
-            # defer the unpersist: outstanding references stay usable
-            _SIG_EVICTED.append(_SIG_CACHE.pop(next(iter(_SIG_CACHE))))
-        _SIG_CACHE[full_key] = minhash_wide(
+    return memo.fit_once(
+        docs, cache_key, ("minhash_wide", text_col, id_col, num_hashes, k),
+        lambda: minhash_wide(
             docs, text_col, id_col, num_hashes, k
-        ).localCheckpoint(eager=True)
-    return _SIG_CACHE[full_key]
-
-
-def minhash_cache_clear() -> None:
-    """Drop every memoized signature table (live AND evicted) and release
-    their checkpoint blocks. After this, DataFrames previously returned by
-    :func:`minhash_wide_cached` are invalid — callers must re-request."""
-    _SIG_EVICTED.extend(_SIG_CACHE.values())
-    _SIG_CACHE.clear()
-    while _SIG_EVICTED:
-        try:
-            _SIG_EVICTED.pop().unpersist()
-        except Exception:
-            pass
+        ).localCheckpoint(eager=True),
+    )
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -585,24 +556,15 @@ def simhash_cached(
     bits: int = 32, cache_key=None,
 ) -> DataFrame:
     """Fit-once (id, simhash) table — :func:`simhash` materialized and
-    memoized exactly like :func:`minhash_wide_cached` (same bounded store,
-    same deferred-unpersist eviction, same :func:`minhash_cache_clear`
-    invalidation hook). In a deployment this is a persisted parquet/Iceberg
-    table written once at ingest; the incremental consumer never recomputes
-    it."""
+    memoized like :func:`minhash_wide_cached`. In a deployment this is a
+    persisted parquet/Iceberg table written once at ingest; the
+    incremental consumer never recomputes it."""
     if cache_key is None:
         return simhash(docs, text_col, id_col, bits)
-    full_key = (
-        docs.sparkSession.sparkContext.applicationId,
-        "simhash", cache_key, text_col, id_col, bits,
+    return memo.fit_once(
+        docs, cache_key, ("simhash", text_col, id_col, bits),
+        lambda: simhash(docs, text_col, id_col, bits).localCheckpoint(eager=True),
     )
-    if full_key not in _SIG_CACHE:
-        while len(_SIG_CACHE) >= _SIG_CACHE_MAX:
-            _SIG_EVICTED.append(_SIG_CACHE.pop(next(iter(_SIG_CACHE))))
-        _SIG_CACHE[full_key] = simhash(
-            docs, text_col, id_col, bits
-        ).localCheckpoint(eager=True)
-    return _SIG_CACHE[full_key]
 
 
 def simhash_bands(sigs: DataFrame, bands: int = 4, bits: int = 32) -> DataFrame:

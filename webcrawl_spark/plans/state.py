@@ -188,9 +188,22 @@ class CrawlState:
         maintenance — run between crawls, never mid-round. Safe at any
         crash point: data is written first, the marker flips atomically,
         cleanup of superseded dirs is best-effort and retried by the
-        next compaction."""
-        round_col = {"seen": "first_round", "fetch_log": "round"}[table]
-        schema = {"seen": schemas.SEEN, "fetch_log": schemas.FETCH_LOG}[table]
+        next compaction.
+
+        The watermark may not pass the committed state: at most the latest
+        manifest's ``next_round`` for ``seen`` and ``next_round - 1`` for
+        ``fetch_log``. Reads ignore round dirs at or below the watermark,
+        so a later round's delta written under it would be lost."""
+        round_col, schema, lag = {
+            "seen": ("first_round", schemas.SEEN, 0),
+            "fetch_log": ("round", schemas.FETCH_LOG, 1),
+        }[table]
+        m = self.latest_manifest()
+        if m is None or upto_round > m.next_round - lag:
+            raise ValueError(
+                f"compact({table!r}, {upto_round}) is past the committed "
+                f"state (next_round={None if m is None else m.next_round})"
+            )
         merged = self._read_delta(table, upto_round, schema, round_col)
         self.replace_table(table, upto_round, merged)
 

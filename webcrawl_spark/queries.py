@@ -40,6 +40,7 @@ from .kernels.urlnorm import canonicalize
 from .operators import blocklist as BLK
 from .operators import bpe as BPE
 from .operators import graph as GR
+from .operators import memo
 from .operators import psl as PSL
 from .operators import urlpatterns as UP
 from .operators import similarity as SIM
@@ -1606,12 +1607,13 @@ BM25_SPLIT = 100  # delta = doc_id < BM25_SPLIT; corpus = the rest
 
 def q_bm25_incremental(spark, sf_dir):
     """Incremental search-index maintenance (functions/textstats
-    .bm25_incremental): the second ADDITIVE-STATE member of the
+    .bm25_incremental): the second incremental-state member of the
     delta-vs-corpus family — only the delta's text is tokenized;
-    yesterday's persisted (id, term, tf) postings merge by tf sum and
-    queries answer from the merged index. The oracle is the WHOLE-CORPUS
-    bm25_search SQL, so the hash match proves the maintained index
-    answers exactly like a from-scratch build."""
+    yesterday's persisted (id, term, tf) postings, less any re-fetched
+    id's, union the delta's and queries answer from the merged index.
+    The oracle is the WHOLE-CORPUS bm25_search SQL, so the hash match
+    proves the maintained index answers exactly like a from-scratch
+    build."""
     d = _t(spark, sf_dir, "documents")
     stored = TS.postings_state(
         d.where(f"doc_id >= {BM25_SPLIT}")
@@ -7103,41 +7105,23 @@ def q_srp_incremental(spark, sf_dir):
 
 KMV_SHINGLE_K = 8  # char-shingle width for the KMV item domain
 
-# fit-once materialization of the per-source DISTINCT shingle-hash domain:
-# kmv_vocab_est and hll_vocab_est each consume it twice (estimate + exact
-# grading side), so without it the corpus explode+md5 pass runs 4× per
-# bench session. Same bounded-memo discipline as minhash_wide_cached;
-# eviction drops the reference only (the deferred-unpersist lesson —
-# ADVICE r4 item 1), blocks release at _shingle_cache_clear.
-_SHINGLE_CACHE: dict[str, DataFrame] = {}
-
-
 def _distinct_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    got = _SHINGLE_CACHE.get(key)
-    if got is not None:
-        return got
+    """Fit-once materialization of the per-source DISTINCT shingle-hash
+    domain: kmv_vocab_est and hll_vocab_est each consume it twice
+    (estimate + exact grading side), so without it the corpus explode+md5
+    pass runs 4× per bench session."""
     d = _t(spark, sf_dir, "documents")
-    sh = d.select(
-        F.col("source").alias("grp"),
-        F.explode(
-            F.expr(TD.shingle_hashes_sql("text", k=KMV_SHINGLE_K))
-        ).alias("h"),
-    ).distinct()
-    got = sh.localCheckpoint(eager=True)
-    if len(_SHINGLE_CACHE) >= 4:
-        _SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE)))
-    _SHINGLE_CACHE[key] = got
-    return got
+    return memo.fit_once(
+        d, sf_dir, ("distinct_shingles", KMV_SHINGLE_K),
+        lambda: d.select(
+            F.col("source").alias("grp"),
+            F.explode(
+                F.expr(TD.shingle_hashes_sql("text", k=KMV_SHINGLE_K))
+            ).alias("h"),
+        ).distinct().localCheckpoint(eager=True),
+    )
 
 
-def _shingle_cache_clear() -> None:
-    for df in _SHINGLE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _SHINGLE_CACHE.clear()
 CMS_TOP_N = 10     # heavy hitters probed against the count-min grid
 QHIST_QS = [500, 900, 990]  # quantiles graded by doclen_quantiles (permille)
 CCNET_W = 200_000  # ccnet_buckets: micro-nat histogram bucket width
