@@ -1,6 +1,5 @@
-"""Rank-weighted priority fold — ONE JVM expression shared by the batch
-accept stage (plans/round.py step 5c') and the streaming frontier
-(streaming/frontier.py), both twins of the scalar
+"""Rank-weighted priority fold — the JVM expression the accept stage
+(plans/round.py step 5c') applies, twin of the scalar
 ``config.rank_weighted_priority`` the oracle replays.
 
 Reference semantics: EnqueueCore's HTML-first class ordering

@@ -146,8 +146,7 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 
     NULL-text rows have no content to be duplicates of and are excluded —
     without the filter they'd all share the NULL digest and be reported as
-    one bogus duplicate group (same rule as the streaming dedup's NULL
-    passthrough)."""
+    one bogus duplicate group."""
     return (
         docs.filter(F.col(text_col).isNotNull())
         .select(F.md5(F.col(text_col)).alias("digest"), F.col(id_col).alias("id"))
@@ -182,7 +181,7 @@ def dedup_exact_incremental(
     yesterday's persisted digest table — ``(id, digest, keep)`` where a
     delta row survives iff its digest is absent from the corpus AND it is
     the delta's first copy (min id per digest). NULL-text rows have no
-    content to collide on and always survive (the streaming-dedup rule).
+    content to collide on and always survive.
 
     100-TB shape: the corpus's text is never read — only its digest
     table; both probes (membership anti-join + within-delta min-id
@@ -296,15 +295,11 @@ def lsh_candidate_pairs(
     )
 
 
-_INHERIT = object()   # sentinel: "delta cap = corpus cap" (None means uncapped)
-
-
 def lsh_pairs_incremental(
     delta_docs: DataFrame, corpus_sigs: DataFrame,
     text_col: str = "text", id_col: str = "doc_id",
     bands: int = 4, rows_per_band: int = 2, k: int = 5,
     max_bucket_size: int | None = 1000,
-    delta_max_bucket_size=_INHERIT,
     cache_key=None,
 ) -> DataFrame:
     """Delta-vs-corpus LSH candidate pairs: (a = delta id, b = corpus id).
@@ -325,22 +320,19 @@ def lsh_pairs_incremental(
     independently (lowest ids first, deterministic), so a boilerplate
     mega-bucket on the corpus side cannot go quadratic against a delta
     that also hits it; use :func:`lsh_bucket_stats` on either side for
-    truncation accounting. ``delta_max_bucket_size`` overrides the cap for
-    the DELTA side alone (default: same as the corpus cap) — streaming
-    consumers pass ``None`` there, because a capped delta side would make
-    results depend on how arrivals happen to be batched (each document's
-    pairs must depend only on its own signature and the corpus, i.e. be
-    batch-split-invariant). Delta-internal pairs are NOT emitted — run
+    truncation accounting. A capped delta side makes the result depend on
+    how documents are split into deltas; ``max_bucket_size=None`` uncaps
+    both sides, and is the batch-split-invariant setting (each document's
+    pairs then depend only on its own signature and the corpus).
+    Delta-internal pairs are NOT emitted — run
     :func:`lsh_candidate_pairs` on the delta alone for those (it shares
     the same signature materialization via ``cache_key``)."""
     nh = bands * rows_per_band
     dsig = minhash_wide_cached(
         delta_docs, text_col, id_col, nh, k, cache_key=cache_key
     )
-    if delta_max_bucket_size is _INHERIT:
-        delta_max_bucket_size = max_bucket_size
     dbuckets = _cap_buckets(
-        sig_buckets(dsig, bands, rows_per_band), delta_max_bucket_size
+        sig_buckets(dsig, bands, rows_per_band), max_bucket_size
     )
     cbuckets = _cap_buckets(
         sig_buckets(corpus_sigs, bands, rows_per_band), max_bucket_size

@@ -1117,7 +1117,7 @@ def q_retry_union(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# relational / windows / streaming-equivalent batch
+# relational / windows / event-time aggregates
 # ---------------------------------------------------------------------------
 
 def q_pricing_summary(spark, sf_dir):
@@ -1147,7 +1147,7 @@ def q_join_agg_revenue(spark, sf_dir):
 
 
 def q_window_running_sum(spark, sf_dir):
-    """Running sum per user (stateful-stream-equivalent batch window)."""
+    """Running sum per user in (ts, event_id) order."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1179,8 +1179,8 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_event_tumbling_counts(spark, sf_dir):
-    """Tumbling 1-hour windows (batch equivalent of the streaming agg;
-    tz-proof string bucketing over NTZ timestamps)."""
+    """Count and value sum per (1-hour tumbling window, event type); the
+    hour bucket is the timestamp's string prefix, tz-proof over NTZ."""
     return (
         _t(spark, sf_dir, "events")
         .withColumn("hour_bucket", F.substring(F.col("ts").cast("string"), 1, 13))
