@@ -5,7 +5,9 @@ cluster the same layout maps 1:1 to Iceberg tables — append-only deltas for
 ``seen``/``fetch_log``, full snapshots for the mutable ``frontier`` — with
 each round one multi-table transaction).
 
-Layout under ``root``:
+Layout under ``root`` (each table dir is zstd-compressed Parquet, the
+codec Iceberg writes by default; dirs written as snappy by earlier
+versions read and resume unchanged, since each file records its codec):
 
 - ``frontier/round=k/``   full frontier snapshot entering round k
 - ``seen/round=k/``       seen-set rows ADDED at round k (k=0: seeds)
@@ -65,8 +67,15 @@ class CrawlState:
         return os.path.join(self.root, "_manifests", f"round-{rnd}.json")
 
     # ---------------- commit ----------------
+    @staticmethod
+    def _write(df: DataFrame, path: str) -> None:
+        """The one state writer: zstd Parquet, Iceberg's default codec.
+        The codec rides this writer, not the session conf, and every file
+        records its own codec, so reads of snappy-era dirs need no change."""
+        df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+
     def write_table(self, table: str, rnd: int, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._dir(table, rnd))
+        self._write(df, self._dir(table, rnd))
 
     def commit(self, manifest: Manifest) -> None:
         """Write the manifest atomically — the round's commit point."""
@@ -234,7 +243,7 @@ class CrawlState:
 
         info = self._compact_info(table)
         gen = 0 if info is None else info[1] + 1
-        df.write.mode("overwrite").parquet(self._compact_dir(table, gen))
+        self._write(df, self._compact_dir(table, gen))
         tmp = self._compact_marker_path(table) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"upto": rnd, "gen": gen}, f)
